@@ -15,8 +15,9 @@ Inputs:
 * ``polygons``: star-shaped simple polygons whose vertices sit
   OFF that grid (offset by ``OFF_GRID``), so no point lies on an
   edge and even-odd containment is unambiguous.
-* ``query_round``: one round of the ECQL query mix, each query with
-  the parameters the numpy oracle needs.
+* ``query_round``: one round of the ECQL query mix (every kind once,
+  placed at drawn features, DURING intervals anywhere in the span),
+  each query with the parameters the numpy oracle needs.
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ import pyarrow.compute as pc
 # 2010-05-01T00:00:00Z, three weeks on: crosses 4 epoch weeks
 T0 = 1272672000
 SPAN_S = 21 * 86400
-WEEK_S = 604800
 CITIES = np.array([[-73.98, 40.75], [2.35, 48.86], [139.69, 35.68]])
 CITY_SIGMA = 0.5
 OFF_GRID = 3.37e-7  # vertex offset from the 6-decimal point grid
@@ -207,51 +207,31 @@ def _iso(e: float) -> str:
     return s + "Z"
 
 
-def _center(rng, city: bool) -> tuple[float, float]:
-    if city:
-        c = CITIES[rng.integers(0, len(CITIES))]
-        return rng.normal(c[0], CITY_SIGMA), rng.normal(c[1], CITY_SIGMA)
-    while True:  # world-uniform, but clear of the clusters
-        cx, cy = rng.uniform(-160, 160), rng.uniform(-60, 60)
-        if np.min(np.hypot(CITIES[:, 0] - cx, CITIES[:, 1] - cy)) > 20:
-            return cx, cy
+def _at_feature(rng, pts: Points, w: float, h: float) -> tuple[float, float]:
+    """Centre of a `w` x `h` query shape: the location of a drawn
+    feature, so queries go where the data is (half of them near a
+    cluster), moved inward so the shape stays on the map."""
+    i = int(rng.integers(0, len(pts)))
+    cx = float(np.clip(pts.lon[i], -180 + w / 2, 180 - w / 2))
+    cy = float(np.clip(pts.lat[i], -85 + h / 2, 85 - h / 2))
+    return cx, cy
 
 
-# Query shapes are aligned to the Z-curve grid.  The planner's range
-# count -- and with it most of a query's cost -- depends on where a
-# box falls relative to the curve's dyadic cells: the same ±0.1° box
-# planned 60 to 280 ranges at different positions.  Each kind's box
-# therefore sits inside one grid cell of a fixed level at a fixed
-# offset, and each DURING interval inside one quarter-week at a fixed
-# offset, so every query of a kind plans the same ranges; the seed
-# draws which cell, which quarter-week, and the ids.
-
-def _cell(rng, level: int, city: bool) -> tuple[float, float, float, float]:
-    """(x0, y0, w, h) of the level-`level` Z-grid cell around a drawn
-    point: 360/2^level by 180/2^level degrees."""
-    w, h = 360.0 / (1 << level), 180.0 / (1 << level)
-    while True:
-        cx, cy = _center(rng, city)
-        x0 = np.floor((cx + 180.0) / w) * w - 180.0
-        y0 = np.floor((cy + 90.0) / h) * h - 90.0
-        if -180 <= x0 and x0 + w <= 180 and -85 <= y0 and y0 + h <= 85:
-            return x0, y0, w, h
+def _off(v: float) -> float:
+    """`v` moved off the 6-decimal point grid, as its WKT text parses."""
+    return float(f"{round(v, 6) + OFF_GRID:.9f}")
 
 
-def _box(rng, level: int, frac: tuple, city: bool) -> tuple:
-    """A box spanning `frac` (fx0, fy0, fx1, fy1) of a grid cell."""
-    x0, y0, w, h = _cell(rng, level, city)
-    b = (x0 + frac[0] * w, y0 + frac[1] * h, x0 + frac[2] * w, y0 + frac[3] * h)
-    return tuple(float(f"{round(v, 6) + OFF_GRID:.9f}") for v in b)
+def _box(rng, pts: Points, w: float, h: float) -> tuple:
+    """A `w` x `h` degree box around a drawn feature."""
+    cx, cy = _at_feature(rng, pts, w, h)
+    return tuple(_off(v) for v in (cx - w / 2, cy - h / 2, cx + w / 2, cy + h / 2))
 
 
-def _interval(rng, hours: float, offset_h: float) -> tuple:
-    """`hours` long, starting `offset_h` into a drawn quarter of an
-    epoch week that lies inside the data's time span."""
-    q = WEEK_S // 4
-    first = -(-T0 // q) * q
-    starts = np.arange(first, T0 + SPAN_S - q + 1, q)
-    a = int(rng.choice(starts)) + int(offset_h * 3600)
+def _interval(rng, hours: float) -> tuple:
+    """`hours` long, starting anywhere in the data's time span (so
+    about one in five crosses an epoch-week boundary)."""
+    a = T0 + int(rng.integers(0, SPAN_S - int(hours * 3600)))
     return (a, a + int(hours * 3600))
 
 
@@ -263,24 +243,18 @@ def _during_sql(t) -> str:
     return f"dtg DURING {_iso(t[0])}/{_iso(t[1])}"
 
 
-# a fixed star polygon in unit-cell coordinates, placed into a cell
-_POLY_UNIT = np.array([
-    [0.62, 0.50], [0.80, 0.71], [0.55, 0.66], [0.45, 0.88], [0.38, 0.64],
-    [0.14, 0.56], [0.33, 0.41], [0.26, 0.16], [0.51, 0.33], [0.77, 0.22],
-])
-
-
-def make_query(rng, kind: str, n_docs: int) -> Query:
-    """One query of `kind`: shape fixed per kind, position drawn."""
+def make_query(rng, kind: str, pts: Points) -> Query:
+    """One query of `kind`: size fixed per kind; position, interval,
+    ids and attribute cut drawn."""
+    n_docs = len(pts)
     if kind == "bbox_during":
-        b = _box(rng, 9, (0.13, 0.27, 0.71, 0.93), city=True)
-        t = _interval(rng, 36.0, 2.6)
+        b = _box(rng, pts, 0.4, 0.25)
+        t = _interval(rng, 36.0)
         return Query(kind, f"{_bbox_sql(b)} AND {_during_sql(t)}", box=b, t=t)
     if kind == "poly_during":
-        x0, y0, w, h = _cell(rng, 9, city=True)
-        ring = np.vstack([_POLY_UNIT, _POLY_UNIT[:1]]) * [w, h] + [x0, y0]
-        ring = np.array([[float(f"{round(v, 6) + OFF_GRID:.9f}") for v in p] for p in ring])
-        t = _interval(rng, 36.0, 2.6)
+        cx, cy = _at_feature(rng, pts, 0.6, 0.6)
+        ring = star_polygon(rng, cx, cy, 0.3, 10)
+        t = _interval(rng, 36.0)
         return Query(kind, f"INTERSECTS(geom, {ring_wkt(ring)}) AND {_during_sql(t)}",
                      ring=ring, t=t)
     if kind == "id_in":
@@ -288,32 +262,23 @@ def make_query(rng, kind: str, n_docs: int) -> Query:
         lst = ", ".join(f"'doc{i:012d}'" for i in ids)
         return Query(kind, f"IN ({lst})", ids=ids)
     if kind == "attr_bbox":
-        b = _box(rng, 5, (0.1, 0.2, 0.7, 0.9), city=False)
+        b = _box(rng, pts, 6.0, 4.0)
         k = int(rng.integers(n_docs // 3, 2 * n_docs // 3))
         return Query(kind, f"doc_id < 'doc{k:012d}' AND {_bbox_sql(b)}", box=b, id_lt=k)
     if kind == "or_boxes":
-        b1 = _box(rng, 9, (0.15, 0.1, 0.75, 0.7), city=True)
-        b2 = _box(rng, 9, (0.3, 0.25, 0.9, 0.85), city=True)
+        b1 = _box(rng, pts, 0.4, 0.2)
+        b2 = _box(rng, pts, 0.4, 0.2)
         return Query(kind, f"{_bbox_sql(b1)} OR {_bbox_sql(b2)}", box=b1, box2=b2)
     if kind == "wide_bbox":
-        b = _box(rng, 4, (0.05, 0.1, 0.85, 0.9), city=False)
+        b = _box(rng, pts, 18.0, 9.0)
         return Query(kind, _bbox_sql(b), box=b)
     raise ValueError(kind)
 
 
-# one round: every kind twice, the three lookup kinds four times.
-# The lookups are the bulk of a feature store's traffic, and with
-# twelve of eighteen queries in one cost band the round's median
-# query stays inside that band instead of sitting on the edge between
-# two kinds; eighteen rather than nine queries halve the part of the
-# run-to-run spread that comes from which queries land mid-band
-ROUND = (KINDS + ("id_in", "attr_bbox", "wide_bbox")) * 2
-
-
-def query_round(seed: int, rnd: int, n_docs: int) -> list[Query]:
-    """Round `rnd` of the mix: the kinds of ``ROUND`` in a seeded
-    order with seeded parameters."""
+def query_round(seed: int, rnd: int, pts: Points) -> list[Query]:
+    """Round `rnd` of the mix: every kind once (uniform weights), in a
+    seeded order with seeded parameters."""
     rng = np.random.default_rng([seed, 3, rnd])
-    kinds = list(ROUND)
+    kinds = list(KINDS)
     rng.shuffle(kinds)
-    return [make_query(rng, k, n_docs) for k in kinds]
+    return [make_query(rng, k, pts) for k in kinds]

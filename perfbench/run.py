@@ -1,13 +1,14 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {query,ingest,join_tiles} \
+    python3 perfbench/run.py --workload {query,join_tiles} \
         --seed N --seconds S --trace {0,1}
 
 Run from the repository root.  One run = one fresh Spark session from
 ``geomesa_spark.session.get_spark`` (``SPARK_GRAFT_CPUS`` = the CPUs
 this process may use, nothing else overridden), inputs generated
 from the seed, untimed warm-up rounds, then whole rounds of the
-workload's operations for at least S seconds.  Every op's output is
+workload's operations for at least S seconds (and at least the
+workload's minimum number of rounds).  Every op's output is
 checked against an independent oracle (``oracle.py``).
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs every
@@ -171,17 +172,36 @@ class Runner:
 
 
 def measure(runner: Runner, first: int, seconds: float) -> list[dict]:
-    """Whole rounds from `first` until `seconds` have passed."""
+    """Whole rounds from `first` until `seconds` have passed and at
+    least the workload's ``min_rounds`` have run."""
     out = []
     rnd = first
     t_end = time.perf_counter() + seconds
     while True:
         done = runner.round(rnd)
-        log(f"round {rnd}: {sum(u['s'] for u in done):.2f}s")
+        log(f"round {rnd}: {sum(u['s'] for u in done):.2f}s "
+            f"{ {k: round(s, 2) for u in done for k, s in u['kinds'].items()} }")
         out += done
         rnd += 1
-        if time.perf_counter() >= t_end:
+        if time.perf_counter() >= t_end and rnd - first >= runner.wl.min_rounds:
             return out
+
+
+def kind_medians(units: list[dict]) -> dict[str, float]:
+    """Median seconds of each op kind over `units`."""
+    kinds: dict[str, list] = {}
+    for u in units:
+        for k, s in u["kinds"].items():
+            kinds.setdefault(k, []).append(s)
+    return {k: statistics.median(v) for k, v in kinds.items()}
+
+
+def op_p50_ms(units: list[dict]) -> float:
+    """Geometric mean over the op kinds of each kind's median latency:
+    every kind weighs the same, and the figure does not jump between
+    kinds the way one median over a mix of kinds does."""
+    med = kind_medians(units)
+    return 1000 * statistics.geometric_mean(med.values()) if med else 0.0
 
 
 def spark_totals(jobs: list[dict], groups: dict[str, int]) -> dict:
@@ -367,18 +387,16 @@ def main(argv=None) -> int:
         else:
             set_up_ok = True
         runner = Runner(wl)
-        warm = [sum(u["s"] for u in runner.round(r)) for r in range(wl.warmup)]
+        warm = [runner.round(r) for r in range(wl.warmup)]
         log(f"setup {setup_s:.2f}s (session {session_ms / 1000:.2f}s); "
-            f"warm-up rounds: {wl.warmup}, seconds {[round(w, 2) for w in warm]}")
+            f"warm-up rounds: {wl.warmup}, seconds "
+            f"{[round(sum(u['s'] for u in w), 2) for w in warm]}, per kind "
+            f"{[{k: round(s, 2) for u in w for k, s in u['kinds'].items()} for w in warm]}")
         runner.attempted = runner.failed = 0
         runner.correct = runner.correct and set_up_ok
         if not args.trace:
             units = measure(runner, wl.warmup, args.seconds)
-            lat = [u["s"] for u in units]
-            metrics = {
-                "setup_s": setup_s,
-                "op_p50_ms": statistics.median(lat) * 1000 if lat else 0.0,
-            }
+            metrics = {"setup_s": setup_s, "op_p50_ms": op_p50_ms(units)}
             units_out = {k: END_TO_END[k] for k in metrics}
         else:
             base, traced = [], []
@@ -401,12 +419,12 @@ def main(argv=None) -> int:
             wl.tr.dump(os.path.join(out_dir, f"trace_{wl.name}_seed{args.seed}.jsonl"))
             units_out = PER_LAYER
             units = base + traced
-        kinds: dict[str, list] = {}
+        n_kind = {}
         for u in units:
-            for k, s in u["kinds"].items():
-                kinds.setdefault(k, []).append(s)
+            for k in u["kinds"]:
+                n_kind[k] = n_kind.get(k, 0) + 1
         log("per-kind p50 ms: " + ", ".join(
-            f"{k} {statistics.median(v) * 1000:.0f} (n={len(v)})" for k, v in kinds.items()))
+            f"{k} {s * 1000:.0f} (n={n_kind[k]})" for k, s in kind_medians(units).items()))
         result = {
             "correct": runner.correct,
             "attempted": runner.attempted,

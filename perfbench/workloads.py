@@ -33,7 +33,7 @@ from geomesa_spark.sources import docs, mvt
 
 SIZES = {
     "query_docs": 100_000,
-    "pip_points": 200_000,
+    "pip_points": 100_000,
     "pip_polys": 200,
     "tile_polys": 300,
     "tile_zoom": 8,
@@ -55,6 +55,9 @@ class Workload:
     # untimed warm-up rounds; counts read off the warm-up curves in
     # README.md (the round time levels off after them)
     warmup = 1
+    # measured rounds at least, however long they take, so that each
+    # kind's median has more than one sample
+    min_rounds = 2
 
     def __init__(self, spark, seed: int, work: str):
         self.spark = spark
@@ -91,8 +94,9 @@ class Query(Workload):
     def setup(self):
         self.pts = gen.points(self.seed, SIZES["query_docs"])
         self.raw_table = gen.docs_table(self.seed, self.pts)
-        raw = self.spark.read.parquet(
+        self.raw = raw = self.spark.read.parquet(
             _write_raw(self.work, "query_raw.parquet", self.raw_table))
+        self.traced_schema = None
         require(raw.schema.simpleString() == docs.DOCS_SCHEMA.simpleString(),
                 f"generated docs are not DOCS_SCHEMA: {raw.schema.simpleString()}")
         self.path = os.path.join(self.work, "query_table")
@@ -111,6 +115,10 @@ class Query(Workload):
             ext = docs.extract_geometry(raw).select(
                 "doc_id", "spans", "lon", "lat", "dtg").persist()
             ext.count()
+        # the key columns below must stay the ones extract_geometry
+        # adds (same names, order, types and values): prepare_checks
+        # compares this schema with extract_geometry's, and check_table
+        # checks the key values against the oracle's interleaves
         with tr.span("functions.cells.encode"):
             lon, lat, dtg = F.col("lon"), F.col("lat"), F.col("dtg")
             enc = (
@@ -120,6 +128,7 @@ class Query(Workload):
                 .persist()
             )
             enc.count()
+        self.traced_schema = enc.schema
         with tr.span("ingest.write"):
             # the write half of write_docs_table, on the materialized
             # encode output
@@ -128,8 +137,13 @@ class Query(Workload):
         ext.unpersist()
 
     def prepare_checks(self):
+        if self.traced_schema is not None:
+            want = docs.extract_geometry(self.raw).schema
+            require(self.traced_schema == want,
+                    f"traced ingest builds {self.traced_schema.simpleString()}, "
+                    f"write_docs_table {want.simpleString()}")
         self.check_table()
-        self.raw_table = None
+        self.raw_table = self.raw = None
 
     def check_table(self):
         """The ingest checks: rows, ids and spans preserved, week and
@@ -171,7 +185,7 @@ class Query(Workload):
         ]
 
     def units(self, rnd):
-        for q in gen.query_round(self.seed, rnd, len(self.pts)):
+        for q in gen.query_round(self.seed, rnd, self.pts):
             yield [(q.kind, lambda q=q: self.query(q))]
 
     def query(self, q):
