@@ -63,19 +63,27 @@ def geom_edges(geom: G.Geometry) -> list[tuple[float, float, float, float]]:
     return out
 
 
+def double_sql(v: float) -> str:
+    """SQL literal that parses back to exactly the double `v`.
+
+    `repr` is the shortest string that round-trips; the `D` suffix
+    keeps it a DOUBLE (an unsuffixed `1.5` is a DECIMAL under ANSI).
+    Non-finite values have no literal form and go through a cast."""
+    r = repr(float(v))
+    return r + "D" if np.isfinite(v) else f"CAST('{r}' AS DOUBLE)"
+
+
 def edges_lit(geom: G.Geometry) -> Column:
-    """Edge array literal for a single (small) geometry."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(x0).alias("x0"),
-                F.lit(y0).alias("y0"),
-                F.lit(x1).alias("x1"),
-                F.lit(y1).alias("y1"),
-            )
-            for x0, y0, x1, y1 in geom_edges(geom)
-        ]
+    """Edge array literal for a single geometry, as one SQL expression
+    parsed in one `F.expr` call (a Column per value would cost a py4j
+    round trip each)."""
+    structs = ", ".join(
+        "named_struct('x0', {}, 'y0', {}, 'x1', {}, 'y1', {})".format(
+            *map(double_sql, e)
+        )
+        for e in geom_edges(geom)
     )
+    return F.expr(f"array({structs})")
 
 
 def poly_edges_df(

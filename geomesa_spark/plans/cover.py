@@ -30,8 +30,16 @@ DEFAULT_MAX_RANGES = 200
 DEFAULT_POLYFILL_BUDGET = 256
 
 
-def merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Coalesce overlapping/adjacent [lo,hi] ranges (MergeQueue analog)."""
+def merge_ranges(
+    ranges: list[tuple[int, int]], max_ranges: int | None = None
+) -> list[tuple[int, int]]:
+    """Coalesce overlapping/adjacent [lo,hi] ranges (MergeQueue analog).
+
+    `max_ranges` caps the result by closing the smallest gaps between
+    neighbouring ranges: a superset of the input, for callers whose
+    exact predicates refine anyway. Closing a gap leaves every other
+    gap unchanged, so closing the smallest one repeatedly is closing
+    all but the `max_ranges - 1` widest at once."""
     if not ranges:
         return []
     ranges = sorted(ranges)
@@ -41,6 +49,16 @@ def merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
             out[-1][1] = max(out[-1][1], hi)
         else:
             out.append([lo, hi])
+    if max_ranges is not None and len(out) > max_ranges:
+        widest = sorted(
+            range(len(out) - 1), key=lambda i: out[i][1] - out[i + 1][0]
+        )[: max(max_ranges, 1) - 1]
+        capped, start = [], 0
+        for i in sorted(widest):
+            capped.append([out[start][0], out[i][1]])
+            start = i + 1
+        capped.append([out[start][0], out[-1][1]])
+        out = capped
     return [(lo, hi) for lo, hi in out]
 
 

@@ -19,8 +19,12 @@ so Catalyst/Parquet prune partitions, files and row groups:
 - residual exact-geometry refine (vectorized, only when the query
   geometry is not a bbox)
 
-Everything emitted is a plain Column expression, so `.explain()`
-shows the ranges in PushedFilters at the Parquet scan.
+Everything emitted is a plain column predicate, so `.explain()`
+shows the ranges in PushedFilters at the Parquet scan. A range set is
+built as one balanced SQL expression and parsed by the JVM in a
+single call (`cell_range_predicate`): building it Column by Column
+costs a py4j round trip per literal and operator, and a left-deep OR
+of a few thousand terms overflows the stack in Catalyst.
 """
 
 from __future__ import annotations
@@ -124,16 +128,31 @@ _WARNED_NO_JDF = False
 
 
 def cell_range_predicate(
-    ranges: list[tuple[int, int]], col: Column
+    ranges: list[tuple[int, int]], col: str
 ) -> Column | None:
-    """OR-of-BETWEEN over merged cell ranges (bounded count)."""
+    """OR-of-BETWEEN over merged cell ranges on the column named `col`.
+
+    The whole set is one SQL string parsed in one `F.expr` call, so
+    the py4j cost does not grow with the range count. The OR tree is
+    balanced (depth ceil(log2 N)), so Catalyst's recursive rules never
+    walk a deep chain; Parquet still receives every term in
+    PushedFilters. Terms are `col BETWEEN lo AND hi`, or `col = v`
+    when lo == hi, with BIGINT literals."""
     if not ranges:
         return None
-    pred = None
-    for lo, hi in ranges:
-        p = col.between(F.lit(lo), F.lit(hi)) if lo != hi else col == F.lit(lo)
-        pred = p if pred is None else pred | p
-    return pred
+    name = "`" + col.replace("`", "``") + "`"
+    terms = [
+        f"({name} BETWEEN {lo}L AND {hi}L)" if lo != hi else f"({name} = {lo}L)"
+        for lo, hi in ranges
+    ]
+    return F.expr(_balanced_or(terms))
+
+
+def _balanced_or(terms: list[str]) -> str:
+    if len(terms) == 1:
+        return terms[0]
+    mid = len(terms) // 2
+    return f"({_balanced_or(terms[:mid])} OR {_balanced_or(terms[mid:])})"
 
 
 @pandas_udf(T.BooleanType())
@@ -255,7 +274,9 @@ def scan(
                 ranges.extend(
                     V.zranges_2d(*bx, bits=cell_bits, max_ranges=max_ranges)
                 )
-            pred = cell_range_predicate(V.merge_ranges(ranges), F.col(cell_col))
+            pred = cell_range_predicate(
+                V.merge_ranges(ranges, max_ranges), cell_col
+            )
             if pred is not None:
                 out = out.filter(pred)
 
@@ -284,6 +305,10 @@ def scan(
         # is a safe superset (week pruning + the exact dtg interval
         # below refine), and it reaches PushedFilters so row-group
         # z3 min/max stats skip — the Z3 range-scan analog.
+        # `max_ranges` bounds each week's and box's BFS, and
+        # merge_ranges caps the union too: a multi-week or multi-box
+        # union is otherwise 1,000+ terms, slow to evaluate and past
+        # Janino's 64 KB method limit.
         ranges = []
         # z3 values are WEEK-RELATIVE interleaves, so every middle
         # week of a multi-week interval needs the identical full-week
@@ -313,7 +338,7 @@ def scan(
                             max_ranges=max_ranges,
                         )
                     )
-        zpred = cell_range_predicate(V.merge_ranges(ranges), F.col(z3_col))
+        zpred = cell_range_predicate(V.merge_ranges(ranges, max_ranges), z3_col)
         if zpred is not None:
             out = out.filter(zpred)
 

@@ -25,6 +25,26 @@ def test_merge_ranges():
     assert V.merge_ranges([]) == []
 
 
+def test_merge_ranges_cap():
+    r = [(0, 1), (5, 6), (8, 9), (20, 30), (32, 33)]
+    assert V.merge_ranges(r, 3) == [(0, 1), (5, 9), (20, 33)]
+    assert V.merge_ranges(r, 1) == [(0, 33)]
+    assert V.merge_ranges(r, 5) == r
+    rng = np.random.default_rng(7)
+    lo = np.sort(rng.choice(1 << 50, 500, replace=False))
+    r = [(int(a), int(a) + int(w)) for a, w in zip(lo, rng.integers(0, 1000, 500))]
+    capped = V.merge_ranges(r, 40)
+    assert len(capped) == 40
+    assert all(capped[i][1] < capped[i + 1][0] for i in range(39))
+    ends = np.array([v for p in r for v in p])
+    assert _ranges_contain(capped, ends).all()
+    # what the cap adds is exactly the smallest gaps it closed
+    merged = V.merge_ranges(r)
+    gaps = sorted(b[0] - a[1] for a, b in zip(merged, merged[1:]))
+    added = sum(h - l for l, h in capped) - sum(h - l for l, h in merged)
+    assert added == sum(gaps[: len(merged) - 40])
+
+
 def test_zranges_2d_superset():
     """Every point inside the bbox must fall in some emitted range."""
     rng = np.random.default_rng(42)

@@ -63,8 +63,8 @@ def _s2_selected(lon, lat):
 
 
 def _in_ranges(cells, ranges):
-    los = np.array([lo for lo, _ in ranges], dtype=np.uint64)
-    his = np.array([hi for _, hi in ranges], dtype=np.uint64)
+    los = np.array([lo for lo, _ in ranges], dtype=np.int64).astype(np.uint64)
+    his = np.array([hi for _, hi in ranges], dtype=np.int64).astype(np.uint64)
     c = cells.astype(np.uint64)[:, None]
     return ((c >= los[None, :]) & (c <= his[None, :])).any(axis=1)
 

@@ -283,3 +283,48 @@ def test_world_spanning_geometry_keeps_bbox(spark):
         geometry_wkt="POLYGON ((-180 0, 0 -90, 180 0, 0 90, -180 0))"
     )
     assert _ids(P.scan(df, spec_g)) == {"in_both", "in_diamond_only"}
+
+
+def test_cell_range_predicate_2000_ranges(spark, tmp_path):
+    """2,000 ranges: a left-deep OR of Columns this long overflowed the
+    stack in Catalyst; the balanced one-expression form counts right."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vals = np.sort(rng.choice(1 << 40, 4000, replace=False))
+    path = str(tmp_path / "z")
+    spark.createDataFrame(pd.DataFrame({"z": vals})).coalesce(1).write.parquet(path)
+    bounds = np.sort(rng.choice(1 << 40, 4000, replace=False))
+    ranges = [(int(bounds[2 * i]), int(bounds[2 * i + 1])) for i in range(2000)]
+    # every fifth range a single stored value: the `=` form
+    for i in range(0, 2000, 5):
+        ranges[i] = (int(vals[2 * i]), int(vals[2 * i]))
+    want = np.zeros(len(vals), dtype=bool)
+    for lo, hi in ranges:
+        want |= (vals >= lo) & (vals <= hi)
+    pred = P.cell_range_predicate(ranges, "z")
+    assert spark.read.parquet(path).filter(pred).count() == int(want.sum()) > 400
+
+
+def test_cell_range_predicate_constant_py4j_calls(spark, monkeypatch):
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    counts = []
+    for n in (10, 1000):
+        calls.clear()
+        P.cell_range_predicate([(3 * i, 3 * i + 1) for i in range(n)], "z")
+        counts.append(len(calls))
+    assert counts[0] == counts[1] > 0
+
+
+def test_cell_range_predicate_quotes_name(spark):
+    df = spark.range(10).withColumnRenamed("id", "a`b c")
+    pred = P.cell_range_predicate([(2, 4), (7, 7)], "a`b c")
+    assert {r[0] for r in df.filter(pred).collect()} == {2, 3, 4, 7}

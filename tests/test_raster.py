@@ -170,16 +170,17 @@ def test_zonal_pixel_stats_oracle(spark):
     ix = ids % n
     iy = ids // n
     zc = C.z2_encode_np(ix, iy)
+    # array multiply wraps mod 2**64 silently (a scalar one warns)
+    bases = (
+        zc.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    ) >> np.uint64(40)
     exp = {}
     for zone, wkt in ZONES:
         g = parse_wkt(wkt)
         tot_n = 0
         vs = []
         for k in range(LIM):
-            base = float(
-                (np.uint64(zc[k]) * np.uint64(0x9E3779B97F4A7C15))
-                >> np.uint64(40)
-            )
+            base = float(bases[k])
             grid = base + np.add.outer(
                 np.arange(PY) * 0.01, np.arange(PX) * 0.0001
             )

@@ -158,3 +158,38 @@ def test_multipolygon_overlapping_members_refine(spark, z3_table):
     # and at least one point genuinely in the overlap region exists
     overlap = pdf[(pdf.lon.between(5, 10)) & (pdf.lat.between(5, 10))]
     assert not overlap.empty
+
+
+def test_z3_union_capped_at_max_ranges(z3_table, monkeypatch):
+    """`max_ranges` caps the union across weeks, not only each week's
+    set; the capped set is a superset, so the ids do not change."""
+    from geomesa_spark.plans import cover as V
+    from geomesa_spark.plans import planner as P
+
+    planned = []
+    predicate = P.cell_range_predicate
+
+    def recording(ranges, col):
+        planned.append((col, len(ranges)))
+        return predicate(ranges, col)
+
+    def z3_ids(df):
+        ids = {r.doc_id for r in df.select("doc_id").collect()}
+        n = [k for col, k in planned if col == "z3"]
+        planned.clear()
+        return ids, n
+
+    # crosses the 2010-05-06 week boundary; two week sets of <= 8
+    # ranges each merge to more than 8
+    spec = QuerySpec(
+        bbox=(-7.3, 3.1, 12.7, 21.9),
+        t0=datetime(2010, 5, 4, 7, tzinfo=timezone.utc),
+        t1=datetime(2010, 5, 8, 3, tzinfo=timezone.utc),
+    )
+    monkeypatch.setattr(P, "cell_range_predicate", recording)
+    capped, n_capped = z3_ids(scan(z3_table, spec, max_ranges=8))
+    merge = V.merge_ranges
+    monkeypatch.setattr(V, "merge_ranges", lambda r, max_ranges=None: merge(r))
+    uncapped, n_uncapped = z3_ids(scan(z3_table, spec, max_ranges=8))
+    assert n_capped[0] <= 8 < n_uncapped[0]
+    assert capped == uncapped and len(capped) > 0
