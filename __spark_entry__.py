@@ -3447,10 +3447,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # batches threading state exactly as foreachBatch does, so the
     # driver's oracle now checks the stream-path code itself.  The
     # oracle is split-agnostic: the pytest batch-twin theorems
-    # (test_stop_stream / test_hotspot_stream / test_geofence_stream)
-    # prove closed+flushed output equals the batch operator on the
-    # full corpus for ANY event-time split, and the batch operators
-    # already have SQL oracles.
+    # (test_stop_stream / test_hotspot_stream / test_geofence_stream /
+    # test_cotravel_stream) prove the stream output equals the batch
+    # operator on the full corpus for ANY event-time split, and the
+    # batch operators already have SQL oracles.
 
     def _es_tertiles(pts, es_col="es"):
         """Three event-time-ordered micro-batches: filter by the
@@ -3538,26 +3538,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["hotspot_stream_twin"] = hotspot_stream_twin_gate
 
     def geofence_stream_twin_gate(spark, sf):
-        """streaming/geofence.py replay: three _batch_transitions
-        steps threading inside-state — the emitted enter/exit events
-        equal geofence_events on the full corpus (the
-        test_geofence_stream batch-twin theorem), so the oracle is
-        the geofence SQL minus its seq column."""
-        from geomesa_spark.streaming.geofence import _batch_transitions
+        """streaming/geofence.py replay: three stream steps (the batch
+        operator with include_open, then _stitch) threading
+        inside-state — the emitted enter/exit events equal
+        geofence_events on the full corpus (the test_geofence_stream
+        batch-twin theorem), so the oracle is the geofence SQL minus
+        its seq column."""
+        from geomesa_spark.operators.geofence import geofence_events
+        from geomesa_spark.streaming.geofence import _stitch
 
         pts = geo_events(spark, sf).withColumn(
             "es", F.unix_timestamp("dtg")
         )
         state, outs = None, []
         for batch in _es_tertiles(pts):
-            events, state, shared = _batch_transitions(
-                batch, _polys, state, "user_id", "es", "lon", "lat",
-                "cell", C.XY_BITS, "event_id", 8,
-            )
-            events = events.localCheckpoint(eager=True)
+            local = geofence_events(
+                batch, _polys, "user_id", "es", tiebreak_col="event_id",
+                include_open=True,
+            ).localCheckpoint(eager=True)
+            events, state = _stitch(local, state, batch, "user_id")
+            outs.append(events.localCheckpoint(eager=True))
             state = state.localCheckpoint(eager=True)
-            shared.unpersist()
-            outs.append(events)
         out = outs[0]
         for fr in outs[1:]:
             out = out.unionByName(fr)
@@ -3567,6 +3568,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["geofence_stream_twin"] = geofence_stream_twin_gate
+
+    def co_travel_stream_twin_gate(spark, sf):
+        """streaming/cotravel.py replay: three _batch_ticks steps
+        threading last-fix state, each batch's new ticks paired
+        through the shared per-tick eps-join against themselves plus
+        every earlier batch's ticks (an unbounded lag horizon), pair
+        counts summed across batches — equals co_travel on the full
+        corpus (the test_cotravel_stream parity theorem), so the
+        oracle is the co_travel SQL."""
+        from functools import reduce
+
+        from geomesa_spark.operators.cooccur import _tick_pair_counts
+        from geomesa_spark.streaming.cotravel import _batch_ticks
+
+        last, seen, counts = None, None, []
+        for batch in _es_tertiles(_cooc_pts(spark, sf)):
+            ticks, last = _batch_ticks(
+                batch, last, 3600, "user_id", "ts", "lon", "lat",
+                "event_id",
+            )
+            ticks = ticks.localCheckpoint(eager=True)
+            last = last.localCheckpoint(eager=True)
+            counts.append(
+                _tick_pair_counts(ticks, 0.5, carried=seen)
+                .localCheckpoint(eager=True)
+            )
+            seen = ticks if seen is None else seen.unionByName(ticks)
+        return (
+            reduce(lambda a, b: a.unionByName(b), counts)
+            .groupBy("track_a", "track_b")
+            .agg(
+                F.sum("n_shared").cast("long").alias("n_shared"),
+                F.min("first_ts").alias("first_ts"),
+                F.max("last_ts").alias("last_ts"),
+            )
+            .filter(F.col("n_shared") >= F.lit(200))
+        )
+
+    q["co_travel_stream_twin"] = co_travel_stream_twin_gate
 
     # SURVEY §2 core FIRST (VERDICT r4 item 5): the driver samples 50
     # of the registered queries per round in registration order, so
@@ -4924,8 +4964,8 @@ WITH toks AS (
   FROM documents
 )
 SELECT doc_id, n_tok,
-  SUM(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum_tokens,
-  (SUM(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_tok) // 4096 AS shard
+  CAST(SUM(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
+  (CAST(SUM(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) - n_tok) // 4096 AS shard
 FROM toks
 """
 
@@ -7411,7 +7451,7 @@ WITH f AS (
 m AS (
   SELECT count(*) AS n_rows, count(fx) AS n_values,
          min(fx) AS min_fx, max(fx) AS max_fx,
-         sum(fx) AS sum_fx,
+         CAST(sum(fx) AS BIGINT) AS sum_fx,
          sum(CAST(fx AS HUGEINT) * fx) AS sumsq,
          count(DISTINCT fx) AS n_distinct_fx,
          quantile_cont(fx, 0.25) AS p25_fx,
@@ -8567,5 +8607,6 @@ FROM tt
         "SELECT user_id, fence_id, event, es FROM ("
         + o["geofence"] + ")"
     )
+    o["co_travel_stream_twin"] = o["co_travel"]
 
     return o

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.functions import geometry_sql as GS
 from geomesa_spark.operators.dedup import dup_components
+from geomesa_spark.session import local_checkpoint as _lckpt
 
 __all__ = ["eps_pairs", "dbscan"]
 
@@ -378,11 +379,10 @@ def dbscan(
     # coordinate -> same cluster/is_core (the collapse equivalence);
     # the window above already stamped each point's rid, so this is
     # one long-key join, not a coordinate-equality join
-    out = (
+    out = _lckpt(
         pts_r.select("id", "rid")
         .join(rep_out.withColumnRenamed("id", "rid"), "rid")
         .select("id", "cluster", "is_core")
-        .localCheckpoint(eager=True)
     )
     pts_r.unpersist()
     pairs.unpersist()

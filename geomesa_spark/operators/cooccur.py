@@ -230,7 +230,27 @@ def co_travel(
     r = track_resample(
         df, track_col, ts_col, step_s, lon_col, lat_col,
         tiebreak_col=tiebreak_col, max_gap_s=max_gap_s,
+    ).select("track", "tick_ts", F.col(lon_col).alias("lon"),
+             F.col(lat_col).alias("lat"))
+    return _tick_pair_counts(r, dist_deg).filter(
+        F.col("n_shared") >= F.lit(int(min_shared))
     )
+
+
+def _tick_pair_counts(
+    ticks: DataFrame, dist_deg: float, carried: DataFrame | None = None
+) -> DataFrame:
+    """The per-tick eps-join shared by ``co_travel`` and
+    ``streaming/cotravel``: (track, tick_ts, lon, lat) ticks ->
+    (track_a, track_b, n_shared, first_ts, last_ts) per pair within
+    `dist_deg` (planar) on the same tick.
+
+    `carried` (same columns) holds earlier micro-batches' recent
+    ticks.  They join on the RIGHT side only, so every counted pair
+    has a tick from `ticks`: new x new pairs order by id, and new x
+    carried pairs count once by construction (a carried tick never
+    meets another carried tick).  Without `carried` the join is the
+    plain single-meeting-cell self-join."""
     nx = max(1, int(360.0 // dist_deg))
     if 360.0 / nx < dist_deg:
         nx -= 1
@@ -239,33 +259,32 @@ def co_travel(
     if 180.0 / ny < dist_deg:
         ny -= 1
     ny = max(1, ny)
-    base = r.select(
-        F.col("track").alias("id"),
-        F.col("tick_ts").alias("tk"),
-        "lon", "lat",
-    ).withColumns(
-        {
-            "cx": F.least(
+
+    def keyed(t):
+        return t.select(
+            "track", "tick_ts", "lon", "lat",
+            F.least(
                 F.lit(nx - 1),
                 F.greatest(
                     F.lit(0),
                     F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0 / nx)),
                 ),
-            ).cast("long"),
-            "cy": F.least(
+            ).cast("long").alias("cx"),
+            F.least(
                 F.lit(ny - 1),
                 F.greatest(
                     F.lit(0),
                     F.floor((F.col("lat") + F.lit(90.0)) / F.lit(180.0 / ny)),
                 ),
-            ).cast("long"),
-        }
-    )
+            ).cast("long").alias("cy"),
+        )
+
+    base = keyed(ticks)
     left = base.select(
-        F.col("id").alias("id_a"),
+        F.col("track").alias("track_a"),
         F.col("lon").alias("lon_a"),
         F.col("lat").alias("lat_a"),
-        "tk",
+        F.col("tick_ts").alias("tk"),
         F.explode(
             F.array(
                 *[
@@ -279,37 +298,46 @@ def co_travel(
             )
         ).alias("k"),
     ).select(
-        "id_a", "lon_a", "lat_a", "tk",
+        "track_a", "lon_a", "lat_a", "tk",
         F.col("k.kx").alias("kx"), F.col("k.ky").alias("ky"),
     )
-    dedup_needed = nx < 3
-    right = base.select(
-        F.col("id").alias("id_b"),
-        F.col("lon").alias("lon_b"),
-        F.col("lat").alias("lat_b"),
-        F.col("tk").alias("tk"),
-        F.col("cx").alias("kx"),
-        F.col("cy").alias("ky"),
-    )
+
+    def right_side(b, *flag):
+        return b.select(
+            F.col("track").alias("track_b"),
+            F.col("lon").alias("lon_b"),
+            F.col("lat").alias("lat_b"),
+            F.col("tick_ts").alias("tk"),
+            F.col("cx").alias("kx"),
+            F.col("cy").alias("ky"),
+            *flag,
+        )
+
+    once = F.col("track_a") < F.col("track_b")
+    pair = [F.col("track_a"), F.col("track_b")]
+    if carried is None:
+        right = right_side(base)
+    else:
+        right = right_side(base, F.lit(False).alias("_rc")).unionByName(
+            right_side(keyed(carried), F.lit(True).alias("_rc"))
+        )
+        once = F.when(
+            F.col("_rc"), F.col("track_a") != F.col("track_b")
+        ).otherwise(once)
+        pair = [F.least(*pair), F.greatest(*pair)]
     d2 = GS.point_dist2_col(
         F.col("lon_a"), F.col("lat_a"), F.col("lon_b"), F.col("lat_b")
     )
     hits = (
         left.join(right, ["kx", "ky", "tk"], "inner")
-        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(once)
         .filter(d2 <= F.lit(float(dist_deg) ** 2))
-        .select("id_a", "id_b", "tk")
+        .select(pair[0].alias("track_a"), pair[1].alias("track_b"), "tk")
     )
-    if dedup_needed:
+    if nx < 3:
         hits = hits.distinct()
-    return (
-        hits.groupBy(
-            F.col("id_a").alias("track_a"), F.col("id_b").alias("track_b")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_shared"),
-            F.min("tk").cast("long").alias("first_ts"),
-            F.max("tk").cast("long").alias("last_ts"),
-        )
-        .filter(F.col("n_shared") >= F.lit(int(min_shared)))
+    return hits.groupBy("track_a", "track_b").agg(
+        F.count("*").cast("long").alias("n_shared"),
+        F.min("tk").cast("long").alias("first_ts"),
+        F.max("tk").cast("long").alias("last_ts"),
     )

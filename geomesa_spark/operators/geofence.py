@@ -23,7 +23,8 @@ Scale design (why this is not a quadratic timeline join):
    intervals.  Two narrow window passes over contained rows only.
 
 No Python appears in any physical plan; SQL-expressible for the
-DuckDB oracle gate (``geofence``)."""
+DuckDB oracle gate (``geofence``).  ``streaming/geofence`` runs this
+operator on each micro-batch and only stitches batch boundaries."""
 
 from __future__ import annotations
 

@@ -356,12 +356,13 @@ def stop_detect(
     trajectory pipeline (home/work inference, port calls, dwell
     analytics).
 
-    Gaps-and-islands over ``track_metrics``: a point ANCHORS a new
-    segment when its leg exceeds the radius (or it opens the track);
-    the running count of anchors is the segment id; segments reduce
-    to (start/end time, span, point count, bbox center).  Everything
-    runs in the windows' track-key partitioning plus one same-key
-    groupBy — one shuffle total, no Python.
+    Gaps-and-islands (``_stop_segments``, which ``streaming/stops``
+    shares): a point ANCHORS a new segment when its leg exceeds the
+    radius (or it opens the track); the running count of anchors is
+    the segment id; segments reduce to (start/end time, span, point
+    count, bbox center).  Everything runs in the windows' track-key
+    partitioning plus one same-key groupBy — one shuffle total, no
+    Python.
 
     The run-based criterion is the classic SQL-tractable
     approximation of Li et al. stay points (which re-anchor on the
@@ -376,60 +377,115 @@ def stop_detect(
 
     Returns (track, stop_id, start_ts, end_ts, duration_s, n_points,
     center_lon, center_lat)."""
-    m = track_metrics(
-        df, track_col, ts_col, lon_col, lat_col, metric, tiebreak_col
+    return (
+        _stop_segments(
+            df, track_col, ts_col, radius, lon_col, lat_col, metric,
+            tiebreak_col,
+        )
+        .select("track", F.col("_seg").alias("stop_id"), *_stop_row())
+        .filter(F.col("duration_s") >= F.lit(int(min_duration_s)))
     )
-    order = [F.col(ts_col).asc()]
+
+
+def _stop_segments(
+    df: DataFrame,
+    track_col: str,
+    ts_col: str,
+    radius: float,
+    lon_col: str,
+    lat_col: str,
+    metric: str,
+    tiebreak_col: str | None,
+    carried: DataFrame | None = None,
+) -> DataFrame:
+    """The gaps-and-islands core of ``stop_detect`` and
+    ``streaming/stops``: a point ANCHORS a new segment when its leg
+    from its predecessor exceeds `radius` (or it has none); the
+    running anchor count per track is the segment id ``_seg``.
+
+    `carried` (track, last_lon, last_lat) supplies each track's
+    predecessor from an earlier micro-batch: a first point within
+    `radius` of it does not anchor, so its run is ``_seg`` 0 and
+    continues the carried segment.  Without it ``_seg`` counts from 1.
+
+    Returns one row per (track, _seg) with the columns ``_stop_row``
+    reads: seg_start / last_es (epoch seconds), seg_n, the bbox
+    lo_x/hi_x/lo_y/hi_y, and lo_pos / hi_neg (min positive / max
+    negative lon, the IDL straddle inputs)."""
+    order = [F.col("_ts").asc()]
     if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy(track_col).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    anchored = m.withColumn(
-        "_anchor",
-        F.when(
-            (F.col("seq") == 1) | (F.col("leg_dist") > F.lit(float(radius))),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn("_seg", F.sum("_anchor").over(w).cast("long"))
+        order.append(F.col("_tb").asc())
+    w = Window.partitionBy("track").orderBy(*order)
     es = (
         F.unix_timestamp(F.col(ts_col))
         if dict(df.dtypes)[ts_col].startswith("timestamp")
         else F.col(ts_col).cast("long")
     )
-    segs = (
-        anchored.withColumn("_es", es)
-        .groupBy(
-            F.col(track_col).alias("track"), F.col("_seg").alias("stop_id")
+    pts = df.select(
+        F.col(track_col).alias("track"),
+        F.col(ts_col).alias("_ts"),
+        *([F.col(tiebreak_col).alias("_tb")] if tiebreak_col else []),
+        es.alias("es"),
+        F.col(lon_col).alias("lon"),
+        F.col(lat_col).alias("lat"),
+    )
+    # only a track's FIRST point anchors for lack of a predecessor; a
+    # NULL coordinate elsewhere makes a NULL leg, which never anchors
+    first = F.row_number().over(w) == 1
+    plon = F.lag("lon").over(w)
+    plat = F.lag("lat").over(w)
+    if carried is not None:
+        pts = pts.join(
+            carried.select(
+                "track",
+                F.col("last_lon").alias("_clon"),
+                F.col("last_lat").alias("_clat"),
+            ),
+            "track", "left",
         )
+        plon = F.when(first, F.col("_clon")).otherwise(plon)
+        plat = F.when(first, F.col("_clat")).otherwise(plat)
+        first = first & F.col("_clon").isNull()
+    leg = _leg_dist(metric, plon, plat, F.col("lon"), F.col("lat"))
+    anchor = F.when(
+        first | (leg > F.lit(float(radius))), F.lit(1)
+    ).otherwise(F.lit(0))
+    seg = F.sum("_anchor").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        pts.withColumn("_anchor", anchor)
+        .withColumn("_seg", seg.cast("long"))
+        .groupBy("track", "_seg")
         .agg(
-            F.min("_es").cast("long").alias("start_ts"),
-            F.max("_es").cast("long").alias("end_ts"),
-            F.count("*").cast("long").alias("n_points"),
-            F.min(lon_col).alias("_lo_x"),
-            F.max(lon_col).alias("_hi_x"),
-            F.min(lat_col).alias("_lo_y"),
-            F.max(lat_col).alias("_hi_y"),
-            # IDL straddle support: min positive / max negative lon
-            F.min(F.when(F.col(lon_col) >= 0, F.col(lon_col)))
-            .alias("_lo_pos"),
-            F.max(F.when(F.col(lon_col) < 0, F.col(lon_col)))
-            .alias("_hi_neg"),
-        )
-        .withColumn(
-            "duration_s", (F.col("end_ts") - F.col("start_ts")).cast("long")
-        )
-        .filter(F.col("duration_s") >= F.lit(int(min_duration_s)))
-        .select(
-            "track", "stop_id", "start_ts", "end_ts", "duration_s",
-            "n_points",
-            F.expr(
-                stop_center_sql("_lo_x", "_hi_x", "_lo_pos", "_hi_neg")
-            ).alias("center_lon"),
-            ((F.col("_lo_y") + F.col("_hi_y")) / F.lit(2.0)).alias("center_lat"),
+            F.min("es").cast("long").alias("seg_start"),
+            F.max("es").cast("long").alias("last_es"),
+            F.count("*").cast("long").alias("seg_n"),
+            F.min("lon").alias("lo_x"),
+            F.max("lon").alias("hi_x"),
+            F.min("lat").alias("lo_y"),
+            F.max("lat").alias("hi_y"),
+            F.min(F.when(F.col("lon") >= 0, F.col("lon"))).alias("lo_pos"),
+            F.max(F.when(F.col("lon") < 0, F.col("lon"))).alias("hi_neg"),
         )
     )
-    return segs
+
+
+def _stop_row() -> list[Column]:
+    """A segment aggregate (``_stop_segments`` output, or the stream's
+    carried open segment) as stop columns: start/end/duration, point
+    count, and the IDL-aware bbox-midpoint center."""
+    c = F.col
+    return [
+        c("seg_start").cast("long").alias("start_ts"),
+        c("last_es").cast("long").alias("end_ts"),
+        (c("last_es") - c("seg_start")).cast("long").alias("duration_s"),
+        c("seg_n").cast("long").alias("n_points"),
+        F.expr(
+            stop_center_sql("lo_x", "hi_x", "lo_pos", "hi_neg")
+        ).alias("center_lon"),
+        ((c("lo_y") + c("hi_y")) / F.lit(2.0)).alias("center_lat"),
+    ]
 
 
 def track_resample(
@@ -473,26 +529,77 @@ def track_resample(
     with tick_ts in epoch seconds."""
     if step_s <= 0:
         raise ValueError("step_s must be positive")
-    vals = list(value_cols or [])
-    order = [F.col(ts_col).asc()]
+    return _grid_ticks(
+        df, track_col, ts_col, step_s,
+        [lon_col, lat_col] + list(value_cols or []),
+        tiebreak_col, max_gap_s,
+    )
+
+
+def _grid_ticks(
+    df: DataFrame,
+    track_col: str,
+    ts_col: str,
+    step_s: int,
+    cols: list[str],
+    tiebreak_col: str | None,
+    max_gap_s: int | None,
+    carried: DataFrame | None = None,
+) -> DataFrame:
+    """``track_resample``'s tick ownership and interpolation, shared
+    with ``streaming/cotravel``.  `cols` starts with lon, lat.
+
+    `carried` (track, last_ts, last_lon, last_lat) holds each track's
+    last fix from an earlier micro-batch.  It joins only tracks that
+    have rows in `df`, sorts first at its timestamp, and is a segment
+    START only: its own aligned tick was owned by the batch that
+    delivered it, so every grid tick materializes in exactly one
+    batch."""
+    lon_col, lat_col = cols[:2]
+    order = [F.col("_ts").asc()]
     if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy(track_col).orderBy(*order)
+        order.append(F.col("_tb").asc())
     es = (
         F.unix_timestamp(F.col(ts_col))
         if dict(df.dtypes)[ts_col].startswith("timestamp")
         else F.col(ts_col).cast("long")
     )
-    cols = [lon_col, lat_col] + vals
-    seg = (
-        df.withColumn("_es", es)
-        .withColumn("_seq", F.row_number().over(w))
-        .select(
-            F.col(track_col).alias("track"), "_seq", "_es",
-            *[F.col(c).alias(f"_v_{c}") for c in cols],
-            F.lead("_es").over(w).alias("_nes"),
-            *[F.lead(c).over(w).alias(f"_nv_{c}") for c in cols],
+    pts = df.select(
+        F.col(track_col).alias("track"),
+        F.col(ts_col).alias("_ts"),
+        *([F.col(tiebreak_col).alias("_tb")] if tiebreak_col else []),
+        es.alias("_es"),
+        *[F.col(c).alias(f"_v_{c}") for c in cols],
+    )
+    keep = ["track", "_es"]
+    if carried is not None:
+        types = dict(pts.dtypes)
+        pts = pts.withColumn("_carried", F.lit(False)).unionByName(
+            carried.join(pts.select("track").distinct(), "track", "left_semi")
+            .select(
+                "track",
+                F.lit(None).cast(types["_ts"]).alias("_ts"),
+                *(
+                    [F.lit(None).cast(types["_tb"]).alias("_tb")]
+                    if tiebreak_col else []
+                ),
+                F.col("last_ts").cast("long").alias("_es"),
+                F.col("last_lon").alias(f"_v_{lon_col}"),
+                F.col("last_lat").alias(f"_v_{lat_col}"),
+                F.lit(True).alias("_carried"),
+            )
         )
+        # es is non-decreasing in ts, so (es, ts, tiebreak) is the
+        # batch order with the carried fix first at its timestamp
+        order = [F.col("_es").asc(), F.col("_carried").desc()] + order
+        keep.append("_carried")
+    w = Window.partitionBy("track").orderBy(*order)
+    seg = pts.select(
+        *keep,
+        F.row_number().over(w).alias("_seq"),
+        *[F.col(f"_v_{c}") for c in cols],
+        F.lead("_es").over(w).alias("_nes"),
+        *[F.lead(f"_v_{c}").over(w).alias(f"_nv_{c}") for c in cols],
     )
     step = F.lit(int(step_s))
     # ticks owned by this segment: es < k*step <= nes  (plus the
@@ -500,6 +607,8 @@ def track_resample(
     lo = F.floor(F.col("_es") / step) + F.lit(1)
     hi = F.floor(F.col("_nes") / step)
     own_first = (F.col("_seq") == 1) & (F.pmod(F.col("_es"), step) == 0)
+    if carried is not None:
+        own_first = own_first & ~F.col("_carried")
     ticks_arr = F.when(
         F.col("_nes").isNull()
         | (hi < lo)

@@ -116,27 +116,6 @@ class CheckpointedJob:
         h = hashlib.md5(unit_id.encode()).hexdigest()[:8]
         return f"{self.out_dir}/unit={safe}-{h}"
 
-    def _path_exists(self, path: str) -> bool:
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(hpath))
-
-    def _resolve_unit_path(self, unit_id: str) -> str:
-        """Physical path of a COMMITTED unit, honoring outputs written
-        under the pre-md5-suffix layout (`unit=<safe>`): a resumed job
-        whose lineage marks a unit ok must read the directory that run
-        actually wrote, not a newer naming scheme that doesn't exist
-        on disk."""
-        new = self.unit_path(unit_id)
-        if self._path_exists(new):
-            return new
-        safe = unit_id.replace("/", "_").replace("=", "-")
-        legacy = f"{self.out_dir}/unit={safe}"
-        if self._path_exists(legacy):
-            return legacy
-        return new
-
     def run_unit(self, unit_id: str, df_fn: Callable[[], DataFrame]) -> dict:
         """Execute one unit: write its output, then commit lineage."""
         started = time.time()
@@ -191,7 +170,7 @@ class CheckpointedJob:
         if not committed:
             raise ValueError(f"no committed units for job {self.job_id}")
         return self.spark.read.parquet(
-            *[self._resolve_unit_path(u) for u in committed]
+            *[self.unit_path(u) for u in committed]
         )
 
     def metrics(self) -> DataFrame:

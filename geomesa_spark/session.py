@@ -8,6 +8,7 @@ DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -19,34 +20,32 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     """Zip this package for `spark-submit --py-files` / addPyFile.
 
     Executors (local Python workers or remote) import the engine from
-    this archive — the packaging story required by north_rule.
+    this archive — the packaging story required by north_rule.  The
+    archive is named by a digest of its members (relative path +
+    bytes), so a tree only ever reuses an archive holding exactly its
+    own sources, even when several checkouts share `dest_dir`.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(dest_dir, "geomesa_spark_pkg.zip")
-    sources = sorted(
+    members = []
+    digest = hashlib.sha256()
+    for full in sorted(
         os.path.join(r, f)
         for r, _, fs in os.walk(pkg_dir)
         for f in fs
         if f.endswith(".py")
+    ):
+        rel = os.path.join("geomesa_spark", os.path.relpath(full, pkg_dir))
+        with open(full, "rb") as fh:
+            data = fh.read()
+        for part in (rel.encode(), data):
+            digest.update(len(part).to_bytes(8, "big"))
+            digest.update(part)
+        members.append((rel, data))
+    out = os.path.join(
+        dest_dir, f"geomesa_spark_pkg-{digest.hexdigest()[:16]}.zip"
     )
-    names = [
-        os.path.join("geomesa_spark", os.path.relpath(p, pkg_dir))
-        for p in sources
-    ]
-    # reuse only when nothing is newer AND the member set matches (a
-    # deleted source would otherwise linger in the shipped archive)
     if os.path.exists(out):
-        latest = max(os.path.getmtime(p) for p in sources)
-        try:
-            with zipfile.ZipFile(out) as z:
-                fresh = (
-                    os.path.getmtime(out) >= latest
-                    and sorted(z.namelist()) == sorted(names)
-                )
-        except zipfile.BadZipFile:
-            fresh = False
-        if fresh:
-            return out
+        return out
     # per-process temp file + atomic replace: a fixed .tmp name let
     # two concurrent sessions interleave writes and publish a torn
     # archive to every executor
@@ -54,8 +53,8 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     os.close(fd)
     try:
         with zipfile.ZipFile(tmp, "w") as z:
-            for full, rel in zip(sources, names):
-                z.write(full, rel)
+            for rel, data in members:
+                z.writestr(rel, data)
         os.replace(tmp, out)
     finally:
         if os.path.exists(tmp):

@@ -1,33 +1,27 @@
 """Streaming co-travel: continuous convoy detection over a
 point-track stream.
 
-The streaming twin of ``operators/cooccur.co_travel``: pairs of
-tracks co-located on >= `min_shared` aligned time-grid ticks, with
-the ALERT emitted in the micro-batch where the pair first crosses
-the threshold — the live "these two are moving together" signal the
-batch operator only produces after the fact.  Same foreachBatch +
-versioned-snapshot architecture as geofence/stops:
+Pairs of tracks co-located on >= `min_shared` aligned time-grid
+ticks, with the ALERT emitted in the micro-batch where the pair
+first crosses the threshold — the live "these two are moving
+together" signal that ``operators/cooccur.co_travel`` only produces
+after the fact.  Same foreachBatch + versioned-snapshot architecture
+as geofence/stops, and the same within-batch code as ``co_travel``:
 
-- Tick ownership makes streaming exact: batch ticks are produced by
-  the ``track_resample`` single-owner rule (a segment owns the grid
-  ticks in (es_i, es_{i+1}]) over the batch points PLUS one carried
-  row per track (its last raw fix).  The carried point contributes
-  only as a segment START — its own tick was owned by the batch
-  that delivered it — so every grid tick materializes in EXACTLY
-  one micro-batch and per-pair counts add across batches with no
-  dedup pass.
-- WITHIN the batch, pairs come from the co_travel per-tick eps-join
-  (the single-meeting-cell trick with the tick in the key).  Two
-  tracks can materialize the SAME tick in different batches (their
-  next fixes straddle a boundary), so the join's right side also
-  carries the recent ticks of earlier batches (a `lag_horizon_s`
-  window — state bounded by tracks x horizon/step); a pair is
-  counted exactly once because at least one side of every pair is
-  new, and new x new pairs order by id while new x carried pairs
-  don't need to (the carried tick can never meet another carried
-  tick: when the later one was new, the earlier one was already
-  carried).  Inter-track lag beyond the horizon is the documented
-  divergence from the batch twin.
+- Ticks come from ``track_resample``'s core (``tracks._grid_ticks``:
+  a segment owns the grid ticks in (es_i, es_{i+1}]) over the batch
+  points PLUS one carried row per track (its last raw fix).  The
+  carried point contributes only as a segment START — its own tick
+  was owned by the batch that delivered it — so every grid tick
+  materializes in EXACTLY one micro-batch and per-pair counts add
+  across batches with no dedup pass.
+- Pairs come from ``co_travel``'s per-tick eps-join
+  (``cooccur._tick_pair_counts``).  Two tracks can materialize the
+  SAME tick in different batches (their next fixes straddle a
+  boundary), so the join's right side also carries the recent ticks
+  of earlier batches (a `lag_horizon_s` window — state bounded by
+  tracks x horizon/step).  Inter-track lag beyond the horizon is the
+  documented divergence from ``co_travel``.
 - ACROSS batches, (track_a, track_b) count state accumulates
   (n_shared, first/last tick, alerted flag); a pair crossing
   min_shared in this batch emits ONE alert row.  State is bounded
@@ -36,15 +30,18 @@ versioned-snapshot architecture as geofence/stops:
 
 Ordering contract: event-time-ordered batches per track (the
 geofence/stops contract).  ``read_pair_counts`` is the live view —
-for an in-order stream it equals the batch twin's (n_shared,
-first_ts, last_ts) per pair (parity-tested), with alerts =
-pairs at n_shared >= min_shared.
+for an in-order stream it equals ``co_travel``'s (n_shared,
+first_ts, last_ts) per pair (parity-tested), with alerts = pairs at
+n_shared >= min_shared.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from geomesa_spark.operators.cooccur import _tick_pair_counts
+from geomesa_spark.operators.tracks import _grid_ticks
 
 __all__ = ["cotravel_stream", "read_alerts", "read_pair_counts"]
 
@@ -63,101 +60,30 @@ def _batch_ticks(
     lat_col: str,
     tiebreak_col: str | None,
 ) -> tuple[DataFrame, DataFrame]:
-    """New grid ticks owned by this batch + the new last-point state.
-
-    Mirrors track_resample's ownership rule with one change: a
-    CARRIED row never owns its own aligned tick (it did when it was
-    a live batch point)."""
+    """New grid ticks owned by this batch (track, tick_ts, lon, lat)
+    + the new last-point state."""
+    ticks = _grid_ticks(
+        batch, track_col, ts_col, step_s, [lon_col, lat_col],
+        tiebreak_col, None, carried=last_state,
+    ).select("track", "tick_ts", F.col(lon_col).alias("lon"),
+             F.col(lat_col).alias("lat"))
+    desc = [F.col(ts_col).desc()]
+    if tiebreak_col is not None:
+        desc.append(F.col(tiebreak_col).desc())
     es = (
         F.unix_timestamp(F.col(ts_col))
         if dict(batch.dtypes)[ts_col].startswith("timestamp")
         else F.col(ts_col).cast("long")
     )
-    pts = batch.select(
+    new_last = batch.select(
         F.col(track_col).alias("track"),
-        es.alias("es"),
-        F.col(lon_col).cast("double").alias("lon"),
-        F.col(lat_col).cast("double").alias("lat"),
-        *([F.col(tiebreak_col).alias("_tb")] if tiebreak_col else []),
-        F.lit(False).alias("_carried"),
-    )
-    if tiebreak_col is None:
-        pts = pts.withColumn("_tb", F.lit(0).cast("long"))
-    if last_state is not None:
-        carried = last_state.select(
-            "track",
-            F.col("last_ts").alias("es"),
-            F.col("last_lon").alias("lon"),
-            F.col("last_lat").alias("lat"),
-            F.lit(None).cast(dict(pts.dtypes)["_tb"]).alias("_tb"),
-            F.lit(True).alias("_carried"),
-        ).join(
-            batch.select(F.col(track_col).alias("track")).distinct(),
-            "track", "left_semi",  # carried rows only help where the
-        )                           # track actually has new points
-        pts = pts.unionByName(carried)
-    # carried rows sort FIRST at their timestamp (asc_nulls_first on
-    # the tiebreak) — they are the predecessor of any same-ts point
-    w = Window.partitionBy("track").orderBy(
-        F.col("es").asc(), F.col("_tb").asc_nulls_first()
-    )
-    seg = pts.select(
-        "track", "es", "lon", "lat", "_carried",
-        F.row_number().over(w).alias("_seq"),
-        F.lead("es").over(w).alias("_nes"),
-        F.lead("lon").over(w).alias("_nlon"),
-        F.lead("lat").over(w).alias("_nlat"),
-    )
-    step = F.lit(int(step_s))
-    lo = F.floor(F.col("es") / step) + F.lit(1)
-    hi = F.floor(F.col("_nes") / step)
-    own_first = (
-        (F.col("_seq") == 1)
-        & ~F.col("_carried")
-        & (F.pmod(F.col("es"), step) == 0)
-    )
-    ticks_arr = F.when(
-        F.col("_nes").isNull() | (hi < lo),
-        F.array().cast("array<bigint>"),
-    ).otherwise(F.sequence(lo.cast("long"), hi.cast("long")))
-    ticks_arr = F.when(
-        own_first,
-        F.concat(F.array((F.col("es") / step).cast("long")), ticks_arr),
-    ).otherwise(ticks_arr)
-    ex = seg.select(
-        "track", "es", "_nes", "lon", "lat", "_nlon", "_nlat",
-        F.explode(ticks_arr).alias("_k"),
-    ).withColumn("_t", F.col("_k") * step)
-    frac = F.when(F.col("_t") == F.col("es"), F.lit(0.0)).otherwise(
-        (F.col("_t") - F.col("es")).cast("double")
-        / (F.col("_nes") - F.col("es")).cast("double")
-    )
-
-    def interp(p, nxt):
-        return F.when(frac == 0.0, F.col(p)).otherwise(
-            F.col(p) + (F.col(nxt) - F.col(p)) * frac
-        )
-
-    ticks = ex.select(
-        "track",
-        F.col("_t").alias("tick_ts"),
-        interp("lon", "_nlon").alias("lon"),
-        interp("lat", "_nlat").alias("lat"),
-    )
-    wd = Window.partitionBy("track").orderBy(
-        F.col("es").desc(), F.col("_tb").desc_nulls_last()
-    )
-    new_last = (
-        pts.filter(~F.col("_carried"))
-        .withColumn("_rn", F.row_number().over(wd))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "track",
-            F.col("es").alias("last_ts"),
-            F.col("lon").alias("last_lon"),
-            F.col("lat").alias("last_lat"),
-        )
-    )
+        es.alias("last_ts"),
+        F.col(lon_col).cast("double").alias("last_lon"),
+        F.col(lat_col).cast("double").alias("last_lat"),
+        F.row_number().over(
+            Window.partitionBy(track_col).orderBy(*desc)
+        ).alias("_rn"),
+    ).filter(F.col("_rn") == 1).select(*_LAST_COLS)
     if last_state is not None:
         absent = last_state.join(
             batch.select(F.col(track_col).alias("track")).distinct(),
@@ -165,91 +91,6 @@ def _batch_ticks(
         ).select(*_LAST_COLS)
         new_last = new_last.unionByName(absent)
     return ticks, new_last
-
-
-def _tick_pairs(
-    new_ticks: DataFrame, all_ticks: DataFrame, dist_deg: float
-) -> DataFrame:
-    """Per-tick eps pairs: LEFT = this batch's NEW ticks, RIGHT =
-    new + carried recent ticks (`_carried` flag). Each qualifying
-    pair counts exactly once: new x new requires track_a < track_b;
-    new x carried pairs once by construction (see module
-    docstring)."""
-    from geomesa_spark.functions import geometry_sql as GS
-
-    nx = max(1, int(360.0 // dist_deg))
-    if 360.0 / nx < dist_deg:
-        nx -= 1
-    nx = max(1, nx)
-    ny = max(1, int(180.0 // dist_deg))
-    if 180.0 / ny < dist_deg:
-        ny -= 1
-    ny = max(1, ny)
-
-    def keyed(ticks):
-        return ticks.withColumns(
-        {
-            "cx": F.least(
-                F.lit(nx - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor((F.col("lon") + F.lit(180.0)) / F.lit(360.0 / nx)),
-                ),
-            ).cast("long"),
-            "cy": F.least(
-                F.lit(ny - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor((F.col("lat") + F.lit(90.0)) / F.lit(180.0 / ny)),
-                ),
-            ).cast("long"),
-            }
-        )
-
-    lbase = keyed(new_ticks)
-    rbase = keyed(all_ticks)
-    left = lbase.select(
-        F.col("track").alias("track_a"),
-        F.col("lon").alias("lon_a"), F.col("lat").alias("lat_a"),
-        F.col("tick_ts").alias("tk"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.pmod(F.col("cx") + F.lit(dx), F.lit(nx)).alias("kx"),
-                    (F.col("cy") + F.lit(dy)).alias("ky"),
-                )
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ])
-        ).alias("k"),
-    ).select(
-        "track_a", "lon_a", "lat_a", "tk",
-        F.col("k.kx").alias("kx"), F.col("k.ky").alias("ky"),
-    )
-    right = rbase.select(
-        F.col("track").alias("track_b"),
-        F.col("lon").alias("lon_b"), F.col("lat").alias("lat_b"),
-        F.col("tick_ts").alias("tk"),
-        F.col("_carried").alias("_rc"),
-        F.col("cx").alias("kx"), F.col("cy").alias("ky"),
-    )
-    d2 = GS.point_dist2_col(
-        F.col("lon_a"), F.col("lat_a"), F.col("lon_b"), F.col("lat_b")
-    )
-    once = F.when(
-        F.col("_rc"), F.col("track_a") != F.col("track_b")
-    ).otherwise(F.col("track_a") < F.col("track_b"))
-    out = (
-        left.join(right, ["kx", "ky", "tk"], "inner")
-        .filter(once)
-        .filter(d2 <= F.lit(float(dist_deg) ** 2))
-        .select(
-            F.least("track_a", "track_b").alias("track_a"),
-            F.greatest("track_a", "track_b").alias("track_b"),
-            "tk",
-        )
-    )
-    return out.distinct() if nx < 3 else out
 
 
 def cotravel_stream(
@@ -296,19 +137,13 @@ def cotravel_stream(
         )
         ticks = ticks.persist()
         try:
-            new_flagged = ticks.withColumn("_carried", F.lit(False))
-            if tick_state is not None:
-                all_ticks = new_flagged.unionByName(
-                    tick_state.withColumn("_carried", F.lit(True))
-                )
-            else:
-                all_ticks = new_flagged
-            inc = _tick_pairs(new_flagged, all_ticks, dist_deg).groupBy(
-                "track_a", "track_b"
-            ).agg(
-                F.count("*").cast("long").alias("d_n"),
-                F.min("tk").cast("long").alias("d_first"),
-                F.max("tk").cast("long").alias("d_last"),
+            inc = _tick_pair_counts(
+                ticks, dist_deg, carried=tick_state
+            ).select(
+                "track_a", "track_b",
+                F.col("n_shared").alias("d_n"),
+                F.col("first_ts").alias("d_first"),
+                F.col("last_ts").alias("d_last"),
             )
             if pair_state is not None:
                 merged = pair_state.join(
@@ -352,9 +187,13 @@ def cotravel_stream(
             # recent-tick buffer: everything within the lag horizon
             # of the newest event time seen (bounded state)
             wm = new_last.agg(F.max("last_ts")).collect()[0][0] or 0
+            all_ticks = (
+                ticks if tick_state is None
+                else ticks.unionByName(tick_state)
+            )
             keep = all_ticks.filter(
                 F.col("tick_ts") >= F.lit(int(wm) - horizon)
-            ).select("track", "tick_ts", "lon", "lat")
+            )
             tick_io.write_version(keep, batch_id)
         finally:
             ticks.unpersist()
@@ -385,7 +224,7 @@ def read_alerts(spark: SparkSession, alerts_dir: str) -> DataFrame:
 
 def read_pair_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     """Live view: accumulated (track_a, track_b, n_shared, first_ts,
-    last_tick, alerted) — equals the batch twin's co_travel counts
+    last_tick, alerted) — equals ``co_travel``'s counts
     for an in-order stream (with min_shared applied by the caller)."""
     from geomesa_spark.sources.tableio import ParquetVersionedIO
 

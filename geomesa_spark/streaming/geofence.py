@@ -1,24 +1,24 @@
 """Streaming geofencing: continuous enter/exit detection over a
 point-track stream.
 
-The streaming twin of ``operators/geofence.geofence_events`` and the
-transition analog of the reference's live Kafka layer
+The transition analog of the reference's live Kafka layer
 (``LiveKafkaConsumerFeatureSource.scala:136-191`` keeps a live
 snapshot the client must poll and diff; here the engine emits the
 diff as it happens).  Same foreachBatch + versioned-snapshot
 architecture as ``streaming/ingest.py``:
 
-- WITHIN a micro-batch, transitions come from the batch operator's
-  gap trick over batch-local sequence numbers — only CONTAINED rows
-  are ever materialized (the pip_join_broadcast output), never
-  |points| × |fences|.
-- ACROSS micro-batches, a tiny carried state stitches the boundary:
-  one row per (track, fence) the track was inside AT ITS LAST SEEN
-  POINT, carrying that point's event time. A batch whose first
-  track point is outside such a fence emits the deferred 'exit' at
-  the carried time; a batch whose first point is inside it
-  suppresses the would-be duplicate 'enter'. Tracks absent from a
-  batch keep their state rows verbatim.
+- WITHIN a micro-batch, each step runs ``operators/geofence
+  .geofence_events`` itself over the batch, with
+  ``include_open=True`` — only CONTAINED rows are ever materialized
+  (its pip_join_broadcast output), never |points| × |fences|.
+- ACROSS micro-batches, ``_stitch`` joins that output to a tiny
+  carried state: one row per (track, fence) the track was inside AT
+  ITS LAST SEEN POINT — the batch operator's 'open' rows — carrying
+  that point's event time. A batch whose first track point is
+  outside such a fence emits the deferred 'exit' at the carried
+  time; a batch whose first point is inside it drops the would-be
+  duplicate 'enter'. Tracks absent from a batch keep their state
+  rows verbatim.
 - State and emitted events are ``ParquetVersionedIO`` directories:
   at-least-once replays of a micro-batch overwrite their version
   instead of double-appending, so the pipeline is idempotent, and
@@ -28,9 +28,10 @@ architecture as ``streaming/ingest.py``:
 Ordering contract: batches must arrive in event-time order per
 track (the ingest_dedup/replay contract — the Kafka per-key-ordered
 topic shape). A late point older than its track's carried state
-would stitch against the wrong predecessor; it is the same
-divergence every watermarkless stateful stream has, and the batch
-twin is the arbiter (parity pytest drives the in-order case).
+would stitch against the wrong predecessor, the same divergence
+every watermarkless stateful stream has; for in-order batches the
+stitched events equal ``geofence_events`` over the whole stream
+(parity-tested).
 
 State size is O(tracks currently inside >=1 fence), not O(history);
 every per-batch join is bounded by batch size or state size, and
@@ -38,128 +39,69 @@ none of it is per-row Python."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geomesa_spark.functions import cells as C
-from geomesa_spark.operators.spatial_join import pip_join_broadcast
+from geomesa_spark.operators.geofence import geofence_events
 
 __all__ = ["geofence_stream", "read_fence_events", "read_inside_now"]
 
 
-def _batch_transitions(
-    batch: DataFrame,
-    fences: list[tuple[str, str]],
+def _stitch(
+    local: DataFrame,
     state: DataFrame | None,
+    batch: DataFrame,
     track_col: str,
-    ts_col: str,
-    lon_col: str,
-    lat_col: str,
-    cell_col: str,
-    cell_bits: int,
-    tiebreak_col: str | None,
-    bits: int,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One micro-batch step: (events, new_state, shared).
+) -> tuple[DataFrame, DataFrame]:
+    """Stitch one micro-batch's ``geofence_events(...,
+    include_open=True)`` output (`local`) to the carried state ->
+    (events, new_state).
 
     events: (track, fence_id, event, ts); new_state: (track,
-    fence_id, last_ts) — inside pairs as of each track's last point.
-    `shared` is the persisted PIP/window frame both outputs branch
-    from — the caller unpersists it after materializing both."""
-    order = [F.col(ts_col).asc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).asc())
-    wtrack = Window.partitionBy(track_col).orderBy(*order)
-    pts = batch.withColumn("seq", F.row_number().over(wtrack)).withColumn(
-        "n_pts", F.count("*").over(Window.partitionBy(track_col))
-    )
-    inside = pip_join_broadcast(
-        pts, fences, bits=bits,
-        lon_col=lon_col, lat_col=lat_col,
-        cell_col=cell_col, cell_bits=cell_bits,
-    ).select(
-        F.col(track_col).alias("track"),
-        F.col("poly_id").alias("fence_id"),
-        F.col(ts_col).alias("ts"),
-        "seq",
-        "n_pts",
-    )
-    wfence = Window.partitionBy("track", "fence_id").orderBy("seq")
-    prev = F.lag("seq").over(wfence)
-    nxt = F.lead("seq").over(wfence)
-    flagged = inside.select(
-        "track", "fence_id", "ts", "seq", "n_pts",
-        (prev.isNull() | (prev != F.col("seq") - 1)).alias("is_enter"),
-        (
-            (nxt.isNull() | (nxt != F.col("seq") + 1))
-            & (F.col("seq") < F.col("n_pts"))
-        ).alias("is_exit"),
-        (nxt.isNull() & (F.col("seq") == F.col("n_pts"))).alias("at_end"),
-    ).persist()
-    shared = flagged  # the persisted PIP/window base both outputs reuse
-    carried = (
-        state.select("track", "fence_id", F.col("last_ts"))
-        if state is not None
-        else None
-    )
-    if carried is not None:
-        # suppress the duplicate 'enter' when the carried state says
-        # the track was already inside at its previous (cross-batch)
-        # point and the batch opens inside the same fence
-        flagged = flagged.join(
-            carried.select("track", "fence_id", F.lit(True).alias("_was_in")),
-            ["track", "fence_id"],
-            "left",
-        ).withColumn(
-            "is_enter",
-            F.col("is_enter")
-            & ~(F.coalesce(F.col("_was_in"), F.lit(False)) & (F.col("seq") == 1)),
-        ).drop("_was_in")
-    events = flagged.select(
-        "track", "fence_id", "ts",
-        F.explode(
-            F.filter(
-                F.array(
-                    F.when(F.col("is_enter"), F.lit("enter")),
-                    F.when(F.col("is_exit"), F.lit("exit")),
-                ),
-                lambda x: x.isNotNull(),
-            )
-        ).alias("event"),
-    ).select("track", "fence_id", "event", "ts")
-    if carried is not None:
-        # deferred boundary exits: state-inside pairs whose track
-        # appears in this batch but does NOT open inside that fence
-        opens_inside = flagged.filter(F.col("seq") == 1).select(
-            "track", "fence_id"
-        )
-        # distinct tracks need no window — read the raw batch
-        batch_tracks = batch.select(
-            F.col(track_col).alias("track")
-        ).distinct()
-        boundary_exits = (
-            carried.join(batch_tracks, "track", "left_semi")
-            .join(opens_inside, ["track", "fence_id"], "left_anti")
-            .select(
-                "track", "fence_id", F.lit("exit").alias("event"),
-                F.col("last_ts").alias("ts"),
-            )
-        )
-        events = events.unionByName(boundary_exits)
-    # new state: pairs inside at their track's LAST batch point, plus
-    # carried pairs for tracks absent from this batch
-    ends_inside = flagged.filter(F.col("at_end")).select(
+    fence_id, last_ts) — the 'open' rows, i.e. inside pairs as of
+    each track's last batch point, plus the carried rows of tracks
+    absent from the batch."""
+    opened = local.filter(F.col("event") == "open").select(
         "track", "fence_id", F.col("ts").alias("last_ts")
     )
-    if carried is not None:
-        batch_tracks = batch.select(
-            F.col(track_col).alias("track")
-        ).distinct()
-        kept = carried.join(batch_tracks, "track", "left_anti")
-        new_state = kept.unionByName(ends_inside)
-    else:
-        new_state = ends_inside
-    return events, new_state, shared
+    events = local.filter(F.col("event") != "open")
+    if state is None:
+        return events.select("track", "fence_id", "event", "ts"), opened
+    carried = state.select("track", "fence_id", "last_ts")
+    batch_tracks = batch.select(F.col(track_col).alias("track")).distinct()
+    # the track was already inside at its previous (cross-batch)
+    # point: a batch opening inside the same fence is no new 'enter'
+    events = events.join(
+        carried.select("track", "fence_id", F.lit(True).alias("_was_in")),
+        ["track", "fence_id"],
+        "left",
+    ).filter(
+        ~(
+            (F.col("event") == "enter")
+            & (F.col("seq") == 1)
+            & F.col("_was_in").isNotNull()
+        )
+    )
+    # deferred boundary exits: carried pairs whose track appears in
+    # this batch but does NOT open inside that fence (every event
+    # row sits on an inside point, so seq 1 rows are the openings)
+    opens_inside = local.filter(F.col("seq") == 1).select(
+        "track", "fence_id"
+    )
+    boundary_exits = (
+        carried.join(batch_tracks, "track", "left_semi")
+        .join(opens_inside, ["track", "fence_id"], "left_anti")
+        .select(
+            "track", "fence_id", F.lit("exit").alias("event"),
+            F.col("last_ts").alias("ts"),
+        )
+    )
+    events = events.select(
+        "track", "fence_id", "event", "ts"
+    ).unionByName(boundary_exits)
+    kept = carried.join(batch_tracks, "track", "left_anti")
+    return events, kept.unionByName(opened)
 
 
 def geofence_stream(
@@ -196,21 +138,21 @@ def geofence_stream(
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         state = io.read_latest(before=batch_id)
-        # events and new_state branch from one persisted PIP/window
-        # frame — the pipeline runs once for both writes, and the
-        # cache is released before the next micro-batch (unlike a
-        # localCheckpoint, whose blocks would accumulate across a
-        # long-running stream — the ingest.py lesson)
-        events, new_state, shared = _batch_transitions(
-            batch_df, fences, state,
-            track_col, ts_col, lon_col, lat_col, cell_col, cell_bits,
-            tiebreak_col, bits,
-        )
+        # events and new_state branch from one persisted pass of the
+        # batch operator — the pipeline runs once for both writes,
+        # and the cache is released before the next micro-batch
+        # (unlike a localCheckpoint, whose blocks would accumulate
+        # across a long-running stream — the ingest.py lesson)
+        local = geofence_events(
+            batch_df, fences, track_col, ts_col, lon_col, lat_col,
+            cell_col, cell_bits, tiebreak_col, bits, include_open=True,
+        ).persist()
         try:
+            events, new_state = _stitch(local, state, batch_df, track_col)
             events_io.write_version(events, batch_id)
             io.write_version(new_state, batch_id)
         finally:
-            shared.unpersist()
+            local.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(step)

@@ -1,25 +1,26 @@
 """Streaming stop (dwell) detection over a point-track stream.
 
-The streaming twin of ``operators/tracks.stop_detect`` — loitering /
-port-call / dwell alerts as they CLOSE, plus a "dwelling right now"
-live view, instead of a nightly batch scan.  Same foreachBatch +
+Loitering / port-call / dwell alerts as they CLOSE, plus a "dwelling
+right now" live view, instead of a nightly batch scan of
+``operators/tracks.stop_detect``.  Same foreachBatch +
 versioned-snapshot architecture as ``streaming/geofence.py``:
 
-- WITHIN a micro-batch, the batch operator's gaps-and-islands shape
-  runs over batch-local sequence numbers (one track window, one
-  same-key aggregate).
+- WITHIN a micro-batch, segments come from ``stop_detect``'s own
+  gaps-and-islands core (``tracks._stop_segments``: one track window,
+  one same-key aggregate), fed the carried last points.
 - ACROSS micro-batches, ONE carried row per track stitches the
-  boundary: the track's last seen point (the leg into the next
-  batch's first point is computed against it) plus the OPEN
-  segment's running aggregate (start, count, bbox).  A batch whose
-  first point stays within `radius` of the carried point CONTINUES
-  the open segment (aggregates merge); one that jumps CLOSES it —
+  boundary: the track's last seen point (the core computes the leg
+  into the batch's first point against it) plus the OPEN segment's
+  running aggregate (start, count, bbox).  A batch whose first point
+  stays within `radius` of the carried point CONTINUES the open
+  segment (segment 0; aggregates merge); one that jumps CLOSES it —
   the carried segment is emitted (if it meets `min_duration_s`) with
   its carried end time.
 - A stop is emitted in exactly one micro-batch, WHEN IT CLOSES; the
   still-open segments are the live state (``read_dwelling_now``).
   ``flush_open_stops`` converts the final state to emissions so
-  closed + flushed == the batch twin (the parity pytest contract).
+  closed + flushed == ``stop_detect`` over the whole stream (the
+  parity pytest contract).
 - State and stops are ``ParquetVersionedIO`` directories: replayed
   micro-batches overwrite their version (idempotent, the
   ingest/geofence convention).
@@ -35,37 +36,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geomesa_spark.operators.tracks import _leg_dist, stop_center_sql
+from geomesa_spark.operators.tracks import _stop_row, _stop_segments
 
 __all__ = ["stop_stream", "read_stops", "read_dwelling_now",
            "flush_open_stops"]
 
+# the track's last point + its open segment's ``_stop_segments``
+# aggregate (lo_pos / hi_neg carry the IDL straddle inputs, so
+# cross-batch straddling stops center exactly like stop_detect's)
 _STATE_COLS = [
     "track", "last_es", "last_lon", "last_lat",
     "seg_start", "seg_n", "lo_x", "hi_x", "lo_y", "hi_y",
-    # IDL straddle support (min positive / max negative lon, NULL
-    # when that side is empty) — the batch twin's stop_center_sql
-    # inputs, carried so cross-batch straddling stops center exactly
-    # like stop_detect's
     "lo_pos", "hi_neg",
 ]
-
-
-def _stop_row(prefix=""):
-    c = F.col
-    return [
-        c(f"{prefix}seg_start").cast("long").alias("start_ts"),
-        c(f"{prefix}last_es").cast("long").alias("end_ts"),
-        (c(f"{prefix}last_es") - c(f"{prefix}seg_start"))
-        .cast("long").alias("duration_s"),
-        c(f"{prefix}seg_n").cast("long").alias("n_points"),
-        F.expr(stop_center_sql(
-            f"{prefix}lo_x", f"{prefix}hi_x",
-            f"{prefix}lo_pos", f"{prefix}hi_neg",
-        )).alias("center_lon"),
-        ((c(f"{prefix}lo_y") + c(f"{prefix}hi_y")) / F.lit(2.0))
-        .alias("center_lat"),
-    ]
 
 
 def _batch_stops(
@@ -84,218 +67,73 @@ def _batch_stops(
 
     stops: closed dwell segments meeting min_duration_s; new_state:
     one row per active track (_STATE_COLS). `shared` is the
-    persisted window/aggregate base — caller unpersists it after
+    persisted segment aggregate — caller unpersists it after
     materializing both outputs."""
-    order = [F.col("_ts").asc()]
-    if tiebreak_col is not None:
-        order.append(F.col("_tb").asc())
-    w = Window.partitionBy("track").orderBy(*order)
-    es = (
-        F.unix_timestamp(F.col(ts_col))
-        if dict(batch.dtypes)[ts_col].startswith("timestamp")
-        else F.col(ts_col).cast("long")
-    )
-    pts = batch.select(
-        F.col(track_col).alias("track"),
-        F.col(ts_col).alias("_ts"),
-        *([F.col(tiebreak_col).alias("_tb")] if tiebreak_col else []),
-        es.alias("es"),
-        F.col(lon_col).alias("lon"),
-        F.col(lat_col).alias("lat"),
-    )
-    carried = state if state is not None else None
-    if carried is not None:
-        pts = pts.join(
-            carried.select(
-                "track",
-                F.col("last_lon").alias("_clon"),
-                F.col("last_lat").alias("_clat"),
-            ),
+    segs = _stop_segments(
+        batch, track_col, ts_col, radius, lon_col, lat_col, metric,
+        tiebreak_col, carried=state,
+    ).withColumn("_max_seg", F.max("_seg").over(Window.partitionBy("track")))
+    if state is not None:
+        # segment 0 continues the carried open segment: fold the
+        # carried aggregate into it (least/greatest skip NULLs,
+        # matching min/max over the union)
+        s0 = F.col("_seg") == 0
+        merge = {
+            "seg_start": lambda b, c: c,
+            "seg_n": lambda b, c: b + c,
+            "lo_x": F.least, "hi_x": F.greatest,
+            "lo_y": F.least, "hi_y": F.greatest,
+            "lo_pos": F.least, "hi_neg": F.greatest,
+        }
+        segs = segs.join(
+            state.select("track", *[F.col(k).alias(f"_c_{k}") for k in merge]),
             "track", "left",
-        )
-    else:
-        pts = pts.withColumn("_clon", F.lit(None).cast("double")).withColumn(
-            "_clat", F.lit(None).cast("double")
-        )
-    seq = F.row_number().over(w)
-    plon = F.coalesce(F.lag("lon").over(w), F.col("_clon"))
-    plat = F.coalesce(F.lag("lat").over(w), F.col("_clat"))
-    leg = _leg_dist(metric, plon, plat, F.col("lon"), F.col("lat"))
-    anchor = F.when(
-        plon.isNull() | (leg > F.lit(float(radius))), F.lit(1)
-    ).otherwise(F.lit(0))
-    anchored = pts.withColumn("_seq", seq).withColumn(
-        "_anchor", anchor
-    ).withColumn(
-        "_seg",
-        F.sum("_anchor").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ).cast("long"),
-    )
-    # seg 0 = the batch head run that CONTINUES the carried open
-    # segment (only possible when carried state exists and the first
-    # point's leg vs the carried point is within radius)
-    segs = (
-        anchored.groupBy("track", "_seg")
-        .agg(
-            F.min("es").cast("long").alias("b_start"),
-            F.max("es").cast("long").alias("b_end"),
-            F.count("*").cast("long").alias("b_n"),
-            F.min("lon").alias("b_lo_x"),
-            F.max("lon").alias("b_hi_x"),
-            F.min(F.when(F.col("lon") >= 0, F.col("lon")))
-            .alias("b_lo_pos"),
-            F.max(F.when(F.col("lon") < 0, F.col("lon")))
-            .alias("b_hi_neg"),
-            F.min("lat").alias("b_lo_y"),
-            F.max("lat").alias("b_hi_y"),
-        )
-        .withColumn(
-            "_max_seg", F.max("_seg").over(Window.partitionBy("track"))
-        )
-        .persist()
-    )
-    shared = segs
-    if carried is not None:
-        cst = carried.select(
-            "track",
-            F.col("last_es").alias("c_last_es"),
-            F.col("seg_start").alias("c_seg_start"),
-            F.col("seg_n").alias("c_seg_n"),
-            F.col("lo_x").alias("c_lo_x"), F.col("hi_x").alias("c_hi_x"),
-            F.col("lo_y").alias("c_lo_y"), F.col("hi_y").alias("c_hi_y"),
-            F.col("lo_pos").alias("c_lo_pos"),
-            F.col("hi_neg").alias("c_hi_neg"),
-        )
-    else:
-        cst = None
-
-    # 1) closed batch-local segments: _seg >= 1 and not the open one
-    closed_local = segs.filter(
-        (F.col("_seg") >= 1) & (F.col("_seg") < F.col("_max_seg"))
-    ).select(
-        "track",
-        F.col("b_start").cast("long").alias("start_ts"),
-        F.col("b_end").cast("long").alias("end_ts"),
-        (F.col("b_end") - F.col("b_start")).cast("long").alias("duration_s"),
-        F.col("b_n").alias("n_points"),
-        F.expr(stop_center_sql(
-            "b_lo_x", "b_hi_x", "b_lo_pos", "b_hi_neg"
-        )).alias("center_lon"),
-        ((F.col("b_lo_y") + F.col("b_hi_y")) / F.lit(2.0)).alias("center_lat"),
-    )
-    stops = closed_local
-    # 2) the seg-0 run (continues carried). If it is NOT the open
-    #    segment, the MERGED carried+batch segment closes here.
-    if cst is not None:
-        merged0 = segs.filter(F.col("_seg") == 0).join(cst, "track")
-        closed_merged = merged0.filter(
-            F.col("_seg") < F.col("_max_seg")
         ).select(
-            "track",
-            F.col("c_seg_start").cast("long").alias("start_ts"),
-            F.col("b_end").cast("long").alias("end_ts"),
-            (F.col("b_end") - F.col("c_seg_start")).cast("long")
-            .alias("duration_s"),
-            (F.col("b_n") + F.col("c_seg_n")).cast("long").alias("n_points"),
-            F.expr(stop_center_sql(
-                "least(b_lo_x, c_lo_x)", "greatest(b_hi_x, c_hi_x)",
-                "least(b_lo_pos, c_lo_pos)",
-                "greatest(b_hi_neg, c_hi_neg)",
-            )).alias("center_lon"),
-            ((F.least("b_lo_y", "c_lo_y") + F.greatest("b_hi_y", "c_hi_y"))
-             / F.lit(2.0)).alias("center_lat"),
+            "track", "_seg", "_max_seg", "last_es",
+            *[
+                F.when(s0, f(F.col(k), F.col(f"_c_{k}")))
+                .otherwise(F.col(k)).alias(k)
+                for k, f in merge.items()
+            ],
         )
-        # 3) carried segment closed by a batch that OPENS with an
-        #    anchor (no seg-0 run): emit it with its carried extent
-        present = segs.select("track").distinct()
-        has_seg0 = segs.filter(F.col("_seg") == 0).select("track")
+    segs = segs.persist()
+    stops = segs.filter(F.col("_seg") < F.col("_max_seg")).select(
+        "track", *_stop_row()
+    )
+    present = segs.select("track").distinct()
+    if state is not None:
+        # a batch that OPENS with an anchor (no segment 0) closes the
+        # carried segment at its carried extent
         closed_carried = (
-            cst.join(present, "track", "left_semi")
-            .join(has_seg0, "track", "left_anti")
-            .select(
-                "track",
-                F.col("c_seg_start").cast("long").alias("start_ts"),
-                F.col("c_last_es").cast("long").alias("end_ts"),
-                (F.col("c_last_es") - F.col("c_seg_start")).cast("long")
-                .alias("duration_s"),
-                F.col("c_seg_n").cast("long").alias("n_points"),
-                F.expr(stop_center_sql(
-                    "c_lo_x", "c_hi_x", "c_lo_pos", "c_hi_neg"
-                )).alias("center_lon"),
-                ((F.col("c_lo_y") + F.col("c_hi_y")) / F.lit(2.0))
-                .alias("center_lat"),
-            )
+            state.join(present, "track", "left_semi")
+            .join(segs.filter(F.col("_seg") == 0), "track", "left_anti")
+            .select("track", *_stop_row())
         )
-        stops = stops.unionByName(closed_merged).unionByName(closed_carried)
-    stops = stops.filter(
-        F.col("duration_s") >= F.lit(int(min_duration_s))
-    )
+        stops = stops.unionByName(closed_carried)
+    stops = stops.filter(F.col("duration_s") >= F.lit(int(min_duration_s)))
 
-    # new state: the OPEN segment per track present in this batch
-    desc_order = [F.col("_ts").desc()]
+    # new state: the OPEN segment + last point per track present in
+    # this batch, plus the carried rows of absent tracks
+    desc = [F.col(ts_col).desc()]
     if tiebreak_col is not None:
-        desc_order.append(F.col("_tb").desc())
-    last_pt = anchored.withColumn(
-        "_rn",
+        desc.append(F.col(tiebreak_col).desc())
+    last_pt = batch.select(
+        F.col(track_col).alias("track"),
+        F.col(lon_col).alias("last_lon"),
+        F.col(lat_col).alias("last_lat"),
         F.row_number().over(
-            Window.partitionBy("track").orderBy(*desc_order)
-        ),
-    ).filter(F.col("_rn") == 1).select(
-        "track",
-        F.col("es").alias("last_es"),
-        F.col("lon").alias("last_lon"),
-        F.col("lat").alias("last_lat"),
+            Window.partitionBy(track_col).orderBy(*desc)
+        ).alias("_rn"),
+    ).filter(F.col("_rn") == 1)
+    new_state = (
+        segs.filter(F.col("_seg") == F.col("_max_seg"))
+        .join(last_pt, "track")
+        .select(*_STATE_COLS)
     )
-    open_segs = segs.filter(F.col("_seg") == F.col("_max_seg"))
-    if cst is not None:
-        open_segs = open_segs.join(cst, "track", "left")
-        start = F.when(
-            F.col("_seg") == 0, F.col("c_seg_start")
-        ).otherwise(F.col("b_start"))
-        n_ = F.when(
-            F.col("_seg") == 0, F.col("b_n") + F.col("c_seg_n")
-        ).otherwise(F.col("b_n"))
-        lo_x = F.when(F.col("_seg") == 0, F.least("b_lo_x", "c_lo_x")
-                      ).otherwise(F.col("b_lo_x"))
-        hi_x = F.when(F.col("_seg") == 0, F.greatest("b_hi_x", "c_hi_x")
-                      ).otherwise(F.col("b_hi_x"))
-        lo_y = F.when(F.col("_seg") == 0, F.least("b_lo_y", "c_lo_y")
-                      ).otherwise(F.col("b_lo_y"))
-        hi_y = F.when(F.col("_seg") == 0, F.greatest("b_hi_y", "c_hi_y")
-                      ).otherwise(F.col("b_hi_y"))
-        # least/greatest skip NULLs, matching min/max over the union
-        lo_pos = F.when(
-            F.col("_seg") == 0, F.least("b_lo_pos", "c_lo_pos")
-        ).otherwise(F.col("b_lo_pos"))
-        hi_neg = F.when(
-            F.col("_seg") == 0, F.greatest("b_hi_neg", "c_hi_neg")
-        ).otherwise(F.col("b_hi_neg"))
-    else:
-        start, n_ = F.col("b_start"), F.col("b_n")
-        lo_x, hi_x = F.col("b_lo_x"), F.col("b_hi_x")
-        lo_y, hi_y = F.col("b_lo_y"), F.col("b_hi_y")
-        lo_pos, hi_neg = F.col("b_lo_pos"), F.col("b_hi_neg")
-    present_state = open_segs.select(
-        "track",
-        start.cast("long").alias("seg_start"),
-        n_.cast("long").alias("seg_n"),
-        lo_x.alias("lo_x"), hi_x.alias("hi_x"),
-        lo_y.alias("lo_y"), hi_y.alias("hi_y"),
-        lo_pos.alias("lo_pos"), hi_neg.alias("hi_neg"),
-    ).join(last_pt, "track")
-    present_state = present_state.select(*_STATE_COLS)
-    if cst is not None:
-        absent = (
-            state.join(
-                batch.select(F.col(track_col).alias("track")).distinct(),
-                "track", "left_anti",
-            ).select(*_STATE_COLS)
-        )
-        new_state = present_state.unionByName(absent)
-    else:
-        new_state = present_state
-    return stops, new_state, shared
+    if state is not None:
+        absent = state.join(present, "track", "left_anti")
+        new_state = new_state.unionByName(absent.select(*_STATE_COLS))
+    return stops, new_state, segs
 
 
 def stop_stream(
@@ -320,7 +158,7 @@ def stop_stream(
     StreamingQuery. Closed stops land as versioned parquet under
     `stops_dir` (``read_stops``); the dwelling-right-now live view is
     ``read_dwelling_now``; ``flush_open_stops`` finalizes at stream
-    end (closed + flushed == the batch twin, parity-tested)."""
+    end (closed + flushed == ``stop_detect``, parity-tested)."""
     from geomesa_spark.sources.tableio import ParquetVersionedIO
 
     spark = stream.sparkSession
@@ -383,7 +221,7 @@ def flush_open_stops(
 ) -> DataFrame:
     """Finalize the open segments (end-of-stream): the state rows as
     stop rows, min-duration filtered — union with ``read_stops`` to
-    match the batch twin exactly."""
+    match ``stop_detect`` exactly."""
     st = read_dwelling_now(spark, state_dir)
     return st.select("track", *_stop_row()).filter(
         F.col("duration_s") >= F.lit(int(min_duration_s))

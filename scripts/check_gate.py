@@ -3,6 +3,7 @@
 Runs every __spark_entry__ query at sf0.01 on Spark AND its DuckDB
 oracle, then compares row count, column names, and order-insensitive
 values (exact for ints/strings, bit-exact for doubles by design).
+A column that is float on one side and integer on the other fails.
 
 Usage: python scripts/check_gate.py [query ...]
 """
@@ -82,6 +83,20 @@ def main() -> int:
         a, b = normalize(sdf), normalize(odf)
         if list(a.columns) != list(b.columns):
             print(f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}")
+            failures += 1
+            continue
+        # type-strict: a float column never matches
+        # an integer one, even when every value compares equal
+        mixed = [
+            c for c in a.columns
+            if {a[c].dtype.kind, b[c].dtype.kind} in ({"f", "i"}, {"f", "u"})
+        ]
+        if mixed:
+            c = mixed[0]
+            print(
+                f"FAIL {name}: col {c} dtype spark={a[c].dtype} "
+                f"oracle={b[c].dtype}"
+            )
             failures += 1
             continue
         if len(a) != len(b):

@@ -125,3 +125,30 @@ def test_cotravel_stream_boundary_straddle(spark, tmp_path):
     assert live == {("a", "b"): 2}  # ticks 100 (straddled) and 200
     alerts = read_alerts(spark, str(tmp_path / "al2")).collect()
     assert len(alerts) == 1 and alerts[0].n_shared == 2
+
+
+def test_batch_ticks_equal_track_resample_across_the_dateline(spark):
+    # the stream's per-batch ticks, stitched through the carried last
+    # fix, are track_resample's ticks bit for bit — including
+    # segments that wrap the antimeridian (interpolated the short way)
+    from geomesa_spark.operators.tracks import track_resample
+    from geomesa_spark.streaming.cotravel import _batch_ticks
+
+    rows = [
+        ("a", 0, 179.8, 0.0), ("a", 100, 179.9, 0.0),
+        ("a", 250, -179.9, 0.1),
+        ("b", 0, 179.8, 0.01), ("b", 300, -179.7, 0.01),
+        ("b", 400, -179.6, 0.0),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    want = {tuple(r) for r in track_resample(df, "track", "es", STEP).collect()}
+    t1, last = _batch_ticks(
+        df.filter("es < 150"), None, STEP, "track", "es", "lon", "lat", None
+    )
+    t2, _ = _batch_ticks(
+        df.filter("es >= 150"), last, STEP, "track", "es", "lon", "lat", None
+    )
+    got = [tuple(r) for r in t1.unionByName(t2).collect()]
+    assert len(got) == len(want) and set(got) == want
+    b100 = [r for r in got if r[0] == "b" and r[1] == 100][0]
+    assert b100[2] > 179.8  # the short way across the dateline

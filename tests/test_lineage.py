@@ -112,23 +112,3 @@ def test_result_excludes_uncommitted_partials(spark, tmp_path):
         job.unit_path("crashed")
     )
     assert job.result().count() == 5
-
-
-def test_result_reads_legacy_unit_layout(spark, out_dir):
-    """Units committed under the pre-md5-suffix `unit=<safe>` layout
-    are still readable by result() after the naming change (ADVICE
-    r2, lineage.py:108)."""
-    import os
-    import shutil
-
-    calls = []
-    job = CheckpointedJob(spark, "jleg", out_dir)
-    job.run(_units(spark, calls))
-    # simulate a pre-change run: rename one committed unit's dir to
-    # the legacy layout (no md5 suffix)
-    new_path = job.unit_path("u1")
-    legacy_path = os.path.join(out_dir, "unit=u1")
-    shutil.move(new_path, legacy_path)
-    out = job.result()
-    assert out.count() == 15  # all three units, one via legacy path
-    assert set(r.unit for r in out.select("unit").distinct().collect()) == {0, 1, 2}

@@ -241,6 +241,22 @@ def test_stop_detect_single_shuffle(spark):
     assert "Python" not in plan
 
 
+def test_stop_detect_null_fix_does_not_anchor(spark):
+    from geomesa_spark.operators.tracks import stop_detect
+
+    # a NULL lon mid-track gives NULL legs on both sides of it; only
+    # the track's first point and the 40-degree jump anchor
+    rows = [("a", 0, 10.0, 10.0), ("a", 100, None, 10.0),
+            ("a", 200, 10.0, 10.0), ("a", 300, 10.0, 10.0),
+            ("a", 400, 50.0, 10.0), ("a", 500, 50.0, 10.0)]
+    df = spark.createDataFrame(rows, "track string, es long, lon double, lat double")
+    out = sorted(
+        (r.stop_id, r.start_ts, r.end_ts, r.n_points)
+        for r in stop_detect(df, "track", "es", 1000.0, 0).collect()
+    )
+    assert out == [(1, 0, 300, 4), (2, 400, 500, 2)]
+
+
 def _resample_oracle(pts, step, max_gap=None):
     """pts: sorted [(es, lon, lat)]; returns {tick_es: (lon, lat)}."""
     out = {}
