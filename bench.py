@@ -1,13 +1,20 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the registry's benched gates at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "throughput": {...}}
+   "queries": {name: sec, ...}, "sf": <sf>, "throughput": {...},
+   "cpus": <Spark default parallelism>, "nproc": <host cores>}
+
+The default suite is every ``__spark_entry__.gates()`` record not
+tagged "unbenched"; "noisy" ones keep the best of 3 runs.  The session
+is ``geomesa_spark.session.get_spark`` with its defaults, the engine
+configuration that tests and users get.
 
 Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] parallelism (default 32)
-  BENCH_QUERIES       comma-separated subset (default: headline set)
+  SPARK_GRAFT_CPUS    local[N] parallelism (get_spark; default all cores)
+  BENCH_QUERIES       comma-separated subset (default: the suite above)
+  BENCH_MIN_OF        runs per query, minimum kept (default 1)
 
 Each query is forced end-to-end with the noop sink (all columns
 materialized, nothing collected to the driver).
@@ -22,240 +29,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "z_encode",
-    "bbox_scan",
-    "pip_broadcast",
-    "pip_partitioned",
-    "line_intersects",
-    "poly_intersects",
-    "dwithin_proximity",
-    "knn",
-    "knn_df",
-    "tube_select",
-    "tube_line",
-    "point2point",
-    "tile_assign",
-    "density",
-    "temporal_density",
-    "text_profile",
-    "dedup_exact",
-    "minhash_lsh_xx",   # production xxhash path (md5 = oracle path)
-    "simhash64",        # production 64-bit path (16-bit = oracle path)
-    "ann_bruteforce",
-    "ann_lsh",
-    "ivf_topk",
-    "stream_replay",
-    # added in round 4's continuation (new operators; +~5 s on the
-    # suite total vs r3 — compare per-query, not totals)
-    "geohash_encode",
-    "shard_pack",
-    "sessionize",
-    "decontaminate",
-    "repetition_profile",
-    "histogram_job",
-    # fifth-session operators
-    "keyword_topk",
-    "mixture_sample",
-    "embed_quantize",
-    # sixth-session operators (corpus cleaning)
-    "line_dedup",
-    "pii_redact",
-    "chunk_docs",
-    "substring_dedup",
-    "ingest_dedup",
-    # seventh-session operators (temporal joins + stats)
-    "asof_join",
-    "interval_join",
-    "overlap_join",
-    "numeric_profile",
-    # eighth-session operators
-    "pq_topk",
-    "ivfpq_topk",
-    "url_normalize",
-    "domain_quota",
-    "ivfpq_rerank",
-    "hll_distinct",
-    # ninth-session operators
-    "s2_encode",
-    "s2_range",
-    "s2_bbox",
-    "epoch_shuffle",
-    "dsir_select",
-    # tenth-session operators
-    "pip_s2",
-    "semantic_dedup",
-    "cm_sketch",
-    "priority_sample",
-    "bloom_probe",
-    # eleventh-session operators
-    "track_metrics",
-    "track_summary",
-    "geofence",
-    "hotspot",
-    "cooccurrence",
-    "trips",
-    "od_flows",
-    "hotspot_st",
-    # twelfth-session operators
-    "stop_detect",
-    "dbscan",
-    "track_resample",
-    "co_travel",
-    "idw_surface",
-    "snap_nearest",
-    "morans_i",
-    "tile_pyramid",
-    "tile_cut_mvt",
-    "hausdorff",
-    "zonal_stats",
-    "hex_density",
-    "hex_hotspot",
-    "semantic_decon",
-    # wkb_roundtrip is gate-only: a per-row Python ingest-boundary
-    # codec (the Avro OCF precedent), not a query — its 12 s at
-    # sf0.1 measures the codec, which correctness gates already pin
-    "snapshot_diff",
-    "frequent_places",
-    "speed_filter",
-    "quadkey_tiles",
-    "zonal_raster",
-    "emerging_hotspots",
-    "st_dbscan",
-    "flow_field",
-    "ripley_k",
-    "knox_test",
-    "colocation",
-    "flow_anomaly",
-    "ripley_cross_k",
-    "space_time_k",
-    "geary_c",
-    "join_counts",
-    "map_algebra",
-    "focal_stats",
-    "raster_overview",
-    "terrain_slope",
-    "g_function",
-    "j_function",
-    "contour",
-    "spatial_split",
-    "areal_interp",
-    "flow_direction",
-    "flow_accumulation",
-    "watershed",
-    "cost_distance",
-    "route_paths",
-    "viewshed",
-    "sd_ellipse",
-    "quadrat",
-    "convex_hull",
-    "hull_moments",
-    "region_group",
-    "distance_surface",
-    "sen_slope",
-    "pagerank",
-    "triangles",
-    "k_core",
-    "trustrank",
-    "wcc",
-    "link_predict",
-    "hits",
-    # seventeenth-session operators (graph completion + retrieval
-    # fusion + vector tiles)
-    "mst",
-    "closeness",
-    "communities",
-    "assortativity",
-    "hybrid_search",
-]
 
-
-def extra_queries():
-    """Production-hash bench variants: the gate/oracle queries pin
-    portable md5 arithmetic so DuckDB can replicate them; the bench
-    defaults to the JVM-native fast paths (xxhash64 MinHash, 64-bit
-    SimHash) that a deployment would run. Timed only — correctness
-    of both paths is covered by gates + pytest recall tests."""
-    from geomesa_spark.operators import dedup as D
-
-    import __spark_entry__ as E
-
-    def _docs(spark, sf):
-        return spark.read.parquet(f"{sf}/documents.parquet")
-
-    def minhash_lsh_xx(spark, sf):
-        return D.minhash_lsh_pairs(
-            _docs(spark, sf), E.JACCARD_THRESHOLD, n=E.JACCARD_N,
-            hash_fn="xxhash",
-        )
-
-    def simhash64_q(spark, sf):
-        return D.simhash64(_docs(spark, sf))
-
-    def simhash_hamming(spark, sf):
-        return D.simhash_neardup_pairs(_docs(spark, sf))
-
-    def tile_cut_mvt(spark, sf):
-        # the vector-tile pipeline end-to-end: per-event triangle
-        # polygons -> z=7 Sutherland-Hodgman cut -> v2 winding ->
-        # MVT protobuf blobs (pytest-verified; no SQL oracle, the
-        # mercator ln/tan is libm)
-        from geomesa_spark.operators.tilecut import (
-            enforce_winding, tile_cut,
-        )
-        from geomesa_spark.sources.mvt import mvt_encode
-
-        from pyspark.sql import functions as F
-
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        tris = (
-            E._gate_tris(
-                E.geo_events(spark, sf).filter(
-                    F.col("event_id") % 3 == 0
-                )
-            )
-            .withColumnRenamed("gid", "geom_id")
-            # the cut is per-row interpreted-HOF compute: spread it
-            # (the source is one parquet file at small sf)
-            .repartition(2 * cpus)
-        )
-        cut = enforce_winding(tile_cut(tris, 7))
-        return mvt_encode(cut, kind="polygon")
-
-    return {
-        "minhash_lsh_xx": minhash_lsh_xx,
-        "simhash64": simhash64_q,
-        "simhash_hamming": simhash_hamming,
-        "tile_cut_mvt": tile_cut_mvt,
-    }
-
-
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("geomesa_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+def suite(gates) -> list[str]:
+    """The default query set: every gate not tagged "unbenched"."""
+    return [g.name for g in gates if "unbenched" not in g.tags]
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    names = os.environ.get("BENCH_QUERIES")
-    names = names.split(",") if names else HEADLINE
-
     import __spark_entry__ as E
+    from geomesa_spark.session import get_spark
 
-    spark = build_spark(cpus)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    gates = {g.name: g for g in E.gates()}
+    names = os.environ.get("BENCH_QUERIES")
+    names = names.split(",") if names else suite(gates.values())
+
+    spark = get_spark("geomesa_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**E.queries(), **extra_queries()}
 
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
@@ -265,12 +55,6 @@ def main() -> None:
     # load inflates single runs by up to ~40%, and the minimum is the
     # least-contaminated estimate when iterating locally
     min_of = max(1, int(os.environ.get("BENCH_MIN_OF", "1")))
-    # exchange-bound geometry-layer joins measure 6.7-10.6 s across
-    # paired runs of IDENTICAL code on this shared VM (NOTES_r4), and
-    # text_profile swings 0.7-2.5 s — for these, a single sample
-    # cannot distinguish a regression from co-tenant noise, so the
-    # recorded number is min-of-3 BY PROTOCOL (VERDICT r4 items 4/6)
-    MIN_OF_3 = {"line_intersects", "poly_intersects", "text_profile"}
     times: dict[str, float] = {}
     import gc
 
@@ -285,11 +69,11 @@ def main() -> None:
     )
 
     for name in names:
-        fn = queries[name]
+        g = gates[name]
         best = float("inf")
-        for _ in range(max(min_of, 3 if name in MIN_OF_3 else 1)):
+        for _ in range(max(min_of, 3 if "noisy" in g.tags else 1)):
             t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            g.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
         times[name] = round(best, 3)
         # inter-query hygiene, not speed-up: queries that cache or
@@ -323,7 +107,8 @@ def main() -> None:
                 n_docs / max(times.get("text_profile", 0), 1e-9), 1
             ),
         },
-        "cpus": cpus,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "nproc": os.cpu_count(),
     }
     spark.stop()
     print(json.dumps(out))

@@ -46,35 +46,23 @@ POLYS = [
 
 
 def session(cpus: int):
-    from pyspark.sql import SparkSession
+    from geomesa_spark.session import get_spark
 
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"scaling-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
-        .config("spark.sql.warehouse.dir", WAREHOUSE)
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-    )
+    conf = {"spark.sql.warehouse.dir": WAREHOUSE}
     evdir = os.environ.get("SPARK_GRAFT_SCALE_EVLOG")
     if evdir:
         # scripts/scaling_breakdown.py parses the stage/task metrics
         # of the TIMED jobs into the compute-vs-exchange attribution
-        b = (
-            b.config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", evdir)
-            .config("spark.eventLog.compress", "false")
-            .config("spark.eventLog.rolling.enabled", "false")
-        )
-    spark = b.getOrCreate()
-    # ship the engine to python workers (the spark-submit --py-files
-    # story): pandas-UDF closures reference geomesa_spark modules,
-    # which only resolved by accident when the cwd WAS the repo
-    from geomesa_spark.session import package_zip
-
-    spark.sparkContext.addPyFile(package_zip())
-    return spark
+        conf.update({
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": evdir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        })
+    return get_spark(
+        f"scaling-{cpus}", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus * 2, 16), extra_conf=conf,
+    )
 
 
 def build_corpus(n_docs: int) -> None:

@@ -8,9 +8,11 @@ DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import tempfile
+import time
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -23,7 +25,10 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     this archive — the packaging story required by north_rule.  The
     archive is named by a digest of its members (relative path +
     bytes), so a tree only ever reuses an archive holding exactly its
-    own sources, even when several checkouts share `dest_dir`.
+    own sources, even when several checkouts share `dest_dir`.  Reuse
+    refreshes the archive's mtime; writing a new one deletes the other
+    archives in `dest_dir` untouched for a day, so the set stays
+    bounded while live checkouts keep theirs.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     members = []
@@ -44,8 +49,11 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     out = os.path.join(
         dest_dir, f"geomesa_spark_pkg-{digest.hexdigest()[:16]}.zip"
     )
-    if os.path.exists(out):
+    try:
+        os.utime(out)
         return out
+    except FileNotFoundError:
+        pass
     # per-process temp file + atomic replace: a fixed .tmp name let
     # two concurrent sessions interleave writes and publish a torn
     # archive to every executor
@@ -59,6 +67,13 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+    stale = time.time() - 86400
+    for old in glob.glob(os.path.join(dest_dir, "geomesa_spark_pkg-*.zip")):
+        try:
+            if os.path.getmtime(old) < stale:
+                os.unlink(old)
+        except FileNotFoundError:
+            pass  # another session removed it first
     return out
 
 

@@ -117,3 +117,24 @@ def test_package_zip_is_keyed_by_source_contents(tmp_path):
     assert _zip_members(zb)["geomesa_spark/session.py"].endswith(
         b"# copy b\n"
     )
+
+
+def test_package_zip_prunes_day_old_archives(tmp_path):
+    """Writing a new archive deletes other archives untouched for a
+    day and keeps fresh ones (a live checkout's); reuse refreshes the
+    archive's mtime so a live checkout's archive never goes stale."""
+    day_old = os.path.getmtime(tmp_path) - 2 * 86400
+    old = tmp_path / "geomesa_spark_pkg-0000000000000000.zip"
+    fresh = tmp_path / "geomesa_spark_pkg-1111111111111111.zip"
+    other = tmp_path / "unrelated.zip"
+    for p in (old, fresh, other):
+        p.write_bytes(b"x")
+    for p in (old, other):
+        os.utime(p, (day_old, day_old))
+    out = package_zip(str(tmp_path))
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [os.path.basename(out), fresh.name, other.name]
+    )
+    os.utime(out, (day_old, day_old))
+    assert package_zip(str(tmp_path)) == out
+    assert os.path.getmtime(out) > day_old + 86400
