@@ -3674,6 +3674,28 @@ def gates() -> list[Gate]:
 
     add("co_travel_stream_twin", co_travel_stream_twin_gate, "unbenched")
 
+    def flow_stream_twin_gate(spark, sf):
+        """streaming/flow.py replay: three _batch_flow steps threading
+        the field and last-fix state — the accumulated field equals
+        flow_field on the full corpus (the module's field parity
+        contract), so the oracle is the flow_field SQL.  The stream
+        orders a track's fixes by epoch second alone; no user has two
+        events in one second at sf0.01, so flow_field's event_id
+        tiebreak never decides."""
+        from geomesa_spark.streaming.flow import _batch_flow, _with_means
+
+        field = last = None
+        for batch in _es_tertiles(_cooc_pts(spark, sf)):
+            _, field, last = _batch_flow(
+                batch, field, last, "user_id", "es", "lon", "lat", 5,
+                1_000_000, 86400, None,
+            )
+            field = field.localCheckpoint(eager=True)
+            last = last.localCheckpoint(eager=True)
+        return _with_means(field)
+
+    add("flow_stream_twin", flow_stream_twin_gate, "unbenched")
+
     return g
 
 
@@ -8649,5 +8671,6 @@ FROM tt
         + o["geofence"] + ")"
     )
     o["co_travel_stream_twin"] = o["co_travel"]
+    o["flow_stream_twin"] = o["flow_field"]
 
     return o

@@ -535,18 +535,12 @@ def _fixed(v):
     return F.transform(v, lambda x: F.floor(x.cast("double") * F.lit(FIXED_SCALE)).cast("long"))
 
 
-def _dot(a, b, dim: int | None = None):
-    """Fixed-point dot product. The HOF aggregate(zip_with) form is
-    the fast path: it compiles to a tight loop. (A flat
-    a[0]*b[0]+...+a[d-1]*b[d-1] expression, tried via `dim`, measured
-    3.5x SLOWER — the 2*dim-node tree trips the codegen method-size
-    fallback into interpreted eval. Kept only for experimentation.)
+def _dot(a, b):
+    """Fixed-point dot product as aggregate(zip_with): it compiles to
+    a tight loop. (A flat a[0]*b[0]+...+a[d-1]*b[d-1] expression
+    measured 3.5x slower — the 2*dim-node tree trips the codegen
+    method-size fallback into interpreted eval.)
     """
-    if dim is not None:
-        e = a[0] * b[0]
-        for i in range(1, dim):
-            e = e + a[i] * b[i]
-        return e
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, x: s + x
     )
@@ -557,7 +551,6 @@ def embedding_neardup_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine >= threshold over an embedding column.
 
@@ -569,7 +562,7 @@ def embedding_neardup_pairs(
     """
     v = emb.select(
         F.col(id_col).alias("id"), _fixed(F.col(vec_col)).alias("fv")
-    ).withColumn("nrm", _dot(F.col("fv"), F.col("fv"), dim))
+    ).withColumn("nrm", _dot(F.col("fv"), F.col("fv")))
     # materialization barrier: without it the fixed-point transform
     # inlines into every one of the dim products of the pair join
     v = v.repartition("id")
@@ -581,7 +574,7 @@ def embedding_neardup_pairs(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
             (
-                _dot(F.col("a.fv"), F.col("b.fv"), dim)
+                _dot(F.col("a.fv"), F.col("b.fv"))
                 / F.sqrt(F.col("a.nrm").cast("double") * F.col("b.nrm").cast("double"))
             ).alias("cos"),
         )

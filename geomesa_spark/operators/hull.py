@@ -50,9 +50,12 @@ __all__ = [
 ]
 
 
-def _chain(pts: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Monotone chain on deduped int pairs: CCW, strict turns,
-    starting at the lexicographic minimum."""
+def _chain(pts: list[tuple[float, float]]) -> list[tuple[float, float]]:
+    """Monotone chain on deduped pairs: CCW, strict turns, starting
+    at the lexicographic minimum.  Int pairs (``convex_hull``) turn
+    exactly; finite float pairs (``simplify.track_hulls``) turn in
+    IEEE doubles.  One distinct point yields one vertex, a collinear
+    set its two extremes."""
     pts = sorted(set(pts))
     if len(pts) <= 1:
         return pts

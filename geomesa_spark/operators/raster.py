@@ -117,21 +117,17 @@ def raster_vector_join(
     res_bits: int,
     cell_col: str = "cell",
     cell_bits: int = C.XY_BITS,
-    broadcast_tiles: bool = True,
 ) -> DataFrame:
     """Join points to the tile covering them at `res_bits`.
 
-    Equi-join on the parent cell — broadcast when the tile layer for
-    the query region is small (typical: one resolution × region
-    cover), else a cell-partitioned shuffle join, same skew story as
-    the PIP join."""
+    Equi-join on the parent cell with the tile level broadcast: the
+    caller passes the tile layer for the query region (typically one
+    resolution × region cover), which must fit in a broadcast."""
     t = tiles.filter(F.col("res_bits") == res_bits).select(
         F.col("cell").alias("tile_cell"), "px", "py", "tile"
     )
-    if broadcast_tiles:
-        t = F.broadcast(t)
     pts = tile_assignments(points, res_bits, cell_col, cell_bits)
-    return pts.join(t, "tile_cell", "inner")
+    return pts.join(F.broadcast(t), "tile_cell", "inner")
 
 
 def synth_tiles(

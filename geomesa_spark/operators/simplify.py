@@ -32,7 +32,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["simplify_tracks", "rdp_keep_np", "radial_keep_np", "hull_np", "track_hulls"]
+from geomesa_spark.operators.hull import _chain
+
+__all__ = ["simplify_tracks", "rdp_keep_np", "radial_keep_np", "track_hulls"]
 
 
 def rdp_keep_np(lon: np.ndarray, lat: np.ndarray, tol: float) -> np.ndarray:
@@ -132,49 +134,6 @@ def simplify_tracks(
     return df.groupBy(track_col).applyInPandas(simplify, schema=schema)
 
 
-def hull_np(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    """Andrew monotone-chain convex hull: indices into the input,
-    CCW, starting at the lexicographically smallest (lon, lat)
-    vertex. Collinear boundary points are EXCLUDED (strict turns) —
-    the minimal vertex set. Duplicates collapse. Returns 1 index for
-    a single distinct point, 2 for a degenerate (collinear) set."""
-    n = len(lon)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    order = np.lexsort((lat, lon))
-    pts = np.column_stack([lon, lat])[order]
-    keep_first = np.ones(len(pts), dtype=bool)
-    keep_first[1:] = (np.diff(pts, axis=0) != 0).any(axis=1)
-    order = order[keep_first]
-    pts = pts[keep_first]
-    m = len(pts)
-    if m == 1:
-        return order[:1].astype(np.int64)
-    if m == 2:
-        return order.astype(np.int64)
-
-    def chain(idx_range):
-        out: list[int] = []
-        for i in idx_range:
-            while len(out) >= 2:
-                ox, oy = pts[out[-2]]
-                ax, ay = pts[out[-1]]
-                bx, by = pts[i]
-                if (ax - ox) * (by - oy) - (ay - oy) * (bx - ox) <= 0:
-                    out.pop()
-                else:
-                    break
-            out.append(i)
-        return out
-
-    lower = chain(range(m))
-    upper = chain(range(m - 1, -1, -1))
-    hull = lower[:-1] + upper[:-1]
-    if len(hull) < 3:  # fully collinear set
-        return order[[0, m - 1]].astype(np.int64)
-    return order[np.array(hull)].astype(np.int64)
-
-
 def track_hulls(
     df: DataFrame,
     track_col: str,
@@ -186,7 +145,8 @@ def track_hulls(
     tracks).  Reference parity: GeoTools' client-side ConvexHull per
     feature collection; here it is one applyInPandas on the track
     key (the simplify_tracks escape-hatch contract: per-group
-    sequential algorithm, numpy cross products, no per-row Python).
+    sequential algorithm) running ``hull._chain``, the monotone chain
+    ``convex_hull`` uses, on the (lon, lat) float pairs.
 
     Deterministic output: the hull starts at the lexicographically
     smallest vertex, runs CCW, strict turns only (collinear boundary
@@ -194,15 +154,23 @@ def track_hulls(
     closed POLYGON for >= 3 hull vertices, LINESTRING for a
     collinear track, POINT for a stationary one.  `area` is the
     shoelace area in squared degrees (0 for the degenerate kinds).
+    A NULL or NaN coordinate raises.
 
     Returns (track, n_points, n_hull, hull_wkt, area)."""
 
     def hull(pdf: pd.DataFrame) -> pd.DataFrame:
         lon = pdf[lon_col].to_numpy(dtype=np.float64)
         lat = pdf[lat_col].to_numpy(dtype=np.float64)
-        idx = hull_np(lon, lat)
-        hx, hy = lon[idx], lat[idx]
-        if len(idx) >= 3:
+        if np.isnan(lon).any() or np.isnan(lat).any():
+            # NaN breaks the chain's sort and set dedup (NaN != NaN),
+            # so the hull would depend on row order
+            raise ValueError(
+                f"track_hulls: NULL or NaN coordinate in track "
+                f"{pdf[track_col].iloc[0]!r}"
+            )
+        verts = _chain(list(zip(lon.tolist(), lat.tolist())))
+        hx, hy = np.array(verts, dtype=np.float64).T
+        if len(verts) >= 3:
             ring_x = np.append(hx, hx[0])
             ring_y = np.append(hy, hy[0])
             wkt = "POLYGON ((" + ", ".join(
@@ -211,7 +179,7 @@ def track_hulls(
             area = 0.5 * float(
                 np.sum(hx * np.roll(hy, -1) - np.roll(hx, -1) * hy)
             )
-        elif len(idx) == 2:
+        elif len(verts) == 2:
             wkt = f"LINESTRING ({hx[0]!r} {hy[0]!r}, {hx[1]!r} {hy[1]!r})"
             area = 0.0
         else:
@@ -221,7 +189,7 @@ def track_hulls(
             {
                 "track": [pdf[track_col].iloc[0]],
                 "n_points": [len(pdf)],
-                "n_hull": [len(idx)],
+                "n_hull": [len(verts)],
                 "hull_wkt": [wkt],
                 "area": [area],
             }

@@ -541,7 +541,8 @@ def pip_join_bucketed(
     # composite bucket key; both tables must agree — on PRESENCE and
     # on the COUNT (points salted 8-ways against a 4-way cover would
     # pass a presence-only check yet silently drop every point whose
-    # psalt >= 4: no cover replica to join)
+    # psalt >= 4: no cover replica to join). Both writers record the
+    # count in TBLPROPERTIES, so a missing value raises too.
     salted = "psalt" in pts.columns
     if salted != ("psalt" in cover.columns):
         raise ValueError(
@@ -553,7 +554,7 @@ def pip_join_bucketed(
 
         sp_ = table_property(spark, points_table, "geomesa.salt_buckets")
         sc_ = table_property(spark, cover_table, "geomesa.salt_buckets")
-        if sp_ is not None and sc_ is not None and sp_ != sc_:
+        if sp_ is None or sp_ != sc_:
             raise ValueError(
                 f"salt_buckets mismatch: {points_table}={sp_} vs "
                 f"{cover_table}={sc_} — rewrite both with the same value"

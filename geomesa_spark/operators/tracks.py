@@ -914,7 +914,6 @@ def flow_anomaly(
     fp_scale: int = 1_000_000,
     max_gap_s: int | None = None,
     tiebreak_col: str | None = None,
-    broadcast_field: bool | None = None,
 ) -> DataFrame:
     """Score every leg against its cell's aggregate motion — the
     anomalous-mover detector on top of ``flow_field``: a vessel
@@ -926,10 +925,9 @@ def flow_anomaly(
     never vouches for itself (and a cell's only leg scores NULL
     instead of a perfect 1.0).  Costs the flow_field window + ONE
     join of legs against the bounded field frame (4^bits rows —
-    broadcast by default up to bits=10, shuffle join above;
-    `broadcast_field` overrides).  Determinism: the scores are the
-    shared ``FLOW_COS_SQL`` / ``FLOW_MAGR_SQL`` strings over exact
-    int64 leg and cell sums.
+    broadcast up to bits=10, shuffle join above).  Determinism: the
+    scores are the shared ``FLOW_COS_SQL`` / ``FLOW_MAGR_SQL``
+    strings over exact int64 leg and cell sums.
 
     Returns (track, es, x, y, dt_s, fp_dx, fp_dy, n_cell_legs,
     cos_sim, speed_ratio) — one row per leg, es = the leg's origin
@@ -945,9 +943,7 @@ def flow_anomaly(
         F.sum("_fdx").alias("_sx"),
         F.sum("_fdy").alias("_sy"),
     )
-    if broadcast_field is None:
-        broadcast_field = bits <= 10
-    f = F.broadcast(field) if broadcast_field else field
+    f = F.broadcast(field) if bits <= 10 else field
     fmt = dict(fx="_fdx", fy="_fdy", SX="_sx", SY="_sy",
                dt="_dt", SD="_sd")
     return (

@@ -12,10 +12,10 @@ Scale design: NEVER all track pairs — the caller supplies candidate
 pairs (from `co_travel`, `eps_pairs` over track centroids, an OD-cell
 match, …) and a bounded point set per track (resampled every k-th
 tick, or `simplify_tracks` output).  The per-pair cross term is then
-|A|·|B| with both factors caller-bounded, produced by two equi-joins
-on the pair key — no cartesian over the corpus.  Both directions run
-in ONE plan: the (pair, side, probe-point) min fold, then the pair
-max — two partial-aggregated shuffles.
+|A|·|B| with both factors caller-bounded: each track folds to one
+coordinate-array row, two equi-joins on the pair key bring both
+tracks' arrays together — no cartesian over the corpus — and one
+numpy sweep per pair computes both directions.
 
 Determinism: planar squared distances folded through min/max only
 (exact IEEE — the stop_detect/dwithin gate convention); the final
@@ -29,8 +29,6 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_spark.functions import geometry_sql as GS
-
 __all__ = ["hausdorff_join", "dtw_join", "frechet_join"]
 
 
@@ -42,7 +40,6 @@ def hausdorff_join(
     lat_col: str = "lat",
     a_col: str = "track_a",
     b_col: str = "track_b",
-    impl: str = "packed",
 ) -> DataFrame:
     """Symmetric discrete Hausdorff distance per candidate pair.
 
@@ -50,86 +47,17 @@ def hausdorff_join(
     candidates. Returns (track_a, track_b, hausdorff) in the
     coordinate units (planar degrees for lon/lat).
 
-    impl='packed' (default): each track folds to ONE coordinate-array
-    row (the dtw_join shape); the |A|x|B| distance matrix runs as a
-    per-pair numpy sweep inside an Arrow-batched pandas UDF.  The
-    giant intermediate of the relational form — |pairs|·|A|·|B|
-    joined rows pushed through a hash aggregate keyed on (pair, side,
-    probe point) — never materializes, and the arithmetic is the
-    identical IEEE sequence (dx*dx + dy*dy, min/max folds, one final
-    correctly-rounded sqrt), so results are bit-equal.
-    impl='join': the pure-JVM two-equi-join + min/max aggregate form
-    (no Python anywhere in the physical plan) — same values, pay the
-    |A|·|B| hash-aggregate; the right choice when Arrow is
-    unavailable or track arrays would be huge."""
-    if impl not in ("packed", "join"):
-        raise ValueError(f"unknown impl {impl!r}")
-    if impl == "packed":
-        return _hausdorff_packed(
-            pts, pairs, track_col, lon_col, lat_col, a_col, b_col
-        )
-    p = pts.select(
-        F.col(track_col).alias("_t"),
-        F.col(lon_col).alias("_x"),
-        F.col(lat_col).alias("_y"),
-    )
-    pr = pairs.select(F.col(a_col).alias("ta"), F.col(b_col).alias("tb"))
-    # side 0: probe = A's points, target = B; side 1: the reverse.
-    # One union keeps both directions in a single min/max pipeline.
-    probes = pr.join(
-        p.withColumnRenamed("_t", "ta"), "ta"
-    ).select(
-        "ta", "tb", F.lit(0).alias("side"),
-        F.col("_x").alias("px"), F.col("_y").alias("py"),
-    ).unionByName(
-        pr.join(p.withColumnRenamed("_t", "tb"), "tb").select(
-            "ta", "tb", F.lit(1).alias("side"),
-            F.col("_x").alias("px"), F.col("_y").alias("py"),
-        )
-    )
-    targets = pr.join(
-        p.withColumnRenamed("_t", "tb"), "tb"
-    ).select(
-        "ta", "tb", F.lit(0).alias("side"),
-        F.col("_x").alias("tx"), F.col("_y").alias("ty"),
-    ).unionByName(
-        pr.join(p.withColumnRenamed("_t", "ta"), "ta").select(
-            "ta", "tb", F.lit(1).alias("side"),
-            F.col("_x").alias("tx"), F.col("_y").alias("ty"),
-        )
-    )
-    d2 = GS.point_dist2_col(
-        F.col("px"), F.col("py"), F.col("tx"), F.col("ty")
-    )
-    inner = (
-        probes.join(targets, ["ta", "tb", "side"])
-        .groupBy("ta", "tb", "side", "px", "py")
-        .agg(F.min(d2).alias("_min_d2"))
-    )
-    return (
-        inner.groupBy(F.col("ta").alias(a_col), F.col("tb").alias(b_col))
-        .agg(F.sqrt(F.max("_min_d2")).alias("hausdorff"))
-    )
-
-
-def _hausdorff_packed(
-    pts: DataFrame,
-    pairs: DataFrame,
-    track_col: str,
-    lon_col: str,
-    lat_col: str,
-    a_col: str,
-    b_col: str,
-) -> DataFrame:
-    """Packed-array Hausdorff: one row per track (coordinate arrays),
-    two equi-joins onto the pair table, then a scalar Arrow pandas UDF
-    sweeps the |A|x|B| matrix per pair with numpy broadcasting.
+    Each track folds to ONE coordinate-array row (the dtw_join
+    shape), picked up by two equi-joins on the pair key; the |A|x|B|
+    distance matrix runs as a per-pair numpy sweep inside an
+    Arrow-batched pandas UDF, so no |pairs|·|A|·|B| joined
+    intermediate ever materializes.
 
     No sort_array: Hausdorff is a SET distance, so point order is
     irrelevant — only the x/y correspondence matters, which the struct
-    collect preserves.  Arithmetic is bit-equal to the relational
-    impl='join' path: float64 dx*dx + dy*dy, min/max folds (exact
-    selections, order-free), one correctly-rounded sqrt at the end."""
+    collect preserves.  Arithmetic: float64 dx*dx + dy*dy, min/max
+    folds (exact selections, order-free), one correctly-rounded sqrt
+    at the end."""
     import math
 
     import numpy as np
@@ -200,8 +128,8 @@ def _packed_pairs(
     """Candidate pairs carrying both tracks' coordinate arrays: each
     track folds to ONE row (sort_array over (ts, tiebreak) structs —
     deterministic order without a window), picked up by two
-    equi-joins.  Shared by dtw_join / frechet_join (hausdorff_join's
-    packed path predates it with extra options)."""
+    equi-joins.  Shared by dtw_join / frechet_join (hausdorff_join
+    packs without the sort: a set distance needs no point order)."""
     tb = tiebreak_col if tiebreak_col else ts_col
     packed = (
         pts.groupBy(F.col(track_col).alias("_t"))

@@ -89,9 +89,9 @@ def _epoch_upper(dt: datetime, exclusive: bool) -> int:
     return floor_e if exclusive else floor_e + 1
 
 
-def _cell_is_stored(df: DataFrame, cell_col: str) -> bool:
-    """True iff `cell_col` is a physical column of a scan leaf (vs a
-    derived expression).
+def _stored_columns(df: DataFrame) -> set[str]:
+    """Names of the physical columns of `df`'s scan leaves (vs derived
+    expressions).
 
     Range predicates on a *stored* cell column are cheap long
     comparisons that reach the parquet reader and prune row groups
@@ -103,9 +103,11 @@ def _cell_is_stored(df: DataFrame, cell_col: str) -> bool:
     """
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            if cell_col in list(leaves.apply(i).schema().fieldNames()):
-                return True
+        return {
+            name
+            for i in range(leaves.size())
+            for name in leaves.apply(i).schema().fieldNames()
+        }
     except Exception:
         # no _jdf (Spark Connect) or py4j failure: range pruning is
         # silently unavailable — warn ONCE so a degraded deployment
@@ -121,7 +123,7 @@ def _cell_is_stored(df: DataFrame, cell_col: str) -> bool:
                 "to exact lon/lat/dtg predicates only",
                 stacklevel=2,
             )
-    return False
+    return set()
 
 
 _WARNED_NO_JDF = False
@@ -181,18 +183,17 @@ def scan(
     id_col: str = "doc_id",
     cell_bits: int = C.XY_BITS,
     max_ranges: int = V.DEFAULT_MAX_RANGES,
-    cell_ranges: bool | None = None,
     z3_col: str = "z3",
 ) -> DataFrame:
     """Apply the spec as pushable predicates + residual refine.
 
-    `cell_ranges`: force cell-range predicates on/off; default None
-    auto-enables them only when `cell_col` is a stored column (see
-    `_cell_is_stored`).
+    Z2 cell-range and Z3 range predicates are emitted only for a
+    `cell_col` / `z3_col` that is a stored column (see
+    `_stored_columns`).
     """
     out = df
-    if cell_ranges is None:
-        cell_ranges = cell_col in df.columns and _cell_is_stored(df, cell_col)
+    indexed = {cell_col, z3_col} & set(df.columns)
+    stored = _stored_columns(df) & indexed if indexed else set()
 
     # --- ID scan (RecordIdxStrategy analog) ---
     if spec.ids is not None:
@@ -268,7 +269,7 @@ def scan(
         # cell ranges: redundant with lon/lat semantically, but they
         # align with the table's cell sort order so Parquet row-group
         # stats skip (the Z2 range-scan analog)
-        if cell_ranges:
+        if cell_col in stored:
             ranges = []
             for bx in boxes:
                 ranges.extend(
@@ -287,14 +288,8 @@ def scan(
         bbox is not None
         and spec.t0 is not None
         and spec.t1 is not None
-        and z3_col in df.columns
-        and _cell_is_stored(df, z3_col)
+        and z3_col in stored
     ):
-        # gated on the z3 column being STORED regardless of the
-        # cell_ranges override: hundreds of OR'd BETWEENs inlining a
-        # derived 62-bit interleave expression is the documented
-        # Janino/codegen blowup, and derived columns can never prune
-        # I/O anyway
         e0 = _epoch_lower(spec.t0)
         e1 = _epoch_upper(spec.t1, spec.t1_exclusive)  # exclusive bound
         W = C.SECONDS_IN_WEEK

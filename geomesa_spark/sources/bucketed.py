@@ -83,7 +83,7 @@ def write_bucketed(
 
 
 def table_property(spark: SparkSession, table_name: str, key: str) -> str | None:
-    """One TBLPROPERTIES value, or None when unset (legacy table)."""
+    """One TBLPROPERTIES value, or None when unset."""
     rows = spark.sql(f"SHOW TBLPROPERTIES {table_name}").collect()
     for r in rows:
         if r.key == key:

@@ -66,6 +66,102 @@ def _to_es(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("_es_n", es)
 
 
+def _batch_flow(
+    batch_df: DataFrame,
+    prev_field: DataFrame | None,
+    prev_last: DataFrame | None,
+    track_col: str,
+    ts_col: str,
+    lon_col: str,
+    lat_col: str,
+    bits: int,
+    fp_scale: int,
+    max_gap_s: int | None,
+    last_ttl_s: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One micro-batch of ``flow_stream`` without its I/O: the legs
+    that close in this batch, the field merged with their sums, and
+    each track's newest fix.  Returns (legs, field, last)."""
+    pts = _to_es(batch_df, ts_col).select(
+        F.col(track_col).alias("_t"),
+        F.col("_es_n").alias("_e"),
+        F.col(lon_col).alias("_x"),
+        F.col(lat_col).alias("_y"),
+    )
+    if prev_last is not None:
+        pts = pts.unionByName(
+            prev_last.select(
+                F.col("track").alias("_t"), F.col("es").alias("_e"),
+                F.col("lon").alias("_x"), F.col("lat").alias("_y"),
+            )
+        )
+    pts = pts.localCheckpoint(eager=False)
+    # legs close over carried ∪ batch: the carried fix had no
+    # successor in its own batch, so every leg here is new
+    legs = _cell_legs(
+        pts, "_t", "_e", "_x", "_y", bits, fp_scale, max_gap_s,
+        tiebreak_col=None,
+    ).localCheckpoint(eager=False)
+    delta = legs.groupBy("x", "y").agg(
+        F.count("*").cast("long").alias("n_legs"),
+        F.sum("_dt").cast("long").alias("sum_dt_s"),
+        F.sum("_fdx").alias("sum_fp_dx"),
+        F.sum("_fdy").alias("sum_fp_dy"),
+    )
+    if prev_field is not None:
+        field = (
+            prev_field.select(
+                "x", "y",
+                F.col("n_legs").alias("_pn"),
+                F.col("sum_dt_s").alias("_pd"),
+                F.col("sum_fp_dx").alias("_px"),
+                F.col("sum_fp_dy").alias("_py"),
+            )
+            .join(delta, ["x", "y"], "full_outer")
+            .select(
+                "x", "y",
+                *[
+                    (F.coalesce(F.col(a), F.lit(0))
+                     + F.coalesce(F.col(b), F.lit(0)))
+                    .cast("long").alias(b)
+                    for a, b in (
+                        ("_pn", "n_legs"), ("_pd", "sum_dt_s"),
+                        ("_px", "sum_fp_dx"), ("_py", "sum_fp_dy"),
+                    )
+                ],
+            )
+        )
+    else:
+        field = delta
+
+    # carried state: each track's newest fix (max by es; equal
+    # timestamps within one batch are the caller's contract)
+    last = (
+        pts.groupBy(F.col("_t").alias("track"))
+        .agg(
+            F.max(
+                F.struct(
+                    F.col("_e").alias("es"),
+                    F.col("_x").alias("lon"),
+                    F.col("_y").alias("lat"),
+                )
+            ).alias("_m")
+        )
+        .select(
+            "track", F.col("_m.es").alias("es"),
+            F.col("_m.lon").alias("lon"), F.col("_m.lat").alias("lat"),
+        )
+    )
+    if last_ttl_s is not None:
+        horizon = F.broadcast(last.agg(F.max("es").alias("_hz")))
+        last = (
+            last.crossJoin(horizon)
+            .filter(F.col("es") >= F.col("_hz") - F.lit(int(last_ttl_s)))
+            .drop("_hz")
+        )
+    return legs, field.select(*_FIELD_COLS), last
+
+
 def flow_stream(
     stream: DataFrame,
     track_col: str,
@@ -97,61 +193,14 @@ def flow_stream(
     alert_io = ParquetVersionedIO(spark, alerts_dir)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        prev_field = field_io.read_latest(before=batch_id)
-        prev_last = last_io.read_latest(before=batch_id)
-        pts = _to_es(batch_df, ts_col).select(
-            F.col(track_col).alias("_t"),
-            F.col("_es_n").alias("_e"),
-            F.col(lon_col).alias("_x"),
-            F.col(lat_col).alias("_y"),
+        legs, field, last = _batch_flow(
+            batch_df,
+            field_io.read_latest(before=batch_id),
+            last_io.read_latest(before=batch_id),
+            track_col, ts_col, lon_col, lat_col, bits, fp_scale,
+            max_gap_s, last_ttl_s,
         )
-        if prev_last is not None:
-            pts = pts.unionByName(
-                prev_last.select(
-                    F.col("track").alias("_t"), F.col("es").alias("_e"),
-                    F.col("lon").alias("_x"), F.col("lat").alias("_y"),
-                )
-            )
-        pts = pts.localCheckpoint(eager=False)
-        # legs close over carried ∪ batch: the carried fix had no
-        # successor in its own batch, so every leg here is new
-        legs = _cell_legs(
-            pts, "_t", "_e", "_x", "_y", bits, fp_scale, max_gap_s,
-            tiebreak_col=None,
-        ).localCheckpoint(eager=False)
-        delta = legs.groupBy("x", "y").agg(
-            F.count("*").cast("long").alias("n_legs"),
-            F.sum("_dt").cast("long").alias("sum_dt_s"),
-            F.sum("_fdx").alias("sum_fp_dx"),
-            F.sum("_fdy").alias("sum_fp_dy"),
-        )
-        if prev_field is not None:
-            p = prev_field
-            merged = (
-                p.select(
-                    "x", "y",
-                    F.col("n_legs").alias("_pn"),
-                    F.col("sum_dt_s").alias("_pd"),
-                    F.col("sum_fp_dx").alias("_px"),
-                    F.col("sum_fp_dy").alias("_py"),
-                )
-                .join(delta, ["x", "y"], "full_outer")
-                .select(
-                    "x", "y",
-                    *[
-                        (F.coalesce(F.col(a), F.lit(0))
-                         + F.coalesce(F.col(b), F.lit(0)))
-                        .cast("long").alias(b)
-                        for a, b in (
-                            ("_pn", "n_legs"), ("_pd", "sum_dt_s"),
-                            ("_px", "sum_fp_dx"), ("_py", "sum_fp_dy"),
-                        )
-                    ],
-                )
-            )
-        else:
-            merged = delta
-        field_io.write_version(merged.select(*_FIELD_COLS), batch_id)
+        field_io.write_version(field, batch_id)
 
         # score this batch's legs against the COMMITTED field —
         # leave-one-out, identical strings to the batch operator
@@ -185,37 +234,7 @@ def flow_stream(
             (F.col("n_cell_legs") >= F.lit(int(min_support))) & cond
         ).withColumn("batch_id", F.lit(int(batch_id)))
         alert_io.write_version(alerts, batch_id)
-
-        # carried state: each track's newest fix (max by es; equal
-        # timestamps within one batch are the caller's contract)
-        newest = (
-            pts.groupBy(F.col("_t").alias("track"))
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("_e").alias("es"),
-                        F.col("_x").alias("lon"),
-                        F.col("_y").alias("lat"),
-                    )
-                ).alias("_m")
-            )
-            .select(
-                "track", F.col("_m.es").alias("es"),
-                F.col("_m.lon").alias("lon"), F.col("_m.lat").alias("lat"),
-            )
-        )
-        if last_ttl_s is not None:
-            horizon = F.broadcast(
-                newest.agg(F.max("es").alias("_hz"))
-            )
-            newest = (
-                newest.crossJoin(horizon)
-                .filter(
-                    F.col("es") >= F.col("_hz") - F.lit(int(last_ttl_s))
-                )
-                .drop("_hz")
-            )
-        last_io.write_version(newest, batch_id)
+        last_io.write_version(last, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(step)
@@ -229,6 +248,17 @@ def flow_stream(
     return writer.start()
 
 
+def _with_means(field: DataFrame) -> DataFrame:
+    """Field state plus its mean velocity columns, as ``flow_field``
+    returns them (same FLOW_MEAN_SQL division)."""
+    return field.withColumns(
+        {
+            "u_fp": F.expr(FLOW_MEAN_SQL.format(X="sum_fp_dx", D="sum_dt_s")),
+            "v_fp": F.expr(FLOW_MEAN_SQL.format(X="sum_fp_dy", D="sum_dt_s")),
+        }
+    )
+
+
 def read_flow_field_now(spark: SparkSession, state_dir: str) -> DataFrame:
     """Live view: the accumulated flow field — equal to the batch
     ``flow_field`` over every point seen so far for an in-order
@@ -238,12 +268,7 @@ def read_flow_field_now(spark: SparkSession, state_dir: str) -> DataFrame:
     field = ParquetVersionedIO(spark, f"{state_dir}/field").read_latest()
     if field is None:
         raise ValueError(f"no committed field state under {state_dir}")
-    return field.withColumns(
-        {
-            "u_fp": F.expr(FLOW_MEAN_SQL.format(X="sum_fp_dx", D="sum_dt_s")),
-            "v_fp": F.expr(FLOW_MEAN_SQL.format(X="sum_fp_dy", D="sum_dt_s")),
-        }
-    )
+    return _with_means(field)
 
 
 def read_flow_alerts(spark: SparkSession, alerts_dir: str) -> DataFrame:

@@ -333,7 +333,7 @@ def test_salt_buckets_mismatch_raises(spark, tmp_path_factory):
     """Join-family review regression: a presence-only salt guard let
     8-way points join a 4-way cover — points with psalt in [4,8)
     silently vanished. The written salt count is recorded in
-    TBLPROPERTIES and compared."""
+    TBLPROPERTIES and compared; a missing count raises."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -360,9 +360,14 @@ def test_salt_buckets_mismatch_raises(spark, tmp_path_factory):
                          clear_stale_location=True)
     with _pytest.raises(ValueError, match="salt_buckets mismatch"):
         pip_join_bucketed(spark, "mm_pts", "mm_cov", polys, bits=6)
-    # matching counts still work end-to-end
     write_cover_bucketed(polys, "mm_cov", bits=6, n_buckets=4, salt_buckets=8,
                          clear_stale_location=True)
+    # a table without the recorded count cannot be checked: raise
+    spark.sql("ALTER TABLE mm_pts UNSET TBLPROPERTIES ('geomesa.salt_buckets')")
+    with _pytest.raises(ValueError, match="salt_buckets mismatch"):
+        pip_join_bucketed(spark, "mm_pts", "mm_cov", polys, bits=6)
+    # matching counts still work end-to-end
+    spark.sql("ALTER TABLE mm_pts SET TBLPROPERTIES ('geomesa.salt_buckets'='8')")
     n = pip_join_bucketed(spark, "mm_pts", "mm_cov", polys, bits=6).count()
     assert n == 200  # every point is inside the box
 

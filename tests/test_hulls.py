@@ -2,7 +2,10 @@
 
 import numpy as np
 
-from geomesa_spark.operators.simplify import hull_np, track_hulls
+import pytest
+
+from geomesa_spark.operators.hull import _chain
+from geomesa_spark.operators.simplify import track_hulls
 
 
 def _gift_wrap(pts):
@@ -41,21 +44,27 @@ def _gift_wrap(pts):
     return set(hull)
 
 
-def test_hull_np_vs_gift_wrap():
-    rng = np.random.default_rng(9)
-    for _ in range(50):
+def _inputs(rng):
+    """Integer grids, uniform floats and mixes of +-0.0."""
+    for k in range(150):
         n = int(rng.integers(1, 60))
-        pts = [
-            (float(x), float(y))
-            for x, y in zip(
-                rng.integers(-5, 6, n).astype(float),
-                rng.integers(-5, 6, n).astype(float),
-            )
-        ]
-        lon = np.array([p[0] for p in pts])
-        lat = np.array([p[1] for p in pts])
-        idx = hull_np(lon, lat)
-        got = {(lon[i], lat[i]) for i in idx}
+        if k % 3 == 0:
+            xs = rng.integers(-5, 6, n).astype(float)
+            ys = rng.integers(-5, 6, n).astype(float)
+        elif k % 3 == 1:
+            xs = rng.uniform(-180, 180, n)
+            ys = rng.uniform(-90, 90, n)
+        else:
+            vals = np.array([0.0, -0.0, 1.0, -1.0])
+            xs = vals[rng.integers(0, 4, n)]
+            ys = vals[rng.integers(0, 4, n)]
+        yield list(zip(xs.tolist(), ys.tolist()))
+
+
+def test_chain_vs_gift_wrap():
+    for pts in _inputs(np.random.default_rng(9)):
+        hull = _chain(pts)
+        got = set(hull)
         distinct = set(pts)
         if len(got) <= 2:
             # degenerate: endpoints of the collinear extent
@@ -63,11 +72,11 @@ def test_hull_np_vs_gift_wrap():
             continue
         assert got == _gift_wrap(pts)
         # CCW + starts at lex-min
-        assert (lon[idx[0]], lat[idx[0]]) == min(distinct)
+        assert hull[0] == min(distinct)
         area2 = sum(
-            lon[idx[i]] * lat[idx[(i + 1) % len(idx)]]
-            - lon[idx[(i + 1) % len(idx)]] * lat[idx[i]]
-            for i in range(len(idx))
+            hull[i][0] * hull[(i + 1) % len(hull)][1]
+            - hull[(i + 1) % len(hull)][0] * hull[i][1]
+            for i in range(len(hull))
         )
         assert area2 > 0
 
@@ -118,3 +127,14 @@ def test_track_hulls_roundtrip_parses(spark):
     )
     g = geom_table_native(hulls).collect()[0]
     assert g.kind == "POLYGON" and len(g.edges) == g.n_hull
+
+
+@pytest.mark.parametrize("bad", [float("nan"), None])
+def test_track_hulls_rejects_nan_and_null(spark, bad):
+    # the chain's sort and set dedup are undefined on NaN
+    df = spark.createDataFrame(
+        [("t", 0.0, 0.0), ("t", 1.0, 0.0), ("t", bad, 1.0)],
+        "track string, lon double, lat double",
+    )
+    with pytest.raises(Exception, match="NULL or NaN coordinate"):
+        track_hulls(df, "track").collect()

@@ -138,7 +138,9 @@ FRAC_OFFS_US = [
 
 
 @pytest.fixture(scope="module")
-def frac_df(spark):
+def frac_df(spark, tmp_path_factory):
+    """Stored cell and z3 columns (a Parquet round trip), so the scan
+    emits both the Z2 and the Z3 range predicates."""
     from pyspark.sql import functions as F
     from geomesa_spark.functions import cells as C
 
@@ -148,15 +150,15 @@ def frac_df(spark):
         for i, us in enumerate(FRAC_OFFS_US)
     ]
     pdf = pd.DataFrame(rows, columns=["doc_id", "lon", "lat", "dtg"])
-    df = (
+    path = str(tmp_path_factory.mktemp("frac") / "docs")
+    (
         spark.createDataFrame(pdf)
         .withColumn("week", C.week(F.col("dtg")))
         .withColumn("cell", C.z2_cell(F.col("lon"), F.col("lat")))
         .withColumn("z3", C.z3_cell(F.col("lon"), F.col("lat"), F.col("dtg")))
-        .cache()
+        .write.parquet(path)
     )
-    df.count()
-    return df
+    return spark.read.parquet(path)
 
 
 def _frac_expected(t0_us, t1_us, t0_excl, t1_excl):
@@ -182,15 +184,20 @@ def test_fractional_endpoints(frac_df, t0_us, t1_us, t0_excl, t1_excl):
     from datetime import timedelta
 
     base = _dt("2010-05-07T12:00:00")
+    # a box this small lets the Z3 cover resolve single seconds; over
+    # an 80-degree box one time bin spans all 11 s of fixes, and a
+    # wrong Z3 endpoint goes unseen
     spec = P.QuerySpec(
-        bbox=(0.0, 0.0, 80.0, 80.0),
+        bbox=(39.999, 59.999, 40.001, 60.001),
         t0=base + timedelta(microseconds=t0_us),
         t1=base + timedelta(microseconds=t1_us),
         t0_exclusive=t0_excl,
         t1_exclusive=t1_excl,
     )
-    got = _ids(P.scan(frac_df, spec, cell_ranges=True))
-    assert got == _frac_expected(t0_us, t1_us, t0_excl, t1_excl)
+    out = P.scan(frac_df, spec)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "(cell#" in plan and "(z3#" in plan
+    assert _ids(out) == _frac_expected(t0_us, t1_us, t0_excl, t1_excl)
 
 
 def test_epoch_bound_helpers():
@@ -307,13 +314,18 @@ def test_cell_range_predicate_2000_ranges(spark, tmp_path):
 
 
 def test_cell_range_predicate_constant_py4j_calls(spark, monkeypatch):
+    from py4j import protocol as proto
+
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
 
-    def counting(*a, **kw):
-        calls.append(1)
-        return send(*a, **kw)
+    def counting(command, *a, **kw):
+        # py4j's finalizer thread frees collected JavaObjects with
+        # memory commands at any moment; count only the predicate's calls
+        if not command.startswith(proto.MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return send(command, *a, **kw)
 
     monkeypatch.setattr(client, "send_command", counting)
     counts = []

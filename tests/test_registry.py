@@ -15,14 +15,14 @@ PRODUCTION_VARIANTS = {"minhash_lsh_xx", "simhash64", "tile_cut_mvt"}
 
 def test_names_are_unique_and_tags_known():
     names = [g.name for g in E.gates()]
-    assert len(names) == len(set(names)) == 169
+    assert len(names) == len(set(names)) == 170
     assert all(g.tags <= E.TAGS for g in E.gates())
 
 
 def test_every_query_has_an_oracle():
     q = E.queries()
     assert set(q) == set(E.oracle_sql())
-    assert len(q) == 166
+    assert len(q) == 167
 
 
 def test_sec2_gates_come_first():

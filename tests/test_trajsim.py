@@ -41,10 +41,6 @@ def test_hausdorff_oracle(spark):
     for k in exp:
         assert got[k] == exp[k], (k, got[k], exp[k])
     assert got[("t5", "t5")] == 0.0  # self-distance
-    # the pure-JVM relational path is bit-equal to the packed default
-    jn = {(r.track_a, r.track_b): r.hausdorff
-          for r in hausdorff_join(pts, pairs, impl="join").collect()}
-    assert jn == got
 
 
 def test_hausdorff_asymmetry_direction(spark):
@@ -62,21 +58,8 @@ def test_hausdorff_asymmetry_direction(spark):
     assert out[0].hausdorff == 9.0  # h(b->a) dominates
 
 
-def test_hausdorff_plan_no_python_no_cartesian(spark):
-    pts = spark.createDataFrame(
-        [("a", 0.0, 0.0), ("b", 1.0, 1.0)],
-        "track string, lon double, lat double",
-    )
-    pairs = spark.createDataFrame([("a", "b")],
-                                  "track_a string, track_b string")
-    plan = hausdorff_join(pts, pairs, impl="join")._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "Python" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_hausdorff_packed_plan_arrow_no_cartesian(spark):
-    # the packed default: one Arrow-batched scalar UDF, equi-joins only
+    # one Arrow-batched scalar UDF, equi-joins only
     pts = spark.createDataFrame(
         [("a", 0.0, 0.0), ("b", 1.0, 1.0)],
         "track string, lon double, lat double",
