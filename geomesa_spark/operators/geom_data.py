@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as G
 from geomesa_spark.functions import geometry_sql as GS
+from geomesa_spark.plans.planner import time_predicates
 
 POLY_KINDS = ("POLYGON", "MULTIPOLYGON")
 
@@ -273,7 +274,7 @@ def row_rbits_col(
     geohash).
 
     This is the data-row analog of the query-side budget degrade
-    (spatial_join._resolution_of): the reference bounds non-point
+    (spatial_join._cover_budget): the reference bounds non-point
     index fan-out the same way by choosing coarser geohash precisions
     for large geometries (GeohashUtils.scala:638 sizing window;
     IndexSchema.scala:300-307 dedups the multi-cell rows)."""
@@ -615,10 +616,12 @@ def geom_scan(
     """Pruned scan of a geometry table: rows intersecting the query
     geometry (and, optionally, a time interval — the ST index's
     geometry+date key, SpatioTemporalTable.scala:38-46). Pushdown =
-    bbox-overlap on the stored bbox columns plus week pruning (plain
-    comparisons that reach the parquet reader); refine = the exact
-    JVM intersects against the query's edge literal. Per-member
-    boxes keep IDL-split query polygons selective."""
+    bbox-overlap on the stored bbox columns plus the planner's time
+    interval with week pruning from either bound
+    (`planner.time_predicates`; plain comparisons that reach the
+    parquet reader); refine = the exact JVM intersects against the
+    query's edge literal. Per-member boxes keep IDL-split query
+    polygons selective."""
     q = G.normalize_idl(G.parse_wkt(geometry_wkt))
     box_pred = None
     for qxmin, qymin, qxmax, qymax in G.member_bounds(q):
@@ -630,40 +633,11 @@ def geom_scan(
         )
         box_pred = p if box_pred is None else box_pred | p
     out = gdf.filter(box_pred)
-    if t0 is not None or t1 is not None:
-        from datetime import timezone
-
-        from geomesa_spark.plans import planner as P
-
-        # naive datetimes mean UTC everywhere in this engine (the
-        # planner does the same); without this the F.lit() literal
-        # would follow the session timezone while the week bounds
-        # assume UTC — two disagreeing filters
-        if t0 is not None and t0.tzinfo is None:
-            t0 = t0.replace(tzinfo=timezone.utc)
-        if t1 is not None and t1.tzinfo is None:
-            t1 = t1.replace(tzinfo=timezone.utc)
-        if t0 is not None:
-            cmp0 = (
-                F.col(dtg_col) > F.lit(t0) if t0_exclusive
-                else F.col(dtg_col) >= F.lit(t0)
-            )
-            out = out.filter(cmp0)
-        if t1 is not None:
-            cmp1 = (
-                F.col(dtg_col) < F.lit(t1) if t1_exclusive
-                else F.col(dtg_col) <= F.lit(t1)
-            )
-            out = out.filter(cmp1)
-        if t0 is not None and t1 is not None and week_col in gdf.columns:
-            e0 = P._epoch_lower(t0)
-            e1 = P._epoch_upper(t1, t1_exclusive)
-            out = out.filter(
-                F.col(week_col).between(
-                    e0 // C.SECONDS_IN_WEEK,
-                    max(e1 - 1, e0) // C.SECONDS_IN_WEEK,
-                )
-            )
+    for p in time_predicates(
+        dtg_col, t0, t1, t0_exclusive, t1_exclusive,
+        week_col if week_col in gdf.columns else None,
+    ):
+        out = out.filter(p)
     return out.filter(
         geom_intersects_col(
             F.col("edges"),

@@ -175,8 +175,6 @@ def mosaic(
     res_bits: int,
     out_w: int,
     out_h: int,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
     driver_max_pixels: int = 4_000_000,
 ) -> np.ndarray:
     """Assemble the tiles covering `bbox` into one out_h×out_w grid.
@@ -201,15 +199,12 @@ def mosaic(
     """
     cov = tile_cover_scan(tiles, bbox, res_bits)
     xmin, ymin, xmax, ymax = bbox
-    if tile_px is None or tile_py is None:
-        # pixel dims come from the tiles themselves (chunks at one
-        # resolution share dimensions, as in the reference format);
-        # a caller-supplied mismatch would misplace every fragment
-        first = cov.select("px", "py").first()
-        if first is None:
-            return np.zeros((out_h, out_w))
-        tile_px = int(first.px) if tile_px is None else tile_px
-        tile_py = int(first.py) if tile_py is None else tile_py
+    # pixel dims come from the tiles themselves (chunks at one
+    # resolution share dimensions, as in the reference format)
+    first = cov.select("px", "py").first()
+    if first is None:
+        return np.zeros((out_h, out_w))
+    tile_px, tile_py = int(first.px), int(first.py)
 
     # native mosaic size: query extent at the level's deg-per-pixel
     n = 1 << res_bits
@@ -597,8 +592,6 @@ def _pixel_lattice(
     tiles: DataFrame,
     res_bits: int,
     fp_scale: int,
-    tile_px: int | None,
-    tile_py: int | None,
 ) -> tuple[DataFrame, int, int]:
     """De-interleave one resolution's tiles to the GLOBAL pixel
     lattice (gx, gy, v_fp) — fixed-point int64 values so every
@@ -617,14 +610,10 @@ def _pixel_lattice(
     table may store different dims per level).  Returns
     (pixels, px, py)."""
     lvl = tiles.filter(F.col("res_bits") == res_bits)
-    px = tile_px
-    py = tile_py
-    if px is None or py is None:
-        first = lvl.select("px", "py").first()
-        if first is None:
-            raise ValueError(f"no tiles at res_bits={res_bits}")
-        px = px if px is not None else first["px"]
-        py = py if py is not None else first["py"]
+    first = lvl.select("px", "py").first()
+    if first is None:
+        raise ValueError(f"no tiles at res_bits={res_bits}")
+    px, py = first["px"], first["py"]
     fp = F.lit(float(fp_scale))
     pixels = (
         lvl.select(
@@ -648,8 +637,6 @@ def focal_stats(
     res_bits: int,
     ring: int = 1,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
 ) -> DataFrame:
     """Focal (neighborhood) statistics per pixel — the third raster
     algebra class next to LOCAL (``map_algebra``) and ZONAL
@@ -672,9 +659,7 @@ def focal_stats(
     Returns (gx, gy, v_fp, n_win, sum_fp, min_fp, max_fp, mean_fp)."""
     if ring < 1:
         raise ValueError("ring must be >= 1")
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     offsets = [
         (dx, dy)
         for dx in range(-ring, ring + 1)
@@ -721,8 +706,6 @@ def downsample(
     factor: int = 2,
     agg: str = "mean",
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
 ) -> DataFrame:
     """Overview (pyramid-level) build: aggregate `factor`×`factor`
     pixel blocks of the global lattice into one coarser pixel and
@@ -755,9 +738,7 @@ def downsample(
         raise ValueError(f"res_bits {res_bits} too coarse for factor {factor}")
     if agg not in ("mean", "min", "max"):
         raise ValueError(f"agg must be mean/min/max, got {agg!r}")
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     coarse = (
         pixels.groupBy(
             (F.col("gx") / factor).cast("long").alias("cgx"),
@@ -819,8 +800,6 @@ def terrain(
     x_cellsize: float = 1.0,
     y_cellsize: float = 1.0,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
     sun_azimuth_deg: float = 315.0,
     sun_altitude_deg: float = 45.0,
 ) -> DataFrame:
@@ -850,9 +829,7 @@ def terrain(
     slope_deg, aspect_deg, hillshade)."""
     if x_cellsize <= 0 or y_cellsize <= 0:
         raise ValueError("cellsizes must be positive")
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     # source at offset (dx, dy) from target (dy=+1 north):
     #   wx = dx * (2 if dy==0 else 1)   — east minus west
     #   wy = dy * (2 if dx==0 else 1)   — north minus south
@@ -981,8 +958,6 @@ def contour(
     res_bits: int,
     level: float,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
 ) -> DataFrame:
     """Iso-contour extraction (marching squares) — the raster→vector
     inverse of ``rasterize``: the level set `v = level` as line
@@ -1006,9 +981,7 @@ def contour(
     pixel (gx, gy)'s center); scale by the pixel pitch for lon/lat.
 
     Returns (cx, cy, mcase, sidx, x0, y0, x1, y1)."""
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     lfp = int(math.floor(float(level) * fp_scale))
     # pixel (gx,gy) corners cells keyed by bottom-left corner:
     # BL of (gx,gy), BR of (gx-1,gy), TL of (gx,gy-1), TR of (gx-1,gy-1)
@@ -1092,8 +1065,6 @@ def flow_direction(
     tiles: DataFrame,
     res_bits: int,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
 ) -> DataFrame:
     """D8 flow direction per interior pixel — hydrology step one:
     each cell drains to the steepest-descent neighbor of its 3×3
@@ -1111,9 +1082,7 @@ def flow_direction(
 
     Returns (gx, gy, v_fp, d8, drop_fp): `d8` the direction code,
     `drop_fp` the winning raw int64 drop (0 for pits/flats)."""
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     contrib = pixels.select(
         F.explode(
             F.array(*[
@@ -1439,8 +1408,6 @@ def viewshed(
     *,
     observer_height_fp: int = 0,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
 ) -> DataFrame:
     """Observer visibility over the elevation lattice — which pixels
     within `radius` (Chebyshev) can each observer see.
@@ -1487,9 +1454,7 @@ def viewshed(
     """
     if radius < 1:
         raise ValueError("radius must be >= 1")
-    pixels, px, py = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, px, py = _pixel_lattice(tiles, res_bits, fp_scale)
     # observers gain their base elevation by ONE broadcast hash join
     # against the lattice (the observer set is the small side)
     obs = pixels.join(
@@ -1584,8 +1549,6 @@ def region_group(
     res_bits: int,
     *,
     fp_scale: int = 1_000_000,
-    tile_px: int | None = None,
-    tile_py: int | None = None,
     quant: int = 1,
     connectivity: int = 4,
     max_iter: int = 50,
@@ -1620,9 +1583,7 @@ def region_group(
         raise ValueError("connectivity must be 4 or 8")
     from geomesa_spark.operators.dedup import dup_components
 
-    pixels, _, _ = _pixel_lattice(
-        tiles, res_bits, fp_scale, tile_px, tile_py
-    )
+    pixels, _, _ = _pixel_lattice(tiles, res_bits, fp_scale)
     q = int(quant)
     if q <= 0:
         raise ValueError("quant must be positive")

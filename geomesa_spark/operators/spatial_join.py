@@ -152,23 +152,8 @@ def _distributed_cover(
             out = []
             for pid, wkt in zip(pdf[poly_id_col], pdf[wkt_col]):
                 geom = G.normalize_idl(G.parse_wkt(wkt))
-                # cheap bbox-arithmetic pre-check: a polygon that
-                # cannot reach `bits` within `budget` goes straight
-                # to the escalated fill instead of paying a full fill
-                # whose result would be thrown away (the escalation
-                # semantics are unchanged: try budget, then budget*4;
-                # a polygon that still doesn't fit keeps its coarse
-                # cover — pbits < bits — and the join runs that group
-                # at the coarser key with the refine absorbing the
-                # looser cover, so one pathological geometry can
-                # never fail the whole job)
-                use_budget = (
-                    budget
-                    if V.polyfill_resolution(geom, bits, budget) == bits
-                    else budget * 4
-                )
                 cells_, interior, used = V.polyfill_detail(
-                    geom, bits, use_budget
+                    geom, bits, _cover_budget(geom, bits, budget)[0]
                 )
                 out.append(
                     pd.DataFrame(
@@ -192,14 +177,26 @@ def _distributed_cover(
     return polys.mapInPandas(gen, schema=schema)
 
 
-def _resolution_of(wkt: str, bits: int, budget: int) -> int:
-    """The resolution `_distributed_cover` will use for one polygon
-    (including its 4x-budget retry) — bbox arithmetic only."""
-    geom = G.normalize_idl(G.parse_wkt(wkt))
+def _cover_budget(geom: G.Geometry, bits: int, budget: int) -> tuple[int, int]:
+    """(fill budget, cover resolution) of one polygon of the
+    partitioned cover — bbox arithmetic only, no fill.
+
+    A polygon that cannot reach `bits` within `budget` fills at
+    `budget * 4`; one that still doesn't fit keeps its coarse cover
+    (resolution < bits) and the join runs that group at the coarser
+    key with the refine absorbing the looser cover, so one
+    pathological geometry can never fail the whole job.
+    `_distributed_cover` fills at the budget and the join loops over
+    the resolutions, so both read this one rule."""
     used = V.polyfill_resolution(geom, bits, budget)
-    if used != bits:
-        used = V.polyfill_resolution(geom, bits, budget * 4)
-    return used
+    if used == bits:
+        return budget, used
+    return budget * 4, V.polyfill_resolution(geom, bits, budget * 4)
+
+
+def _resolution_of(wkt: str, bits: int, budget: int) -> int:
+    """The resolution `_distributed_cover` will use for one polygon."""
+    return _cover_budget(G.normalize_idl(G.parse_wkt(wkt)), bits, budget)[1]
 
 
 def _cover_resolution_set(

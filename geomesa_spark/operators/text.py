@@ -48,60 +48,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text))).cast("long")
-
-
-def count_in_set(text: Column, words: list[str]) -> Column:
-    """How many tokens of `text` fall in `words` (vectorized set test)."""
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(arr, t))).cast(
-        "long"
-    )
-
-
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    # explicit [] means "no stopwords", not "use the default set"
-    sw = STOPWORDS if stopwords is None else stopwords
-    if not sw:
-        return F.lit(0.0)
-    return count_in_set(text, sw) / token_count(text)
-
-
-def type_token_ratio(text: Column) -> Column:
-    return distinct_token_count(text) / token_count(text)
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality in [0,1]: favors length, vocabulary richness
-    and low stopword density. Deterministic closed form (no model)."""
-    n = token_count(text)
-    length_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    ttr = type_token_ratio(text)
-    stop = stopword_ratio(text)
-    return (
-        F.lit(0.5) * length_term + F.lit(0.3) * ttr + F.lit(0.2) * (F.lit(1.0) - stop)
-    )
-
-
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    return [(lang, count_in_set(text, mk)) for lang, mk in LANG_MARKERS]
-
-
-def lang_id(text: Column) -> Column:
-    """Marker-token language heuristic: argmax of marker hits, first
-    language in LANG_MARKERS order wins ties; 'unk' when no marker
-    token occurs at all."""
-    scores = lang_scores(text)
-    best = F.greatest(*[s for _, s in scores])
-    expr = F.lit("unk")
-    # build the CASE from lowest priority upward so earlier languages
-    # override on ties
-    for lang, s in reversed(scores):
-        expr = F.when((best > 0) & (s == best), F.lit(lang)).otherwise(expr)
-    return expr
-
-
 def fingerprint(text: Column) -> Column:
     """Canonical content fingerprint: md5 of the lower-cased,
     trimmed text (the converter DSL's `md5(stringToBytes(...))`,
@@ -109,17 +55,11 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.trim(text)))
 
 
-def fingerprint64(text: Column) -> Column:
-    """64-bit integer fingerprint: first 15 hex digits of the md5 (60
-    bits, always < 2^63 so it is portable across engines)."""
-    return F.conv(F.substring(fingerprint(text), 1, 15), 16, 10).cast("long")
-
-
 def _stats_struct(text: Column) -> Column:
     """All token-derived counts in ONE expression with the token
     array let-bound via a single-element `transform` (the lambda
-    variable is evaluated once). Composing the standalone column
-    functions directly would inline `split(text)` into every output
+    variable is evaluated once). Composing one column function per
+    count would inline `split(text)` into every output
     after project collapse — measured 11x slower at 200k docs
     (lambda-bearing expressions are excluded from codegen
     subexpression elimination, the same trap documented on

@@ -23,9 +23,9 @@ Arrow round trip, the `geom_table_native` contract):
    one flat `zip_with` + `flatten` sweep over the ring (open form,
    WKT closing vertex stripped); intersections are single IEEE
    expressions, so the python oracle reproduces them bit-for-bit;
-4. quantize: tile-local integer coordinates in a ``4096``-cell
-   extent (the MVT default), `floor(v + 0.5)` rounding (the
-   embed_quantize convention).
+4. quantize: tile-local integer coordinates in the ``EXTENT``
+   (4096) cell extent that `sources.mvt` declares, `floor(v + 0.5)`
+   rounding (the embed_quantize convention).
 
 Rings survive only with >= 3 vertices after clipping; a tile row
 survives only with >= 1 surviving ring (interior tiles of a large
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from geomesa_spark.functions.tiles import (
     DEG2RAD, MAX_MERC_LAT, PI, PI_4,
 )
+from geomesa_spark.sources.mvt import EXTENT
 
 __all__ = [
     "tile_cut", "tile_cut_lines", "tile_cut_points",
@@ -148,7 +149,6 @@ def tile_cut(
     wkt_col: str = "geom_wkt",
     id_col: str = "geom_id",
     *,
-    extent: int = 4096,
     max_tiles_per_geom: int = 4096,
 ) -> DataFrame:
     """Cut a POLYGON layer into z/x/y vector tiles (module
@@ -158,7 +158,7 @@ def tile_cut(
      pts: array<struct<px int, py int>>)
 
     where (px, py) are tile-local integer coordinates in
-    ``[0, extent]`` (y grows south, the tile/MVT convention) and
+    ``[0, EXTENT]`` (y grows south, the tile/MVT convention) and
     ring_i is the source ring index (0 = shell, >0 = holes).
     """
     if not (0 <= zoom <= 30):
@@ -271,7 +271,7 @@ def tile_cut(
     by0 = F.col("ty").cast("double") * F.lit(inv)
     bx1 = (F.col("tx") + 1).cast("double") * F.lit(inv)
     by1 = (F.col("ty") + 1).cast("double") * F.lit(inv)
-    ext = float(extent)
+    ext = float(EXTENT)
 
     # one ring per row, then each half-plane pass lands behind its
     # own explode(array(...)) Generate barrier: each pass references
@@ -352,7 +352,6 @@ def tile_cut_lines(
     wkt_col: str = "geom_wkt",
     id_col: str = "geom_id",
     *,
-    extent: int = 4096,
     max_tiles_per_segment: int = 4096,
 ) -> DataFrame:
     """Cut a LINESTRING layer (tracks, roads) into z/x/y vector
@@ -374,7 +373,7 @@ def tile_cut_lines(
 
     Returns (id_col, z, tx, ty, part_i, n_pts,
     pts: array<struct<px int, py int>>) with tile-local integer
-    coordinates in [0, extent]."""
+    coordinates in [0, EXTENT]."""
     if not (0 <= zoom <= 30):
         raise ValueError(f"zoom must be in [0, 30], got {zoom}")
     n = 1 << zoom
@@ -535,7 +534,7 @@ def tile_cut_lines(
         id_col, "tx", "ty",
         F.posexplode("_p").alias("part_i", "pts_m"),
     )
-    ext = float(extent)
+    ext = float(EXTENT)
 
     def quant(v, b0):
         return F.floor((v - b0) * F.lit(fn) * F.lit(ext) + F.lit(0.5)) \
@@ -601,8 +600,6 @@ def tile_cut_points(
     lon_col: str = "lon",
     lat_col: str = "lat",
     id_col: str = "geom_id",
-    *,
-    extent: int = 4096,
 ) -> DataFrame:
     """The point third of the cutter family: assign each point to
     its tile (same mercator expressions as `tiles.tile_cols`) and
@@ -631,7 +628,7 @@ def tile_cut_points(
         clampi(F.floor(F.col("_p.y") * fn)).alias("ty"),
     )
     inv = 1.0 / fn
-    ext = float(extent)
+    ext = float(EXTENT)
 
     def quant(v, t):
         return F.floor(

@@ -16,8 +16,10 @@ module gives the engine the same front-end:
    filter/package.scala:150-180),
 3. a per-disjunct split into a pushable ``QuerySpec`` (bbox/geometry,
    dtg interval, attribute SQL, feature IDs) plus residual JVM column
-   predicates for the rest — ``ecql_scan`` then unions the disjunct
-   scans and dedups by id exactly like ``planner.scan_or``.
+   predicates for the rest, built by the planner's own time, box and
+   point-in-geometry functions — ``ecql_scan`` then unions the
+   disjunct scans and dedups by id through ``planner.union_by_id``,
+   the path ``planner.scan_or`` takes.
 
 Supported surface (everything greppable from the reference's tests):
 
@@ -68,7 +70,14 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.functions import geometry as G
 from geomesa_spark.functions import geometry_sql as GS
-from geomesa_spark.plans.planner import QuerySpec, scan
+from geomesa_spark.plans.planner import (
+    QuerySpec,
+    box_predicate,
+    point_in_geom_predicate,
+    scan,
+    time_predicates,
+    union_by_id,
+)
 
 MAX_DISJUNCTS = 64
 
@@ -712,13 +721,7 @@ def _spatial_col(sp: Spatial, cols: _Cols) -> Column:
         )
     lon, lat = F.col(cols.lon), F.col(cols.lat)
     if sp.op == "BBOX":
-        x0, y0, x1, y1 = sp.bbox
-        pred = None
-        for bx in G.idl_safe_boxes(x0, y0, x1, y1):
-            p = lon.between(F.lit(bx[0]), F.lit(bx[2])) & \
-                lat.between(F.lit(bx[1]), F.lit(bx[3]))
-            pred = p if pred is None else pred | p
-        return pred
+        return box_predicate(G.idl_safe_boxes(*sp.bbox), lon, lat)
     g = _geom_of(sp)
     if sp.op in ("DWITHIN", "BEYOND"):
         m = _units_to_meters(sp.dist, sp.units)
@@ -752,44 +755,23 @@ def _spatial_col(sp: Spatial, cols: _Cols) -> Column:
         or (sp.op == "WITHIN" and sp.attr_is_first)
         or (sp.op == "CONTAINS" and not sp.attr_is_first)
     )
-    if not containee_is_attr:
-        # "point contains/covers geometry": true only for an equal point
+    if not containee_is_attr or sp.op == "EQUALS":
+        # "point contains/covers/equals geometry": true only for an
+        # equal point
         if g.kind == "POINT":
-            x, y = float(g.rings[0][0, 0]), float(g.rings[0][0, 1])
-            return (lon == F.lit(x)) & (lat == F.lit(y))
+            return point_in_geom_predicate(g, lon, lat)
         return F.lit(False)
-    if sp.op == "EQUALS":
-        if g.kind == "POINT":
-            x, y = float(g.rings[0][0, 0]), float(g.rings[0][0, 1])
-            return (lon == F.lit(x)) & (lat == F.lit(y))
-        return F.lit(False)
-    if g.kind in ("POLYGON", "MULTIPOLYGON"):
-        # member-OR: flattened even-odd cancels where overlapping
-        # MULTIPOLYGON members stack
-        inside = GS.contains_geom_col(g, lon, lat)
-    elif g.kind == "POINT":
-        x, y = float(g.rings[0][0, 0]), float(g.rings[0][0, 1])
-        inside = (lon == F.lit(x)) & (lat == F.lit(y))
-    else:
-        # measure-zero geometries: exact on-boundary intersection
-        inside = GS.min_seg_dist2_col(GS.edges_lit(g), lon, lat) <= F.lit(0.0)
+    inside = point_in_geom_predicate(g, lon, lat)
     if sp.op == "DISJOINT":
         return ~F.coalesce(inside, F.lit(False))
     return inside
 
 
-def _temporal_col(tp: Temporal, cols: _Cols) -> Column:
-    c = F.col(tp.attr)
-    pred = None
-    if tp.t0 is not None:
-        t0 = F.lit(tp.t0.astimezone(timezone.utc).replace(tzinfo=None)).cast("timestamp")
-        p = c > t0 if tp.t0_exclusive else c >= t0
-        pred = p
-    if tp.t1 is not None:
-        t1 = F.lit(tp.t1.astimezone(timezone.utc).replace(tzinfo=None)).cast("timestamp")
-        p = c < t1 if tp.t1_exclusive else c <= t1
-        pred = p if pred is None else pred & p
-    return pred if pred is not None else F.lit(True)
+def _temporal_col(tp: Temporal) -> Column:
+    preds = time_predicates(
+        tp.attr, tp.t0, tp.t1, tp.t0_exclusive, tp.t1_exclusive, None
+    )
+    return reduce(lambda a, b: a & b, preds) if preds else F.lit(True)
 
 
 def _leaf_col(leaf, cols: _Cols) -> Column:
@@ -799,7 +781,7 @@ def _leaf_col(leaf, cols: _Cols) -> Column:
     if isinstance(leaf, Spatial):
         return _spatial_col(leaf, cols)
     if isinstance(leaf, Temporal):
-        return _temporal_col(leaf, cols)
+        return _temporal_col(leaf)
     if isinstance(leaf, Attr):
         return F.expr(leaf.sql)
     if isinstance(leaf, IdIn):
@@ -860,7 +842,7 @@ def compile_disjunct(leaves: list, cols: _Cols):
                 interval = _merge_interval(interval, leaf)
                 have_time = True
             else:
-                residuals.append(_temporal_col(leaf, cols))
+                residuals.append(_temporal_col(leaf))
             continue
         if isinstance(leaf, Attr):
             spec.attr_predicates.append(leaf.sql)
@@ -968,14 +950,13 @@ def ecql_scan(
 
     Each DNF disjunct scans with its own pushable QuerySpec (partition
     /file/row-group pruning via planner.scan) plus exact residual JVM
-    predicates; disjunct scans union and dedup by ``id_col`` exactly
-    like planner.scan_or (QueryFilterSplitter's OR semantics without
-    the NOT-rewrite contortion — Spark dedups cheaply)."""
+    predicates; disjunct scans union and dedup by ``id_col`` through
+    planner.union_by_id, as planner.scan_or does."""
     disjuncts = compile_ecql(
         text, lon_col=lon_col, lat_col=lat_col, dtg_col=dtg_col,
         id_col=id_col, geom_attrs=geom_attrs,
     )
-    out = None
+    parts = []
     for spec, residuals in disjuncts:
         part = scan(
             df, spec, lon_col=lon_col, lat_col=lat_col,
@@ -983,9 +964,5 @@ def ecql_scan(
         )
         for r in residuals:
             part = part.filter(r)
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return df.limit(0)
-    if len(disjuncts) > 1:
-        out = out.dropDuplicates([id_col])
-    return out
+        parts.append(part)
+    return union_by_id(df, parts, id_col)

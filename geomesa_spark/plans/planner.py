@@ -16,8 +16,11 @@ so Catalyst/Parquet prune partitions, files and row groups:
 - attribute predicates    (analog: attr_idx lexicoded ranges —
   plain column predicates here, AttributeIdxStrategy.scala:204-311)
 - whole-world filter elimination (FilterHelper.scala:64-82)
-- residual exact-geometry refine (vectorized, only when the query
-  geometry is not a bbox)
+- residual exact-geometry refine (only when the query geometry is
+  not a bbox), a JVM expression for every geometry kind
+
+The time, box and point-in-geometry predicates are each built by one
+function here, which `scan`, the ECQL residuals and `geom_scan` share.
 
 Everything emitted is a plain column predicate, so `.explain()`
 shows the ranges in PushedFilters at the Parquet scan. A range set is
@@ -32,14 +35,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as G
+from geomesa_spark.functions import geometry_sql as GS
 from geomesa_spark.plans import cover as V
 
 WHOLE_WORLD = (-180.0, -90.0, 180.0, 90.0)
@@ -59,10 +60,13 @@ class QuerySpec:
     attr_predicates: list[str] = field(default_factory=list)  # SQL strings
 
 
+def _utc(dt: datetime) -> datetime:
+    """Naive datetimes mean UTC everywhere in this engine."""
+    return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
+
+
 def _epoch(dt: datetime) -> int:
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp())
+    return int(_utc(dt).timestamp())
 
 
 def _epoch_lower(dt: datetime) -> int:
@@ -157,19 +161,72 @@ def _balanced_or(terms: list[str]) -> str:
     return f"({_balanced_or(terms[:mid])} OR {_balanced_or(terms[mid:])})"
 
 
-@pandas_udf(T.BooleanType())
-def _refine_geom(wkt: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    import numpy as np
+def time_predicates(
+    dtg_col: str,
+    t0: datetime | None,
+    t1: datetime | None,
+    t0_exclusive: bool,
+    t1_exclusive: bool,
+    week_col: str | None,
+) -> list[Column]:
+    """The time interval as conjuncts, in filter order.
 
-    out = np.zeros(len(wkt), dtype=bool)
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    w = wkt.to_numpy()
-    for uw in pd.unique(w):
-        geom = G.parse_wkt(uw)
-        m = w == uw
-        out[m] = G.intersects(geom, lon_v[m], lat_v[m])
-    return pd.Series(out)
+    The exact predicates compare `dtg_col` with the RAW endpoints
+    (full microsecond precision, > / >= and < / <= per exclusivity)
+    as UTC-aware literals: a naive one would be read in the host's
+    zone. With `week_col`, one more conjunct prunes weeks from
+    whichever bounds are set (a t0-only query must not list every
+    historical partition); only it rounds to seconds, outward (see
+    `_epoch_lower`)."""
+    dtg = F.col(dtg_col)
+    preds = []
+    if t0 is not None:
+        lit0 = F.lit(_utc(t0)).cast("timestamp")
+        preds.append(dtg > lit0 if t0_exclusive else dtg >= lit0)
+    if t1 is not None:
+        lit1 = F.lit(_utc(t1)).cast("timestamp")
+        preds.append(dtg < lit1 if t1_exclusive else dtg <= lit1)
+    if week_col is not None and preds:
+        W = C.SECONDS_IN_WEEK
+        wpred = None
+        if t0 is not None:
+            wpred = F.col(week_col) >= F.lit(_epoch_lower(t0) // W)
+        if t1 is not None:
+            e1 = _epoch_upper(t1, t1_exclusive)
+            e_lo = _epoch_lower(t0) if t0 is not None else e1 - 1
+            p1 = F.col(week_col) <= F.lit(max(e1 - 1, e_lo) // W)
+            wpred = p1 if wpred is None else wpred & p1
+        preds.append(wpred)
+    return preds
+
+
+def box_predicate(
+    boxes: list[tuple[float, float, float, float]], lon: Column, lat: Column
+) -> Column:
+    """OR of per-box inclusive lon/lat ranges; `boxes` are already
+    split at the antimeridian (`G.idl_safe_boxes`)."""
+    pred = None
+    for bx in boxes:
+        p = lon.between(F.lit(bx[0]), F.lit(bx[2])) & lat.between(
+            F.lit(bx[1]), F.lit(bx[3])
+        )
+        pred = p if pred is None else pred | p
+    return pred
+
+
+def point_in_geom_predicate(geom: G.Geometry, lon: Column, lat: Column) -> Column:
+    """Exact point-intersects-geometry test as a JVM expression.
+
+    Polygons: member-OR even-odd (flattened even-odd would cancel
+    where overlapping MULTIPOLYGON members stack). A point: equal
+    coordinates. Lines and multipoints have no area: the point must
+    lie on a segment (minimum squared distance 0)."""
+    if geom.kind in ("POLYGON", "MULTIPOLYGON"):
+        return GS.contains_geom_col(geom, lon, lat)
+    if geom.kind == "POINT":
+        x, y = float(geom.rings[0][0, 0]), float(geom.rings[0][0, 1])
+        return (lon == F.lit(x)) & (lat == F.lit(y))
+    return GS.min_seg_dist2_col(GS.edges_lit(geom), lon, lat) <= F.lit(0.0)
 
 
 def scan(
@@ -259,13 +316,7 @@ def scan(
             bbox = None
             boxes = None
     if bbox is not None:
-        for i, bx in enumerate(boxes):
-            p = (
-                F.col(lon_col).between(F.lit(bx[0]), F.lit(bx[2]))
-                & F.col(lat_col).between(F.lit(bx[1]), F.lit(bx[3]))
-            )
-            box_pred = p if i == 0 else box_pred | p
-        out = out.filter(box_pred)
+        out = out.filter(box_predicate(boxes, F.col(lon_col), F.col(lat_col)))
         # cell ranges: redundant with lon/lat semantically, but they
         # align with the table's cell sort order so Parquet row-group
         # stats skip (the Z2 range-scan analog)
@@ -337,38 +388,12 @@ def scan(
         if zpred is not None:
             out = out.filter(zpred)
 
-    # --- temporal (week pruning + interval) ---
-    # the exact predicate uses the RAW endpoints (full microsecond
-    # precision, correct >/>= and </<= per exclusivity); only the
-    # week/z3 index bounds round to seconds (outward — see
-    # _epoch_lower/_epoch_upper)
-    if spec.t0 is not None or spec.t1 is not None:
-        if spec.t0 is not None:
-            t0 = spec.t0 if spec.t0.tzinfo else spec.t0.replace(tzinfo=timezone.utc)
-            cmp0 = F.col(dtg_col) > F.lit(t0).cast("timestamp") if spec.t0_exclusive \
-                else F.col(dtg_col) >= F.lit(t0).cast("timestamp")
-            out = out.filter(cmp0)
-        if spec.t1 is not None:
-            t1 = spec.t1 if spec.t1.tzinfo else spec.t1.replace(tzinfo=timezone.utc)
-            cmp1 = F.col(dtg_col) < F.lit(t1).cast("timestamp") if spec.t1_exclusive \
-                else F.col(dtg_col) <= F.lit(t1).cast("timestamp")
-            out = out.filter(cmp1)
-        if week_col in df.columns:
-            # one-sided bounds prune too: a t0-only query on a
-            # week-partitioned table must not list every historical
-            # partition (week >= w0 skips them all)
-            wpred = None
-            if spec.t0 is not None:
-                w0 = _epoch_lower(spec.t0) // C.SECONDS_IN_WEEK
-                wpred = F.col(week_col) >= F.lit(w0)
-            if spec.t1 is not None:
-                e1 = _epoch_upper(spec.t1, spec.t1_exclusive)
-                e_lo = _epoch_lower(spec.t0) if spec.t0 is not None else e1 - 1
-                w1 = max(e1 - 1, e_lo) // C.SECONDS_IN_WEEK
-                p1 = F.col(week_col) <= F.lit(w1)
-                wpred = p1 if wpred is None else wpred & p1
-            if wpred is not None:
-                out = out.filter(wpred)
+    # --- temporal (interval + week pruning) ---
+    for p in time_predicates(
+        dtg_col, spec.t0, spec.t1, spec.t0_exclusive, spec.t1_exclusive,
+        week_col if week_col in df.columns else None,
+    ):
+        out = out.filter(p)
 
     # --- attributes ---
     for pred_sql in spec.attr_predicates:
@@ -376,22 +401,29 @@ def scan(
 
     # --- residual exact geometry ---
     if geom is not None:
-        if geom.kind in ("POLYGON", "MULTIPOLYGON"):
-            # JVM-side even-odd refine, member-OR for MULTIPOLYGON
-            # (flattened even-odd would cancel where overlapping
-            # members stack; no Python in the scan path)
-            from geomesa_spark.functions import geometry_sql as GS
-
-            out = out.filter(
-                GS.contains_geom_col(geom, F.col(lon_col), F.col(lat_col))
-            )
-        else:
-            out = out.filter(
-                _refine_geom(
-                    F.lit(spec.geometry_wkt), F.col(lon_col), F.col(lat_col)
-                )
-            )
+        out = out.filter(
+            point_in_geom_predicate(geom, F.col(lon_col), F.col(lat_col))
+        )
     return out
+
+
+def union_by_id(df: DataFrame, parts: list[DataFrame], id_col: str) -> DataFrame:
+    """OR of disjunct scans of `df`: their union, deduped by id.
+
+    The reference splits OR filters into disjoint scans with NOT
+    rewriting to avoid duplicates (QueryFilterSplitter.scala:210-225)
+    because its scanners cannot dedup cheaply; Spark's hash
+    `dropDuplicates` makes the simple union + dedup strictly better
+    (one shuffle on the id, no filter-complexity blowup).
+    """
+    if not parts:  # zero disjuncts: empty result, valid schema
+        return df.limit(0)
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    # a single scan of one table has no duplicates — skip the dedup's
+    # full hash-partition shuffle
+    return out if len(parts) == 1 else out.dropDuplicates([id_col])
 
 
 def scan_or(
@@ -400,22 +432,8 @@ def scan_or(
     id_col: str = "doc_id",
     **kwargs,
 ) -> DataFrame:
-    """OR of filter specs: union of per-disjunct scans, deduped by id.
-
-    The reference splits OR filters into disjoint scans with NOT
-    rewriting to avoid duplicates (QueryFilterSplitter.scala:210-225)
-    because its scanners cannot dedup cheaply; Spark's hash
-    `dropDuplicates` makes the simple union + dedup strictly better
-    (one shuffle on the id, no filter-complexity blowup).
-    """
-    if not specs:  # zero disjuncts: empty result, valid schema
-        return df.limit(0)
-    if len(specs) == 1:
-        # a single scan of one table has no duplicates — skip the
-        # dedup's full hash-partition shuffle
-        return scan(df, specs[0], id_col=id_col, **kwargs)
-    out = None
-    for spec in specs:
-        part = scan(df, spec, id_col=id_col, **kwargs)
-        out = part if out is None else out.unionByName(part)
-    return out.dropDuplicates([id_col])
+    """OR of filter specs: per-disjunct scans, unioned and deduped by
+    id (`union_by_id`)."""
+    return union_by_id(
+        df, [scan(df, spec, id_col=id_col, **kwargs) for spec in specs], id_col
+    )

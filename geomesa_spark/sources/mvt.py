@@ -44,6 +44,10 @@ GEOM_POINT = 1
 GEOM_LINESTRING = 2
 GEOM_POLYGON = 3
 
+# tile-local coordinate range: the cutters quantize to it and every
+# encoded layer declares it, so the two cannot disagree
+EXTENT = 4096
+
 
 def _varint(v: int) -> bytes:
     if v < 0:
@@ -113,7 +117,7 @@ def encode_tile(
     features: list[tuple[int, int, list[list[tuple[int, int]]]]],
     *,
     layer_name: str = "layer",
-    extent: int = 4096,
+    extent: int = EXTENT,
 ) -> bytes:
     """One tile blob from [(feature_id, geom_type, parts)] — parts
     are ordered integer rings (POLYGON, implicit close) or line
@@ -149,8 +153,6 @@ def mvt_encode(
     id_col: str = "geom_id",
     part_col: str | None = None,
     layer_name: str = "layer",
-    extent: int = 4096,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Pack `tile_cut` (kind="polygon"), `tile_cut_lines`
     (kind="line"), or `tile_cut_points` (kind="point") output into
@@ -173,8 +175,6 @@ def mvt_encode(
         T.StructField("n_features", T.IntegerType()),
         T.StructField("mvt", T.BinaryType()),
     ])
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
     # ONE explicit pinned-width shuffle on the tile key + an
     # in-partition sort, then mapInPandas packs MANY tiles per Arrow
     # batch.  The natural groupBy().applyInPandas form pays ~ms of
@@ -189,7 +189,9 @@ def mvt_encode(
             df[pc].cast("int").alias("_pi"),
             "pts",
         )
-        .repartition(int(parallelism), "z", "tx", "ty")
+        .repartition(
+            df.sparkSession.sparkContext.defaultParallelism, "z", "tx", "ty"
+        )
         .sortWithinPartitions("z", "tx", "ty")
     )
 
@@ -216,8 +218,7 @@ def mvt_encode(
             ]
             rows.append(
                 (int(z), int(tx), int(ty), len(feats),
-                 encode_tile(feats, layer_name=layer_name,
-                             extent=extent))
+                 encode_tile(feats, layer_name=layer_name))
             )
         return pd.DataFrame(
             rows, columns=["z", "tx", "ty", "n_features", "mvt"]

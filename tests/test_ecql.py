@@ -8,8 +8,11 @@ forms. The oracle reimplements even-odd containment, segment
 distance, and haversine from scratch in this file (no engine code)
 so a shared bug cannot hide."""
 
+import contextlib
 import math
+import os
 import re
+import time
 from datetime import datetime, timedelta, timezone
 
 import pandas as pd
@@ -295,6 +298,67 @@ def test_during_offset_timezone(events, pdf):
     t1 = datetime(2014, 1, 20)
     want = _oracle_ids(pdf, lambda r: t0 < r.dtg < t1)
     assert got == want
+
+
+@contextlib.contextmanager
+def _process_zone(tz):
+    """Run with the Python process in time zone `tz` (the JVM and the
+    session zone stay UTC)."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+@pytest.fixture(scope="module")
+def hourly(spark):
+    """25 hourly rows at (0, 0) from 2024-01-10T00:00Z, with a second
+    timestamp attribute `seen` one hour after `dtg`."""
+    t = datetime(2024, 1, 10, tzinfo=UTC)
+    rows = [
+        (f"h{h}", 0.0, 0.0, t + timedelta(hours=h), t + timedelta(hours=h + 1), h % 4)
+        for h in range(25)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, lon double, lat double, dtg timestamp, "
+        "seen timestamp, age int",
+    ).cache()
+    df.count()
+    return df
+
+
+def _hours(lo, hi):
+    return {f"h{h}" for h in range(lo, hi + 1)}
+
+
+@pytest.mark.parametrize(
+    "text,want",
+    [
+        # the NOT leaf is a residual time predicate
+        ("BBOX(geom, -1, -1, 1, 1) AND dtg AFTER 2024-01-10T08:00:00Z "
+         "AND NOT (dtg AFTER 2024-01-10T16:00:00Z)", _hours(9, 16)),
+        # a timestamp attribute other than dtg is always residual
+        ("seen AFTER 2024-01-10T08:00:00Z AND seen BEFORE 2024-01-10T12:00:00Z",
+         _hours(8, 10)),
+        # DNF blowup: the whole filter is one residual
+        (" AND ".join(["(dtg BEFORE 2024-01-10T05:00:00Z OR age > 5)"] * 8),
+         _hours(0, 4)),
+    ],
+    ids=["not_dtg", "other_attr", "dnf_fallback"],
+)
+def test_residual_time_ignores_process_zone(hourly, text, want):
+    """Residual time literals are UTC instants: the host's time zone
+    must not move them (the JVM session zone is UTC either way)."""
+    assert _engine_ids(hourly, text) == want
+    with _process_zone("America/New_York"):
+        assert _engine_ids(hourly, text) == want
 
 
 # ---------------------------------------------------------------------------

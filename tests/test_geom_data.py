@@ -279,6 +279,23 @@ def test_geom_scan_temporal_and_sorted_layout(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "xmin" in plan
 
+    # a lower bound alone still prunes on week (every earlier week
+    # is skipped), and the answer stays exact
+    import re
+
+    out = GD.geom_scan(stored, wkt, t0=t0)
+    got = sorted(r.gid for r in out.select("gid").collect())
+    exp = sorted(
+        gid
+        for i, (gid, w) in enumerate(_rand_geoms(120))
+        if G.geom_intersects(G.parse_wkt(w), q)
+        and t0 <= base + timedelta(hours=i * 7)
+    )
+    assert got == exp and exp
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    w0 = int(t0.timestamp()) // C.SECONDS_IN_WEEK
+    assert re.search(rf"\(week#\d+ >= {w0}\)", plan)
+
 
 # --- regression tests from the round-2 code review ---
 

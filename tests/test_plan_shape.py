@@ -160,3 +160,62 @@ def test_budgeted_cover_stays_jvm(spark):
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan
+
+
+# LINESTRING (0 0, 4 4, 8 0, 10 0): slope +-1 and horizontal segments,
+# so every quarter-degree grid point's segment distance is exact in
+# doubles and "on the line" is an unambiguous zero
+_LINE = [(0.0, 0.0), (4.0, 4.0), (8.0, 0.0), (10.0, 0.0)]
+
+
+def _line_oracle(x, y):
+    """Brute-force numpy: minimum squared distance to the line's
+    segments is zero."""
+    import numpy as np
+
+    best = np.full(len(x), np.inf)
+    for (x0, y0), (x1, y1) in zip(_LINE, _LINE[1:]):
+        dx, dy = x1 - x0, y1 - y0
+        t = np.clip(((x - x0) * dx + (y - y0) * dy) / (dx * dx + dy * dy), 0, 1)
+        best = np.minimum(best, (x - (x0 + t * dx)) ** 2 + (y - (y0 + t * dy)) ** 2)
+    return best == 0.0
+
+
+@pytest.mark.parametrize(
+    "wkt,oracle",
+    [
+        (
+            "LINESTRING (" + ", ".join(f"{x:g} {y:g}" for x, y in _LINE) + ")",
+            _line_oracle,
+        ),
+        ("POINT (2 2)", lambda x, y: (x == 2.0) & (y == 2.0)),
+        (
+            # overlapping members: each member counts on its own
+            "MULTIPOLYGON (((0.1 0.1, 3.1 0.1, 3.1 3.1, 0.1 3.1, 0.1 0.1)), "
+            "((2.1 2.1, 5.1 2.1, 5.1 4.1, 2.1 4.1, 2.1 2.1)))",
+            lambda x, y: ((0.1 < x) & (x < 3.1) & (0.1 < y) & (y < 3.1))
+            | ((2.1 < x) & (x < 5.1) & (2.1 < y) & (y < 4.1)),
+        ),
+    ],
+    ids=["linestring", "point", "multipolygon"],
+)
+def test_ecql_intersects_refine_is_jvm(spark, wkt, oracle):
+    """INTERSECTS refines every geometry kind with JVM expressions:
+    no Python eval node in the scan, and the rows match a brute-force
+    numpy answer for grid points on and off the geometry."""
+    import numpy as np
+
+    from geomesa_spark.plans.ecql import ecql_scan
+
+    gx, gy = np.meshgrid(np.arange(-1, 11.25, 0.25), np.arange(-1, 5.25, 0.25))
+    x, y = gx.ravel(), gy.ravel()
+    pts = spark.createDataFrame(
+        [(f"d{i}", float(a), float(b)) for i, (a, b) in enumerate(zip(x, y))],
+        "doc_id string, lon double, lat double",
+    )
+    out = ecql_scan(pts, f"INTERSECTS(geom, {wkt})")
+    p = plan_of(out)
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    got = {r.doc_id for r in out.select("doc_id").collect()}
+    want = {f"d{i}" for i in np.nonzero(oracle(x, y))[0]}
+    assert got == want and want
