@@ -97,10 +97,6 @@ def parse_wkt(wkt: str) -> Geometry:
     raise ValueError(f"unsupported WKT: {wkt[:60]}")
 
 
-def point_wkt(lon: float, lat: float) -> str:
-    return f"POINT ({lon} {lat})"
-
-
 def box_wkt(xmin: float, ymin: float, xmax: float, ymax: float) -> str:
     return (
         f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "

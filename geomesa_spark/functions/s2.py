@@ -106,52 +106,11 @@ def _xyz_cols(lon: Column, lat: Column) -> tuple[Column, Column, Column]:
     return cl * F.cos(lonr), cl * F.sin(lonr), F.sin(latr)
 
 
-def face_col(lon: Column, lat: Column) -> Column:
-    """Dominant-axis cube face 0..5 (+x,+y,+z,-x,-y,-z)."""
-    x, y, z = _xyz_cols(lon, lat)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    return (
-        F.when((ax >= ay) & (ax >= az), F.when(x >= 0, 0).otherwise(3))
-        .when(ay >= az, F.when(y >= 0, 1).otherwise(4))
-        .otherwise(F.when(z >= 0, 2).otherwise(5))
-    ).cast("int")
-
-
-def _uv_cols(lon: Column, lat: Column, face: Column) -> tuple[Column, Column]:
-    x, y, z = _xyz_cols(lon, lat)
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
-    return u, v
-
-
 def st_from_uv(u: Column) -> Column:
     """Area-equalizing quadratic projection, uv [-1,1] -> st [0,1]."""
     return F.when(
         u >= 0, F.lit(0.5) * F.sqrt(F.lit(1.0) + F.lit(3.0) * u)
     ).otherwise(F.lit(1.0) - F.lit(0.5) * F.sqrt(F.lit(1.0) - F.lit(3.0) * u))
-
-
-def uv_from_st(s: Column) -> Column:
-    return F.when(
-        s >= 0.5, (F.lit(4.0) * s * s - F.lit(1.0)) / F.lit(3.0)
-    ).otherwise(
-        (F.lit(1.0) - F.lit(4.0) * (F.lit(1.0) - s) * (F.lit(1.0) - s))
-        / F.lit(3.0)
-    )
 
 
 def _ij_col(s: Column, level: int) -> Column:
@@ -347,12 +306,6 @@ def s2_parent_col(cell: Column, parent_level: int) -> Column:
     """Ancestor id at `parent_level` (clear low bits, set new lsb)."""
     new_lsb = 1 << (2 * (MAX_LEVEL - parent_level))
     return cell.bitwiseAND(F.lit(-new_lsb)).bitwiseOR(F.lit(new_lsb))
-
-
-def s2_range_cols(cell: Column, level: int) -> tuple[Column, Column]:
-    """[range_min, range_max] covering all descendants of `cell`."""
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return cell - F.lit(lsb - 1), cell + F.lit(lsb - 1)
 
 
 def s2_token_col(cell: Column) -> Column:

@@ -19,9 +19,15 @@ Contract (all implementations):
   `before` exists because foreachBatch is at-least-once: a replayed
   batch N must fold from N's *predecessor*, never from what a crashed
   attempt of N itself wrote.
+
+The streaming pipelines' parquet dirs have two readers:
+`read_all_versions` (the union, for output dirs) and
+`read_newest_version` (the live state).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -177,6 +183,32 @@ class IcebergVersionedIO:
         raise KeyError(f"no snapshot for batch {version}")
 
 
+def _union(io: ParquetVersionedIO, versions: list[int]) -> DataFrame:
+    frames = (io.read_version(v) for v in versions)
+    return reduce(DataFrame.unionByName, frames)
+
+
+def read_all_versions(spark: SparkSession, root: str) -> DataFrame:
+    """Union of every committed version under `root` — the reader of
+    an INCREMENT-shaped output dir (alerts, events, stops, accepted
+    records: each row is emitted in exactly one micro-batch). Only
+    `_SUCCESS` versions count; raises ValueError when there is none."""
+    io = ParquetVersionedIO(spark, root)
+    vs = io.versions()
+    if not vs:
+        raise ValueError(f"no committed versions under {root}")
+    return _union(io, vs)
+
+
+def read_newest_version(spark: SparkSession, root: str) -> DataFrame:
+    """The newest committed version under `root` — the live view of a
+    FULL-STATE-shaped dir. Raises ValueError when there is none."""
+    state = ParquetVersionedIO(spark, root).read_latest()
+    if state is None:
+        raise ValueError(f"no committed versions under {root}")
+    return state
+
+
 def compact_versions(io: ParquetVersionedIO, upto: int | None = None) -> int | None:
     """Merge every committed version <= `upto` (default: all) of an
     INCREMENT-shaped versioned dir (disjoint row sets per version —
@@ -201,8 +233,6 @@ def compact_versions(io: ParquetVersionedIO, upto: int | None = None) -> int | N
     at step 3 (a staging dir WITHOUT ``_SUCCESS`` is a torn step-1
     write and is discarded instead). Returns the surviving version,
     or None when the dir has no committed versions."""
-    from functools import reduce
-
     jvm, root, fs = io._fs()
 
     def _path(name: str):
@@ -232,10 +262,9 @@ def compact_versions(io: ParquetVersionedIO, upto: int | None = None) -> int | N
     target = vs[-1]
     if len(vs) == 1:
         return target  # nothing to merge
-    union = reduce(
-        lambda a, b: a.unionByName(b), (io.read_version(v) for v in vs)
+    _union(io, vs).write.mode("overwrite").parquet(
+        f"{io.root}/compact_tmp_{target}"
     )
-    union.write.mode("overwrite").parquet(f"{io.root}/compact_tmp_{target}")
     return _swap(target)
 
 

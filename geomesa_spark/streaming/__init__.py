@@ -14,32 +14,22 @@ from geomesa_spark.streaming.upsert import (  # noqa: F401
 from geomesa_spark.streaming.ingest import (  # noqa: F401
     dedup_batch,
     ingest_dedup_stream,
-    read_accepted,
     replay_dedup,
 )
-from geomesa_spark.streaming.geofence import (  # noqa: F401
-    geofence_stream,
-    read_fence_events,
-    read_inside_now,
-)
+from geomesa_spark.streaming.geofence import geofence_stream  # noqa: F401
 from geomesa_spark.streaming.stops import (  # noqa: F401
     flush_open_stops,
-    read_dwelling_now,
-    read_stops,
     stop_stream,
 )
 from geomesa_spark.streaming.cotravel import (  # noqa: F401
     cotravel_stream,
-    read_alerts,
     read_pair_counts,
 )
 from geomesa_spark.streaming.hotspot import (  # noqa: F401
     hotspot_stream,
-    read_hot_alerts,
     read_hot_now,
 )
 from geomesa_spark.streaming.flow import (  # noqa: F401
     flow_stream,
-    read_flow_alerts,
     read_flow_field_now,
 )

@@ -5,8 +5,9 @@ Pairs of tracks co-located on >= `min_shared` aligned time-grid
 ticks, with the ALERT emitted in the micro-batch where the pair
 first crosses the threshold — the live "these two are moving
 together" signal that ``operators/cooccur.co_travel`` only produces
-after the fact.  Same foreachBatch + versioned-snapshot architecture
-as geofence/stops, and the same within-batch code as ``co_travel``:
+after the fact.  Runs through ``upsert.start_foreach_batch`` (its
+docstring states the versioned-state pattern), with the same
+within-batch code as ``co_travel``:
 
 - Ticks come from ``track_resample``'s core (``tracks._grid_ticks``:
   a segment owns the grid ticks in (es_i, es_{i+1}]) over the batch
@@ -42,8 +43,13 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.operators.cooccur import _tick_pair_counts
 from geomesa_spark.operators.tracks import _grid_ticks
+from geomesa_spark.sources.tableio import (
+    ParquetVersionedIO,
+    read_newest_version,
+)
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
-__all__ = ["cotravel_stream", "read_alerts", "read_pair_counts"]
+__all__ = ["cotravel_stream", "read_pair_counts"]
 
 _LAST_COLS = ["track", "last_ts", "last_lon", "last_lat"]
 _PAIR_COLS = ["track_a", "track_b", "n_shared", "first_ts", "last_tick",
@@ -112,13 +118,12 @@ def cotravel_stream(
 ):
     """Run the continuous convoy detector; returns the
     StreamingQuery. Alerts (one row per pair, in the batch it
-    crosses min_shared) land under `alerts_dir`; the accumulating
+    crosses min_shared) land under `alerts_dir`
+    (``tableio.read_all_versions``); the accumulating
     pair counts + per-track last points + recent ticks are the
     state (``read_pair_counts``). `lag_horizon_s` (default
     4·step_s) bounds how far apart two tracks' fix cadences may
     straddle batch boundaries while their shared ticks still pair."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
     spark = stream.sparkSession
     horizon = int(lag_horizon_s if lag_horizon_s is not None
                   else 4 * step_s)
@@ -198,37 +203,13 @@ def cotravel_stream(
         finally:
             ticks.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream, step, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_alerts(spark: SparkSession, alerts_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, alerts_dir)
-    frames = [io.read_version(v) for v in io.versions()]
-    if not frames:
-        raise ValueError(f"no committed alert versions under {alerts_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)
 
 
 def read_pair_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     """Live view: accumulated (track_a, track_b, n_shared, first_ts,
     last_tick, alerted) — equals ``co_travel``'s counts
     for an in-order stream (with min_shared applied by the caller)."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    state = ParquetVersionedIO(spark, f"{state_dir}/pairs").read_latest()
-    if state is None:
-        raise ValueError(f"no committed pair state under {state_dir}")
-    return state
+    return read_newest_version(spark, f"{state_dir}/pairs")

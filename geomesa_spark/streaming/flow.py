@@ -5,10 +5,9 @@ The streaming twin of ``operators/tracks.flow_anomaly`` — the
 monitor form of "who is moving against traffic RIGHT NOW": the
 per-cell motion field accumulates under the stream, every new leg is
 scored the moment it closes, and legs that cut against (or blow
-past) the local flow land in an alert table.  Same foreachBatch +
-``ParquetVersionedIO`` architecture as the other streaming twins
-(geofence/stops/cotravel/hotspot): at-least-once replays overwrite
-their version, so the pipeline is idempotent end-to-end.
+past) the local flow land in an alert table.  Runs through
+``upsert.start_foreach_batch`` like the other streaming twins (its
+docstring states the versioned-state pattern).
 
 State (both bounded, both exact int64 so merge order cannot matter):
 
@@ -51,8 +50,13 @@ from geomesa_spark.operators.tracks import (
     FLOW_MEAN_SQL,
     _cell_legs,
 )
+from geomesa_spark.sources.tableio import (
+    ParquetVersionedIO,
+    read_newest_version,
+)
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
-__all__ = ["flow_stream", "read_flow_field_now", "read_flow_alerts"]
+__all__ = ["flow_stream", "read_flow_field_now"]
 
 _FIELD_COLS = ["x", "y", "n_legs", "sum_dt_s", "sum_fp_dx", "sum_fp_dy"]
 
@@ -182,11 +186,10 @@ def flow_stream(
     processing_time: str | None = None,
 ):
     """Run the continuous flow-anomaly monitor; returns the
-    StreamingQuery.  Anomalous legs land under `alerts_dir`; the
-    accumulated field and per-track last fixes live under
-    `state_dir` (``read_flow_field_now`` serves the live field)."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
+    StreamingQuery.  Anomalous legs land under `alerts_dir`
+    (``tableio.read_all_versions``); the accumulated field and
+    per-track last fixes live under `state_dir`
+    (``read_flow_field_now`` serves the live field)."""
     spark = stream.sparkSession
     field_io = ParquetVersionedIO(spark, f"{state_dir}/field")
     last_io = ParquetVersionedIO(spark, f"{state_dir}/last")
@@ -236,16 +239,9 @@ def flow_stream(
         alert_io.write_version(alerts, batch_id)
         last_io.write_version(last, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream, step, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def _with_means(field: DataFrame) -> DataFrame:
@@ -263,21 +259,4 @@ def read_flow_field_now(spark: SparkSession, state_dir: str) -> DataFrame:
     """Live view: the accumulated flow field — equal to the batch
     ``flow_field`` over every point seen so far for an in-order
     stream (same int64 sums, same FLOW_MEAN_SQL division)."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    field = ParquetVersionedIO(spark, f"{state_dir}/field").read_latest()
-    if field is None:
-        raise ValueError(f"no committed field state under {state_dir}")
-    return _with_means(field)
-
-
-def read_flow_alerts(spark: SparkSession, alerts_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, alerts_dir)
-    frames = [io.read_version(v) for v in io.versions()]
-    if not frames:
-        raise ValueError(f"no committed alert versions under {alerts_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return _with_means(read_newest_version(spark, f"{state_dir}/field"))

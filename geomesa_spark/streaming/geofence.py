@@ -19,11 +19,10 @@ architecture as ``streaming/ingest.py``:
   time; a batch whose first point is inside it drops the would-be
   duplicate 'enter'. Tracks absent from a batch keep their state
   rows verbatim.
-- State and emitted events are ``ParquetVersionedIO`` directories:
-  at-least-once replays of a micro-batch overwrite their version
-  instead of double-appending, so the pipeline is idempotent, and
-  the state read IS the "who is inside right now" live view (the
-  include_open analog).
+- State and emitted events are versioned directories written
+  through ``upsert.start_foreach_batch`` (its docstring states the
+  replay and visibility rules); the newest state version IS the
+  "who is inside right now" live view (the include_open analog).
 
 Ordering contract: batches must arrive in event-time order per
 track (the ingest_dedup/replay contract — the Kafka per-key-ordered
@@ -39,13 +38,15 @@ none of it is per-row Python."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.operators.geofence import geofence_events
+from geomesa_spark.sources.tableio import ParquetVersionedIO
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
-__all__ = ["geofence_stream", "read_fence_events", "read_inside_now"]
+__all__ = ["geofence_stream"]
 
 
 def _stitch(
@@ -120,21 +121,17 @@ def geofence_stream(
     bits: int = 8,
     available_now: bool = True,
     processing_time: str | None = None,
-    io=None,
-    events_io=None,
 ):
     """Run the continuous geofence pipeline; returns the
     StreamingQuery. `stream` must carry track/ts/lon/lat (+ cell —
     derive with cells.z2_cell if absent). Transition events land as
-    versioned parquet under `events_dir` (``read_fence_events``);
-    the inside-right-now live view is ``read_inside_now``."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
+    versioned parquet under `events_dir`
+    (``tableio.read_all_versions``); the inside-right-now live view,
+    (track, fence_id, last_ts) rows, is
+    ``tableio.read_newest_version`` of `state_dir`."""
     spark = stream.sparkSession
-    if io is None:
-        io = ParquetVersionedIO(spark, state_dir)
-    if events_io is None:
-        events_io = ParquetVersionedIO(spark, events_dir)
+    io = ParquetVersionedIO(spark, state_dir)
+    events_io = ParquetVersionedIO(spark, events_dir)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         state = io.read_latest(before=batch_id)
@@ -154,38 +151,6 @@ def geofence_stream(
         finally:
             local.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream, step, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_fence_events(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Union of every committed event version (each transition is
-    emitted in exactly one micro-batch)."""
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, events_dir)
-    frames = [io.read_version(v) for v in io.versions()]
-    if not frames:
-        raise ValueError(f"no committed event versions under {events_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def read_inside_now(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The live view: (track, fence_id, last_ts) pairs currently
-    inside — the include_open analog, queryable mid-stream."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    state = ParquetVersionedIO(spark, state_dir).read_latest()
-    if state is None:
-        raise ValueError(f"no committed state under {state_dir}")
-    return state

@@ -5,9 +5,9 @@ The streaming twin of ``operators/hotspot.hotspot_cells_st`` and the
 monitoring composition the reference's live layer implies (the live
 Kafka quadtree keeps a poll-and-diff snapshot,
 ``LiveKafkaConsumerFeatureSource.scala:136-191``; here the engine
-maintains the STATISTIC continuously and emits the diff).  Same
-foreachBatch + versioned-snapshot architecture as
-``streaming/geofence.py`` / ``streaming/stops.py``:
+maintains the STATISTIC continuously and emits the diff).  Runs
+through ``upsert.start_foreach_batch`` (its docstring states the
+versioned-state pattern):
 
 - WITHIN a micro-batch, points bin to (x, y, tb) deltas — one
   partial-aggregated groupBy bounded by the batch.
@@ -25,13 +25,11 @@ foreachBatch + versioned-snapshot architecture as
   threshold — the alert marks the first OBSERVED crossing, which is
   what a monitor means by "alert").
 
-State and outputs are ``ParquetVersionedIO`` directories: at-least-
-once replays overwrite their version instead of double-counting, so
-the pipeline is idempotent, and ``read_hot_now`` serves the current
-Gi* surface as a queryable live view.  For an in-order stream the
-final accumulated bins equal the batch operator's binning, so
-``read_hot_now`` == ``hotspot_cells_st`` over all points
-(parity-tested exactly — same integers, same shared z SQL)."""
+``read_hot_now`` serves the current Gi* surface as a queryable live
+view.  For an in-order stream the final accumulated bins equal the
+batch operator's binning, so ``read_hot_now`` == ``hotspot_cells_st``
+over all points (parity-tested exactly — same integers, same shared
+z SQL)."""
 
 from __future__ import annotations
 
@@ -40,8 +38,13 @@ from pyspark.sql import functions as F
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.operators.hotspot import hotspot_st_from_bins
+from geomesa_spark.sources.tableio import (
+    ParquetVersionedIO,
+    read_newest_version,
+)
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
-__all__ = ["hotspot_stream", "read_hot_now", "read_hot_alerts"]
+__all__ = ["hotspot_stream", "read_hot_now"]
 
 _BIN_COLS = ["x", "y", "tb", "w"]
 
@@ -97,11 +100,9 @@ def hotspot_stream(
 ):
     """Run the continuous hot-spot monitor; returns the
     StreamingQuery.  Alerts (one row per (x, y, tb) bin, in the batch
-    its Gi* first reaches `hot_z`) land under `alerts_dir`; the
-    accumulated bins and the ever-hot set are the state under
-    `state_dir`."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
+    its Gi* first reaches `hot_z`) land under `alerts_dir`
+    (``tableio.read_all_versions``); the accumulated bins and the
+    ever-hot set are the state under `state_dir`."""
     spark = stream.sparkSession
     bins_io = ParquetVersionedIO(spark, f"{state_dir}/bins")
     hot_io = ParquetVersionedIO(spark, f"{state_dir}/hot")
@@ -150,16 +151,9 @@ def hotspot_stream(
             ever_hot = prev_hot.select("x", "y", "tb").unionByName(ever_hot)
         hot_io.write_version(ever_hot, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream, step, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def read_hot_now(
@@ -172,21 +166,5 @@ def read_hot_now(
     """Live view: the current Gi* surface over the accumulated bins —
     equals ``hotspot_cells_st`` over every point seen so far (the
     batch twin) for an in-order stream."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    bins = ParquetVersionedIO(spark, f"{state_dir}/bins").read_latest()
-    if bins is None:
-        raise ValueError(f"no committed bin state under {state_dir}")
+    bins = read_newest_version(spark, f"{state_dir}/bins")
     return hotspot_st_from_bins(bins, bits, ring=ring, time_ring=time_ring)
-
-
-def read_hot_alerts(spark: SparkSession, alerts_dir: str) -> DataFrame:
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, alerts_dir)
-    frames = [io.read_version(v) for v in io.versions()]
-    if not frames:
-        raise ValueError(f"no committed alert versions under {alerts_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)

@@ -27,18 +27,20 @@ snapshot architecture to first-wins admission:
   trade every watermarked dedup makes; size the horizon to the
   feed's real re-delivery window.
 
-Both the accepted-record output and the seen state are versioned
-parquet directories (`sources.tableio.ParquetVersionedIO`): an
-at-least-once replay of batch N overwrites `v=N` instead of
-double-appending, so the pipeline is idempotent end-to-end. At
-warehouse scale, compact accepted versions periodically (they are
-disjoint row sets, a pure file move).
+The accepted records and the seen state are versioned directories
+written through `upsert.start_foreach_batch`, whose docstring states
+the replay and visibility rules. At warehouse scale, compact the
+accepted versions periodically (`tableio.compact_versions`: they are
+disjoint row sets).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geomesa_spark.sources.tableio import ParquetVersionedIO
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
 
 def dedup_batch(
@@ -90,25 +92,19 @@ def ingest_dedup_stream(
     ttl_sec: float | None = None,
     available_now: bool = True,
     processing_time: str | None = None,
-    io=None,
-    accepted_io=None,
 ):
     """Run the streaming admission pipeline; returns the
     StreamingQuery. `stream` is any streaming DataFrame carrying the
     fingerprint/order columns. Accepted records land in versioned
-    parquet under `accepted_dir` (read them with `read_accepted`);
-    the seen-fingerprint state lives under `state_dir`. `ts_col`
-    (default: first of `order_cols`) is the event-time column the
-    `ttl_sec` horizon is measured on — it must be numeric
-    (epoch seconds) or castable to double."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
+    parquet under `accepted_dir` (read them with
+    `tableio.read_all_versions`); the seen-fingerprint state lives
+    under `state_dir`. `ts_col` (default: first of `order_cols`) is
+    the event-time column the `ttl_sec` horizon is measured on — it
+    must be numeric (epoch seconds) or castable to double."""
     spark = stream.sparkSession
     ts_col = ts_col or order_cols[0]
-    if io is None:
-        io = ParquetVersionedIO(spark, state_dir)
-    if accepted_io is None:
-        accepted_io = ParquetVersionedIO(spark, accepted_dir)
+    io = ParquetVersionedIO(spark, state_dir)
+    accepted_io = ParquetVersionedIO(spark, accepted_dir)
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         win = dedup_batch(batch_df, fingerprint_cols, order_cols)
@@ -142,30 +138,6 @@ def ingest_dedup_stream(
         # anti-joined against seen and internally deduped)
         io.write_version(new_seen, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_accepted(spark: SparkSession, accepted_dir: str) -> DataFrame:
-    """Union of every committed accepted-version (disjoint row sets —
-    each fingerprint appears in exactly one version). Readers only see
-    `_SUCCESS`-committed versions, mirroring `upsert.read_state`."""
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, accepted_dir)
-    vs = io.versions()
-    if not vs:
-        raise FileNotFoundError(f"no committed versions under {accepted_dir}")
-    return reduce(
-        lambda a, b: a.unionByName(b), (io.read_version(v) for v in vs)
+    return start_foreach_batch(
+        stream, admit, checkpoint_dir, available_now, processing_time
     )

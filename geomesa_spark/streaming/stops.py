@@ -17,13 +17,13 @@ versioned-snapshot architecture as ``streaming/geofence.py``:
   the carried segment is emitted (if it meets `min_duration_s`) with
   its carried end time.
 - A stop is emitted in exactly one micro-batch, WHEN IT CLOSES; the
-  still-open segments are the live state (``read_dwelling_now``).
+  still-open segments are the live state (the newest state version).
   ``flush_open_stops`` converts the final state to emissions so
   closed + flushed == ``stop_detect`` over the whole stream (the
   parity pytest contract).
-- State and stops are ``ParquetVersionedIO`` directories: replayed
-  micro-batches overwrite their version (idempotent, the
-  ingest/geofence convention).
+- State and stops are versioned directories written through
+  ``upsert.start_foreach_batch`` (its docstring states the replay
+  and visibility rules).
 
 Ordering contract: batches arrive in event-time order per track
 (the per-key-ordered topic shape, same as geofence_stream).  State
@@ -37,9 +37,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators.tracks import _stop_row, _stop_segments
+from geomesa_spark.sources.tableio import (
+    ParquetVersionedIO,
+    read_newest_version,
+)
+from geomesa_spark.streaming.upsert import start_foreach_batch
 
-__all__ = ["stop_stream", "read_stops", "read_dwelling_now",
-           "flush_open_stops"]
+__all__ = ["stop_stream", "flush_open_stops"]
 
 # the track's last point + its open segment's ``_stop_segments``
 # aggregate (lo_pos / hi_neg carry the IDL straddle inputs, so
@@ -151,21 +155,18 @@ def stop_stream(
     tiebreak_col: str | None = None,
     available_now: bool = True,
     processing_time: str | None = None,
-    io=None,
-    stops_io=None,
 ):
     """Run the continuous dwell detector; returns the
     StreamingQuery. Closed stops land as versioned parquet under
-    `stops_dir` (``read_stops``); the dwelling-right-now live view is
-    ``read_dwelling_now``; ``flush_open_stops`` finalizes at stream
-    end (closed + flushed == ``stop_detect``, parity-tested)."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
+    `stops_dir` (``tableio.read_all_versions``); the
+    dwelling-right-now live view — per active track, its open
+    segment (seg_start, seg_n, bbox) and last seen point — is
+    ``tableio.read_newest_version`` of `state_dir`;
+    ``flush_open_stops`` finalizes at stream end (closed + flushed ==
+    ``stop_detect``, parity-tested)."""
     spark = stream.sparkSession
-    if io is None:
-        io = ParquetVersionedIO(spark, state_dir)
-    if stops_io is None:
-        stops_io = ParquetVersionedIO(spark, stops_dir)
+    io = ParquetVersionedIO(spark, state_dir)
+    stops_io = ParquetVersionedIO(spark, stops_dir)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         state = io.read_latest(before=batch_id)
@@ -179,50 +180,18 @@ def stop_stream(
         finally:
             shared.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream, step, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def read_stops(spark: SparkSession, stops_dir: str) -> DataFrame:
-    """Union of every committed stop version (each stop closes in
-    exactly one micro-batch)."""
-    from functools import reduce
-
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    io = ParquetVersionedIO(spark, stops_dir)
-    frames = [io.read_version(v) for v in io.versions()]
-    if not frames:
-        raise ValueError(f"no committed stop versions under {stops_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def read_dwelling_now(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The live view: per active track, its OPEN dwell segment
-    (seg_start, seg_n, bbox) and last seen point."""
-    from geomesa_spark.sources.tableio import ParquetVersionedIO
-
-    state = ParquetVersionedIO(spark, state_dir).read_latest()
-    if state is None:
-        raise ValueError(f"no committed state under {state_dir}")
-    return state
 
 
 def flush_open_stops(
     spark: SparkSession, state_dir: str, min_duration_s: int
 ) -> DataFrame:
     """Finalize the open segments (end-of-stream): the state rows as
-    stop rows, min-duration filtered — union with ``read_stops`` to
-    match ``stop_detect`` exactly."""
-    st = read_dwelling_now(spark, state_dir)
+    stop rows, min-duration filtered — union with the closed stops
+    (``tableio.read_all_versions``) to match ``stop_detect`` exactly."""
+    st = read_newest_version(spark, state_dir)
     return st.select("track", *_stop_row()).filter(
         F.col("duration_s") >= F.lit(int(min_duration_s))
     )

@@ -17,10 +17,10 @@ Spark mapping (SURVEY.md §2.9):
   the key (last-write-wins) + a broadcast of the latest clear mark.
   It is the batch AND the foreachBatch body — same code, parity by
   construction.
-- live state is a versioned parquet directory: foreachBatch writes
-  `v=<batch>` then readers pick max(v). Versioning keeps writes
-  atomic (no read-modify-write of the dir being read) and doubles as
-  the replay/time-travel history (snapshot-as-of analog).
+- live state is a versioned parquet directory written through
+  `start_foreach_batch` (the pattern every streaming pipeline here
+  shares); the version history doubles as the replay/time-travel
+  history (snapshot-as-of analog).
 - TTL = a filter on the retained write timestamp; replay = apply
   over log rows with seq <= the replay point.
 """
@@ -118,16 +118,53 @@ def replay_state(
 # ---------------------------------------------------------------------------
 
 
+def start_foreach_batch(
+    stream: DataFrame,
+    step,
+    checkpoint_dir: str,
+    available_now: bool,
+    processing_time: str | None,
+):
+    """Start `stream` with `step(batch_df, batch_id)` as its
+    foreachBatch body; returns the StreamingQuery. Every streaming
+    pipeline of this package (upsert, ingest dedup, geofence, stops,
+    co-travel, hot-spot, flow) runs through here, and each follows
+    one versioned-state pattern:
+
+    - every output and every piece of carried state is a versioned
+      directory (`sources.tableio.ParquetVersionedIO`): batch N
+      writes `v=N` of each;
+    - step N folds from the newest committed version BEFORE the
+      batch (`read_latest(before=N)`), never from `v=N` itself (the
+      path being overwritten, or what a crashed attempt left), so an
+      at-least-once replay of batch N (foreachBatch's guarantee)
+      recomputes the same versions and overwrites them: idempotent;
+    - a reader sees only versions with `_SUCCESS`, so a torn write
+      from a crashed batch is invisible. Output dirs are read as the
+      union of their versions (`tableio.read_all_versions`), live
+      state as the newest one (`tableio.read_newest_version`).
+
+    `available_now=True` drains the source and stops (batch-replay /
+    catch-up mode); `available_now=False` keeps the query running —
+    the reference's continuous live view — with an optional
+    `processing_time` trigger interval (e.g. "1 second"). The live
+    readers stay queryable mid-run."""
+    writer = (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def read_state(
-    spark: SparkSession,
-    state_dir: str,
-    before_batch: int | None = None,
-    io=None,
+    spark: SparkSession, state_dir: str, io=None
 ) -> DataFrame | None:
-    """Latest committed state version; `before_batch` restricts to
-    versions strictly below that batch id (batch-replay safety: an
-    at-least-once re-run of batch N must fold from N's *predecessor*,
-    not from the version N itself wrote before crashing).
+    """Latest committed state version, or None before the first.
 
     `io` is the same VersionedTableIO seam `upsert_stream` takes —
     default parquet version dirs; pass the matching
@@ -138,7 +175,7 @@ def read_state(
         from geomesa_spark.sources.tableio import ParquetVersionedIO
 
         io = ParquetVersionedIO(spark, state_dir)
-    return io.read_latest(before_batch)
+    return io.read_latest()
 
 
 def upsert_stream(
@@ -153,22 +190,13 @@ def upsert_stream(
     processing_time: str | None = None,
     io=None,
 ):
-    """Materialize a streaming changelog into the versioned state dir.
+    """Materialize a streaming changelog into the versioned state dir
+    (the `start_foreach_batch` pattern); returns the StreamingQuery.
 
     `changelog` is a streaming DataFrame with the op/id/ts/seq
     columns. Each micro-batch folds into the previous state version
-    and writes the next one. foreachBatch is at-least-once, so a
-    replayed batch N folds from the newest committed version < N
-    (never from v=N itself — which would read the path being
-    overwritten, or a torn snapshot) and rewrites v=N: genuinely
-    idempotent. Returns the StreamingQuery.
-
-    `available_now=True` drains the source and stops (batch-replay /
-    catch-up mode); `available_now=False` keeps the query RUNNING —
-    the reference's continuous live view — with an optional
-    `processing_time` trigger interval (e.g. "1 second"). Snapshots
-    stay queryable mid-run via `read_state` (readers only ever see
-    committed `_SUCCESS` versions).
+    with `apply_changelog` and writes the next one; `read_state`
+    serves the snapshot, mid-run too.
 
     `io` is the storage seam (`sources.tableio.VersionedTableIO`
     contract): default `ParquetVersionedIO(spark, state_dir)`; pass
@@ -190,13 +218,6 @@ def upsert_stream(
             new = expire_ttl(new, _t.time(), ttl_sec, ts_col)
         io.write_version(new, batch_id)
 
-    writer = (
-        changelog.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        changelog, fold, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -7,9 +7,8 @@ import numpy as np
 from pyspark.sql import types as T
 
 from geomesa_spark.operators.cooccur import co_travel
-from geomesa_spark.streaming import (
-    cotravel_stream, read_alerts, read_pair_counts,
-)
+from geomesa_spark.sources.tableio import read_all_versions
+from geomesa_spark.streaming import cotravel_stream, read_pair_counts
 
 SCHEMA = T.StructType([
     T.StructField("track", T.StringType()),
@@ -91,8 +90,10 @@ def test_cotravel_stream_parity(spark, tmp_path):
         for r in read_pair_counts(spark, str(tmp_path / "stp")).collect()
     }
     assert live == twin
-    alerts = {(r.track_a, r.track_b)
-              for r in read_alerts(spark, str(tmp_path / "alp")).collect()}
+    alerts = {
+        (r.track_a, r.track_b)
+        for r in read_all_versions(spark, str(tmp_path / "alp")).collect()
+    }
     assert alerts == {k for k, v in twin.items() if v[0] >= MINSH}
     assert len(alerts) >= 4  # the convoys genuinely alert
 
@@ -123,7 +124,7 @@ def test_cotravel_stream_boundary_straddle(spark, tmp_path):
     live = {(r.track_a, r.track_b): r.n_shared
             for r in read_pair_counts(spark, str(tmp_path / "st2")).collect()}
     assert live == {("a", "b"): 2}  # ticks 100 (straddled) and 200
-    alerts = read_alerts(spark, str(tmp_path / "al2")).collect()
+    alerts = read_all_versions(spark, str(tmp_path / "al2")).collect()
     assert len(alerts) == 1 and alerts[0].n_shared == 2
 
 

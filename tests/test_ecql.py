@@ -553,7 +553,7 @@ def test_parse_errors():
 # plan shape: the primary spatial/temporal push down; no Python UDFs
 # ---------------------------------------------------------------------------
 
-def test_pushdown_plan_shape(spark, events, tmp_path):
+def test_pushdown_plan_shape(spark, events, tmp_path, pushed_filters):
     from pyspark.sql import functions as F  # noqa: F401
 
     path = str(tmp_path / "ecql_events")
@@ -568,6 +568,11 @@ def test_pushdown_plan_shape(spark, events, tmp_path):
         out._jdf.queryExecution(), "formatted"
     )
     assert "PushedFilters" in plan and "lon" in plan
+    # the DURING bounds (exclusive) follow the cell ranges, past
+    # character 5,000 of the pushed list
+    pushed = pushed_filters(plan)
+    assert "GreaterThan(dtg,2014-01-05 00:00:00.0)" in pushed
+    assert "LessThan(dtg,2014-01-25 00:00:00.0)" in pushed
     # polygon refine is the JVM even-odd aggregate, not a Python UDF
     assert "pythonUDF" not in plan and "BatchEvalPython" not in plan
 

@@ -8,9 +8,8 @@ import numpy as np
 from pyspark.sql import types as T
 
 from geomesa_spark.operators.tracks import flow_anomaly, flow_field
-from geomesa_spark.streaming import (
-    flow_stream, read_flow_alerts, read_flow_field_now,
-)
+from geomesa_spark.sources.tableio import read_all_versions
+from geomesa_spark.streaming import flow_stream, read_flow_field_now
 
 SCHEMA = T.StructType([
     T.StructField("trk", T.LongType()),
@@ -93,7 +92,7 @@ def test_flow_stream_parity_and_alerts(spark, tmp_path):
     assert got_f == exp_f
 
     # 2. every leg scored exactly once, including batch-boundary legs
-    alerts = read_flow_alerts(spark, str(tmp_path / "al1"))
+    alerts = read_all_versions(spark, str(tmp_path / "al1"))
     from geomesa_spark.sources.tableio import ParquetVersionedIO
 
     # total scored legs across batches == batch twin leg count
@@ -163,11 +162,11 @@ def test_flow_stream_replay_idempotent(spark, tmp_path):
     q.awaitTermination(180)
     a1 = sorted(
         (r.track, r.es, r.batch_id, r.cos_sim)
-        for r in read_flow_alerts(spark, str(tmp_path / "ala")).collect()
+        for r in read_all_versions(spark, str(tmp_path / "ala")).collect()
     )
     a2 = sorted(
         (r.track, r.es, r.batch_id, r.cos_sim)
-        for r in read_flow_alerts(
+        for r in read_all_versions(
             spark, str(tmp_path / "re" / "ala2")).collect()
     )
     assert a1 == a2

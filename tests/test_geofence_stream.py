@@ -9,11 +9,11 @@ from pyspark.sql import types as T
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as G
 from geomesa_spark.operators.geofence import geofence_events
-from geomesa_spark.streaming import (
-    geofence_stream,
-    read_fence_events,
-    read_inside_now,
+from geomesa_spark.sources.tableio import (
+    read_all_versions,
+    read_newest_version,
 )
+from geomesa_spark.streaming import geofence_stream
 
 FENCES = [
     ("box_a", G.box_wkt(0.0, 0.0, 10.0, 10.0)),
@@ -59,7 +59,7 @@ def _run(spark, src, base, suffix):
 def _events(spark, base, suffix):
     return {
         (r.track, r.fence_id, r.event, r.ts)
-        for r in read_fence_events(spark, str(base / f"ev{suffix}")).collect()
+        for r in read_all_versions(spark, str(base / f"ev{suffix}")).collect()
     }
 
 
@@ -103,7 +103,7 @@ def test_stream_matches_batch_twin_and_stitches_boundaries(spark, tmp_path):
     # live view mid-stream: x inside a+b (last point 30), y inside a
     now = {
         (r.track, r.fence_id): r.last_ts
-        for r in read_inside_now(spark, str(tmp_path / "st1")).collect()
+        for r in read_newest_version(spark, str(tmp_path / "st1")).collect()
     }
     assert now == {
         ("x", "box_a"): 30,
@@ -124,7 +124,7 @@ def test_stream_matches_batch_twin_and_stitches_boundaries(spark, tmp_path):
     want = _batch_twin(spark, B1 + B2 + B3)
     assert got3 == want
     # stream fully drained: nobody inside
-    assert read_inside_now(spark, str(tmp_path / "st1")).count() == 0
+    assert read_newest_version(spark, str(tmp_path / "st1")).count() == 0
 
 
 def test_single_batch_equals_batch_twin(spark, tmp_path):

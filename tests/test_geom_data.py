@@ -244,7 +244,7 @@ def test_geom_dwithin_meters(spark, geoms_df):
     assert got == exp
 
 
-def test_geom_scan_temporal_and_sorted_layout(spark, tmp_path):
+def test_geom_scan_temporal_and_sorted_layout(spark, tmp_path, pushed_filters):
     """write_geom_table layout + geom_scan time pruning: exact
     results, bbox predicates visible as pushed filters."""
     from datetime import datetime, timedelta, timezone
@@ -278,6 +278,10 @@ def test_geom_scan_temporal_and_sorted_layout(spark, tmp_path):
     assert got == exp
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "xmin" in plan
+    # the time bounds come after the bbox terms, past character 100
+    pushed = pushed_filters(plan)
+    assert "LessThanOrEqual(ymin,60.005)" in pushed
+    assert "LessThan(dtg,2024-01-25 00:00:00.0)" in pushed
 
     # a lower bound alone still prunes on week (every earlier week
     # is skipped), and the answer stays exact

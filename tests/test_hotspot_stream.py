@@ -7,9 +7,8 @@ import numpy as np
 from pyspark.sql import types as T
 
 from geomesa_spark.operators.hotspot import hotspot_cells_st
-from geomesa_spark.streaming import (
-    hotspot_stream, read_hot_alerts, read_hot_now,
-)
+from geomesa_spark.sources.tableio import read_all_versions
+from geomesa_spark.streaming import hotspot_stream, read_hot_now
 
 SCHEMA = T.StructType([
     T.StructField("es", T.LongType()),
@@ -96,7 +95,7 @@ def test_hotspot_stream_parity_and_alert_once(spark, tmp_path):
     assert live == twin
 
     # each bin alerts at most once across all batches
-    alerts = read_hot_alerts(spark, str(tmp_path / "ala")).collect()
+    alerts = read_all_versions(spark, str(tmp_path / "ala")).collect()
     keys = [(r.x, r.y, r.tb) for r in alerts]
     assert len(keys) == len(set(keys))
     assert len(keys) > 0

@@ -8,10 +8,10 @@ import json
 import pytest
 from pyspark.sql import types as T
 
+from geomesa_spark.sources.tableio import read_all_versions
 from geomesa_spark.streaming import (
     dedup_batch,
     ingest_dedup_stream,
-    read_accepted,
     replay_dedup,
 )
 
@@ -42,7 +42,7 @@ def _run(spark, src, base, suffix, **kw):
     q.awaitTermination(120)
     return {
         r["fp"]: (r["ts"], r["seq"], r["val"])
-        for r in read_accepted(spark, str(base / f"acc{suffix}")).collect()
+        for r in read_all_versions(spark, str(base / f"acc{suffix}")).collect()
     }
 
 
@@ -135,7 +135,7 @@ def test_ttl_horizon_eviction_and_readmission(spark, tmp_path):
         {"fp": "old", "ts": 221.0, "seq": 4, "val": "resent"},
     ])
     _run(spark, src, tmp_path, "t", ttl_sec=60.0)
-    accepted = read_accepted(spark, str(tmp_path / "acct")).collect()
+    accepted = read_all_versions(spark, str(tmp_path / "acct")).collect()
     per_fp = {}
     for r in accepted:
         per_fp.setdefault(r["fp"], []).append(r["val"])

@@ -26,7 +26,7 @@ def stored(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
-def test_week_partition_pruning(spark, stored):
+def test_week_partition_pruning(spark, stored, pushed_filters):
     from datetime import datetime, timezone
 
     spec = QuerySpec(
@@ -39,15 +39,32 @@ def test_week_partition_pruning(spark, stored):
     # a partition filter on the scan, not a post-scan filter
     assert "PartitionFilters" in p
     assert "week" in p.split("PartitionFilters", 1)[1][:400]
+    # the exact dtg bounds reach Parquet too; they follow the Z2 and
+    # Z3 range sets at the end of a ~14,000-character list
+    pushed = pushed_filters(p)
+    assert "GreaterThanOrEqual(dtg,2010-05-02 00:00:00.0)" in pushed
+    assert "LessThan(dtg,2010-05-09 00:00:00.0)" in pushed
 
 
-def test_cell_range_predicates_pushed(spark, stored):
+def test_cell_range_predicates_pushed(spark, stored, pushed_filters):
+    from geomesa_spark.plans import cover as V
+
     spec = QuerySpec(bbox=(-10, -10, 10, 10))
     p = plan_of(scan(stored, spec))
     # stored cell column -> range predicates reach PushedFilters so
     # parquet row-group stats skip (the Z2 range-scan analog)
-    pushed = p.split("PushedFilters", 1)[1][:2000]
+    pushed = pushed_filters(p)
     assert "cell" in pushed and "GreaterThanOrEqual" in pushed
+    # every range of the cover is pushed, the last one included
+    ranges = V.merge_ranges(
+        V.zranges_2d(-10, -10, 10, 10), V.DEFAULT_MAX_RANGES
+    )
+    for lo, hi in ranges:
+        if lo == hi:
+            assert f"EqualTo(cell,{lo})" in pushed
+        else:
+            assert f"GreaterThanOrEqual(cell,{lo})" in pushed
+            assert f"LessThanOrEqual(cell,{hi})" in pushed
 
 
 def test_derived_cell_skips_ranges(spark):

@@ -7,12 +7,11 @@ import numpy as np
 from pyspark.sql import types as T
 
 from geomesa_spark.operators.tracks import stop_detect
-from geomesa_spark.streaming import (
-    flush_open_stops,
-    read_dwelling_now,
-    read_stops,
-    stop_stream,
+from geomesa_spark.sources.tableio import (
+    read_all_versions,
+    read_newest_version,
 )
+from geomesa_spark.streaming import flush_open_stops, stop_stream
 
 SCHEMA = T.StructType([
     T.StructField("track", T.StringType()),
@@ -57,7 +56,7 @@ def _run(spark, src, base, suffix):
 
 
 def _stream_stops(spark, base, suffix, include_open=True):
-    got = read_stops(spark, str(base / f"stops{suffix}")).collect()
+    got = read_all_versions(spark, str(base / f"stops{suffix}")).collect()
     rows = {
         (r.track, r.start_ts, r.end_ts, r.duration_s, r.n_points,
          r.center_lon, r.center_lat)
@@ -143,7 +142,7 @@ def test_stop_stream_boundary_cases(spark, tmp_path):
     # live view: g and j still dwelling (m's open segment is the
     # post-jump single point)
     now = {r.track: (r.seg_start, r.seg_n)
-           for r in read_dwelling_now(
+           for r in read_newest_version(
                spark, str(tmp_path / "stateb")).collect()}
     assert now["g"] == (0, 3) and now["j"] == (0, 2)
     assert now["m"] == (400, 1)
@@ -198,7 +197,7 @@ def test_stop_stream_idl_straddle_parity(spark, tmp_path):
     flushed = flush_open_stops(
         spark, str(tmp_path / "state"), MIN_DUR
     ).collect()
-    closed = read_stops(spark, str(tmp_path / "stops")).collect()
+    closed = read_all_versions(spark, str(tmp_path / "stops")).collect()
     got = sorted(
         (r.track, r.start_ts, r.end_ts, r.duration_s, r.n_points,
          r.center_lon, r.center_lat)

@@ -6,6 +6,8 @@ import pytest
 from geomesa_spark.sources.tableio import (
     ParquetVersionedIO,
     compact_versions,
+    read_all_versions,
+    read_newest_version,
     truncate_history,
 )
 
@@ -84,19 +86,40 @@ def test_compact_discards_torn_staging(spark, tmp_path):
     assert got == {"a": 1, "b": 2}  # torn dir ignored, not resurrected
 
 
-def test_compact_preserves_read_accepted(spark, tmp_path):
-    """End-to-end with the ingest pipeline's reader: compaction must
-    be invisible to read_accepted."""
-    from geomesa_spark.streaming import read_accepted
+def test_shared_readers_torn_empty_and_compact(spark, tmp_path):
+    """`read_all_versions` / `read_newest_version`, the readers every
+    streaming output and live view goes through: a torn `v=N` (no
+    `_SUCCESS`) is invisible to both, an empty or missing root raises
+    ValueError from both, and compaction leaves the union unchanged."""
+    import os
 
     root = str(tmp_path / "acc")
     io = _mk(spark, root, {
         0: [("a", 1)], 1: [("b", 2)], 2: [("c", 3)],
     })
-    before = {(r["fp"], r["val"]) for r in read_accepted(spark, root).collect()}
-    compact_versions(io)
-    after = {(r["fp"], r["val"]) for r in read_accepted(spark, root).collect()}
-    assert before == after
+    # torn newest version: parquet files present, _SUCCESS missing
+    torn = spark.createDataFrame([("z", 9)], "fp string, val long")
+    io.write_version(torn, 5)
+    os.remove(os.path.join(root, "v=5", "_SUCCESS"))
+
+    def union():
+        rows = read_all_versions(spark, root).collect()
+        return {(r["fp"], r["val"]) for r in rows}
+
+    before = union()
+    assert before == {("a", 1), ("b", 2), ("c", 3)}
+    newest = read_newest_version(spark, root).collect()
+    assert {r["fp"] for r in newest} == {"c"}
+
+    assert compact_versions(io) == 2
+    assert io.versions() == [2]
+    assert union() == before
+
+    os.makedirs(tmp_path / "empty")
+    for missing in (str(tmp_path / "empty"), str(tmp_path / "absent")):
+        for reader in (read_all_versions, read_newest_version):
+            with pytest.raises(ValueError):
+                reader(spark, missing)
 
 
 def test_truncate_history(spark, tmp_path):
