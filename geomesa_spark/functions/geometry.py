@@ -292,7 +292,7 @@ def idl_safe_boxes(
 
 # ---------------------------------------------------------------------------
 # geometry-vs-geometry intersects (numpy twin of the JVM
-# operators.geom_data.geom_intersects_col — used by tests/oracles)
+# geometry_sql.geom_intersects_sql — used by tests/oracles)
 # ---------------------------------------------------------------------------
 
 
@@ -547,7 +547,7 @@ def _seg_seg_d2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 def geom_dwithin(a: Geometry, b: Geometry, dist_deg: float) -> bool:
     """distance(A, B) <= dist_deg for any mix of point/line/polygon
-    (numpy twin of operators.geom_data.geom_dwithin_col). Polygon
+    (numpy twin of geometry_sql.geom_dwithin_sql). Polygon
     interiors count: containment of either's vertex in the other is
     distance zero."""
     if geom_intersects(a, b):

@@ -777,7 +777,7 @@ def _box_poly_relate_batch(members, verts, segs, xmin, ymin, xmax, ymax):
 
     Decomposition per box (the geom_intersects convention — vertex
     containment + proper edge crossings), with the box's 4 corners
-    tested member-OR (the contains_geom_col convention):
+    tested member-OR (the contains_geom_sql convention):
       * no corner inside, no polygon vertex in the box, no crossing
         -> disjoint (a polygon containing the box would put all
         corners inside; a box containing the polygon would put
@@ -873,7 +873,7 @@ def s2_polyfill(
     `geom` must be IDL-normalized (G.normalize_idl) — every member
     then has xmin <= xmax, and a cell's seam-wrapping lon arcs are
     tested piecewise.  MULTIPOLYGON members are tested member-OR
-    (the contains_geom_col convention); layers with OVERLAPPING
+    (the contains_geom_sql convention); layers with OVERLAPPING
     members must be pre-dissolved for the downstream flattened-edge
     refine, matching poly_edges_df's documented contract."""
     from geomesa_spark.functions import geometry as G

@@ -27,6 +27,15 @@ involve zero Python.
 
 `edges_sql(wkt)` renders a polygon's edge array as a SQL literal for
 use with st_contains_edges in raw SQL strings.
+
+One text per kernel: the bodies of st_contains_edges,
+st_intersects_edges and st_dwithin_edges, and `edges_sql`, are the
+`geometry_sql` kernel texts the DataFrame refines parse, so the SQL
+surface and the operators cannot drift apart. The geometry-vs-
+geometry bodies inline that text instead of calling
+st_contains_edges: a SQL UDF cannot invoke another SQL UDF from
+inside a lambda body (the analyzer loses the outer lambda variable
+during function inlining).
 """
 
 from __future__ import annotations
@@ -56,11 +65,10 @@ def z2_sql(lon: str, lat: str, bits: int = C.XY_BITS) -> str:
 
 def edges_sql(wkt: str) -> str:
     """SQL literal array<struct<x0,y0,x1,y1>> for a geometry's edges."""
-    parts = [
-        f"named_struct('x0', {x0!r}D, 'y0', {y0!r}D, 'x1', {x1!r}D, 'y1', {y1!r}D)"
-        for x0, y0, x1, y1 in GS.geom_edges(G.parse_wkt(wkt))
-    ]
-    return "array(" + ", ".join(parts) + ")"
+    return GS.edges_sql(G.parse_wkt(wkt))
+
+
+_EDGE_T = GS.EDGE_SCHEMA.simpleString()
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -77,16 +85,9 @@ def register_sql_functions(spark: SparkSession) -> None:
            RETURN (lon-x)*(lon-x) + (lat-y)*(lat-y) <= d*d"""
     )
     spark.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION st_contains_edges(
-             edges ARRAY<STRUCT<x0: DOUBLE, y0: DOUBLE,
-                                x1: DOUBLE, y1: DOUBLE>>,
-             lon DOUBLE, lat DOUBLE) RETURNS BOOLEAN
-           RETURN aggregate(
-             edges, 0,
-             (acc, e) -> acc + CASE WHEN ((e.y0 > lat) != (e.y1 > lat))
-                 AND lon < e.x0 + (lat - e.y0) * (e.x1 - e.x0)
-                                  / (e.y1 - e.y0)
-               THEN 1 ELSE 0 END) % 2 = 1"""
+        f"""CREATE OR REPLACE TEMPORARY FUNCTION st_contains_edges(
+              edges {_EDGE_T}, lon DOUBLE, lat DOUBLE) RETURNS BOOLEAN
+            RETURN {GS.contains_sql("edges", "lon", "lat")}"""
     )
     spark.sql(
         f"""CREATE OR REPLACE TEMPORARY FUNCTION st_z2(
@@ -98,73 +99,18 @@ def register_sql_functions(spark: SparkSession) -> None:
             RETURNS INT
             RETURN CAST(floor(unix_timestamp(ts) / {C.SECONDS_IN_WEEK}) AS INT)"""
     )
-    _register_geom_geom(spark)
-
-
-_EDGE_T = "ARRAY<STRUCT<x0: DOUBLE, y0: DOUBLE, x1: DOUBLE, y1: DOUBLE>>"
-
-
-def _cross_sql(s: str, px: str, py: str) -> str:
-    """Orientation of point (px,py) vs edge-struct variable `s`."""
-    return (f"(({s}.x1-{s}.x0)*({py}-{s}.y0)"
-            f" - ({s}.y1-{s}.y0)*({px}-{s}.x0))")
-
-
-def _ptseg_d2_sql(px: str, py: str, s: str) -> str:
-    """Clamped-projection squared point-to-segment distance."""
-    dx, dy = f"({s}.x1-{s}.x0)", f"({s}.y1-{s}.y0)"
-    ln2 = f"(CASE WHEN {dx}*{dx}+{dy}*{dy} = 0.0 THEN 1.0 ELSE {dx}*{dx}+{dy}*{dy} END)"
-    t = (f"least(1.0, greatest(0.0, (({px}-{s}.x0)*{dx}"
-         f" + ({py}-{s}.y0)*{dy}) / {ln2}))")
-    cx, cy = f"({s}.x0 + {t}*{dx})", f"({s}.y0 + {t}*{dy})"
-    return f"(({px}-{cx})*({px}-{cx}) + ({py}-{cy})*({py}-{cy}))"
-
-
-def _contains_sql(edges: str, px: str, py: str) -> str:
-    """Even-odd containment inlined as SQL (a SQL UDF cannot invoke
-    another SQL UDF from inside a lambda body — the analyzer loses
-    the outer lambda variable during function inlining)."""
-    return (
-        f"(aggregate({edges}, 0, (acc, ce) -> acc + CASE WHEN"
-        f" ((ce.y0 > {py}) != (ce.y1 > {py}))"
-        f" AND {px} < ce.x0 + ({py} - ce.y0)*(ce.x1-ce.x0)/(ce.y1-ce.y0)"
-        f" THEN 1 ELSE 0 END) % 2 = 1)"
-    )
-
-
-def _register_geom_geom(spark: SparkSession) -> None:
-    cross_pair = (
-        f"((({_cross_sql('ae', 'be.x0', 'be.y0')} > 0)"
-        f" != ({_cross_sql('ae', 'be.x1', 'be.y1')} > 0))"
-        f" AND (({_cross_sql('be', 'ae.x0', 'ae.y0')} > 0)"
-        f" != ({_cross_sql('be', 'ae.x1', 'ae.y1')} > 0)))"
-    )
     spark.sql(
         f"""CREATE OR REPLACE TEMPORARY FUNCTION st_intersects_edges(
               a {_EDGE_T}, b {_EDGE_T}, a_poly BOOLEAN, b_poly BOOLEAN)
             RETURNS BOOLEAN
-            RETURN (b_poly AND (
-                      EXISTS(a, e -> {_contains_sql('b', 'e.x0', 'e.y0')})
-                   OR EXISTS(a, e -> {_contains_sql('b', 'e.x1', 'e.y1')})))
-               OR (a_poly AND (
-                      EXISTS(b, e -> {_contains_sql('a', 'e.x0', 'e.y0')})
-                   OR EXISTS(b, e -> {_contains_sql('a', 'e.x1', 'e.y1')})))
-               OR EXISTS(a, ae -> EXISTS(b, be -> {cross_pair}))"""
-    )
-    seg_d2 = (
-        f"(CASE WHEN {cross_pair} THEN 0.0 ELSE least("
-        f"{_ptseg_d2_sql('ae.x0', 'ae.y0', 'be')}, "
-        f"{_ptseg_d2_sql('ae.x1', 'ae.y1', 'be')}, "
-        f"{_ptseg_d2_sql('be.x0', 'be.y0', 'ae')}, "
-        f"{_ptseg_d2_sql('be.x1', 'be.y1', 'ae')}) END)"
+            RETURN {GS.geom_intersects_sql("a", "b", "a_poly", "b_poly")}"""
     )
     spark.sql(
         f"""CREATE OR REPLACE TEMPORARY FUNCTION st_dwithin_edges(
               a {_EDGE_T}, b {_EDGE_T}, d DOUBLE,
               a_poly BOOLEAN, b_poly BOOLEAN)
             RETURNS BOOLEAN
-            RETURN st_intersects_edges(a, b, a_poly, b_poly)
-               OR EXISTS(a, ae -> EXISTS(b, be -> {seg_d2} <= d*d))"""
+            RETURN {GS.geom_dwithin_sql("a", "b", "d", "a_poly", "b_poly")}"""
     )
 
 

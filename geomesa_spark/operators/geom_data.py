@@ -16,9 +16,10 @@ IndexSchema.scala:300-307). The engine's base tables are point rows
 - `geom_cover_cells` — bbox cell cover at a chosen resolution as
   pure column ops (explode of x/y index ranges — the geohash-prefix
   box of the ST index key, no Python, no driver work).
-- `geom_intersects_col` — geometry-vs-geometry `intersects` as one
-  JVM column expression over two edge arrays (nested higher-order
-  functions): any A-vertex in B + any B-vertex in A (when the
+- the refines — geometry-vs-geometry `intersects` / `dwithin` over
+  two edge arrays, the one SQL text of
+  `geometry_sql.geom_intersects_sql` / `geom_dwithin_sql` in one
+  `F.expr`: any A-vertex in B + any B-vertex in A (when the
   respective side has interior) + any proper edge crossing. Exact
   for non-degenerate inputs; collinear-overlap touching is
   tolerance-level, as in the JTS evaluation it mirrors.
@@ -50,6 +51,8 @@ from geomesa_spark.functions import geometry_sql as GS
 from geomesa_spark.plans.planner import time_predicates
 
 POLY_KINDS = ("POLYGON", "MULTIPOLYGON")
+# has-interior flag of a geom_table row, as SQL text
+_POLYGONAL = "kind IN ({})".format(", ".join(f"'{k}'" for k in POLY_KINDS))
 
 
 def geom_table(
@@ -289,7 +292,7 @@ def row_rbits_col(
     if not tight_lines:
         return rb_chain
     _, _, _, _, span_f = _span_at(bits, bits)
-    wide_line = (~is_polygonal_col(F.col("kind"))) & (span_f > 16)
+    wide_line = (~F.expr(_POLYGONAL)) & (span_f > 16)
     est = _line_cells_est(bits)
     s_line = F.least(
         F.lit(bits),
@@ -377,7 +380,7 @@ def geom_cover_cells(
     # cells); short features would just emit near-duplicate cells
     # per edge
     _, _, _, _, span = _span_at(bits, bits)
-    wide_line = (~is_polygonal_col(F.col("kind"))) & (span > 16)
+    wide_line = (~F.expr(_POLYGONAL)) & (span > 16)
     if budget is None:
         # per-edge bbox union: O(edge-span^2) for a single long
         # DIAGONAL edge (the budgeted path below fixes that); tight
@@ -440,58 +443,6 @@ def geom_cover_cells(
         edge_cells = F.flatten(F.transform(F.col("edges"), _walk))
     cells = F.when(wide_line, edge_cells).otherwise(bbox_cells)
     return out.withColumn(out_col, F.explode(cells))
-
-
-def _seg_cross(a, b) -> Column:
-    """Proper crossing of edge structs a and b: endpoints of each lie
-    strictly on opposite sides of the other (orientation signs).
-    Collinear configurations report no crossing (degenerate-touch
-    semantics are tolerance-level, see module docstring)."""
-
-    def cross(sx0, sy0, sx1, sy1, px, py):
-        return (sx1 - sx0) * (py - sy0) - (sy1 - sy0) * (px - sx0)
-
-    d1 = cross(a["x0"], a["y0"], a["x1"], a["y1"], b["x0"], b["y0"])
-    d2 = cross(a["x0"], a["y0"], a["x1"], a["y1"], b["x1"], b["y1"])
-    d3 = cross(b["x0"], b["y0"], b["x1"], b["y1"], a["x0"], a["y0"])
-    d4 = cross(b["x0"], b["y0"], b["x1"], b["y1"], a["x1"], a["y1"])
-    return ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-
-
-def geom_intersects_col(
-    a_edges: Column,
-    b_edges: Column,
-    a_has_interior: Column | bool,
-    b_has_interior: Column | bool,
-) -> Column:
-    """`intersects(A, B)` over two edge arrays, pure JVM.
-
-    A and B intersect iff any A vertex lies inside B (B polygonal),
-    any B vertex lies inside A (A polygonal), or any edge pair
-    properly crosses. Vertex containment is the even-odd
-    `contains_col` aggregate, so holes and multipolygon unions are
-    honored on both sides. Exact away from degenerate (collinear /
-    boundary) configurations — the same tolerance class as the JTS
-    evaluation in the reference's iterators.
-    """
-    a_int = F.lit(a_has_interior) if isinstance(a_has_interior, bool) else a_has_interior
-    b_int = F.lit(b_has_interior) if isinstance(b_has_interior, bool) else b_has_interior
-    a_vertex_in_b = b_int & (
-        F.exists(a_edges, lambda e: GS.contains_col(b_edges, e["x0"], e["y0"]))
-        | F.exists(a_edges, lambda e: GS.contains_col(b_edges, e["x1"], e["y1"]))
-    )
-    b_vertex_in_a = a_int & (
-        F.exists(b_edges, lambda e: GS.contains_col(a_edges, e["x0"], e["y0"]))
-        | F.exists(b_edges, lambda e: GS.contains_col(a_edges, e["x1"], e["y1"]))
-    )
-    crossing = F.exists(
-        a_edges, lambda ae: F.exists(b_edges, lambda be: _seg_cross(ae, be))
-    )
-    return a_vertex_in_b | b_vertex_in_a | crossing
-
-
-def is_polygonal_col(kind_col: Column) -> Column:
-    return kind_col.isin(*POLY_KINDS)
 
 
 def _layer_cover_pdf(
@@ -557,7 +508,7 @@ def geom_join_broadcast(
        non-point duplicate elimination of IndexSchema.scala:300-307,
        done pre-refine so the expensive predicate runs once per
        (gid, poly_id) candidate);
-    2. refine — exact `geom_intersects_col` between the data edge
+    2. refine — exact `GS.geom_intersects_sql` between the data edge
        array and the broadcast polygon edge array.
 
     Returns the geoms columns + `poly_id`.
@@ -581,12 +532,7 @@ def geom_join_broadcast(
     covered = geom_cover_cells(geoms, bits, budget=budget)
     cand = _candidate_pairs(covered, cov_df, id_col)
     refined = cand.join(q_edges, "poly_id").filter(
-        geom_intersects_col(
-            F.col("edges"),
-            F.col("_q_edges"),
-            is_polygonal_col(F.col("kind")),
-            True,
-        )
+        F.expr(GS.geom_intersects_sql("edges", "_q_edges", _POLYGONAL, "true"))
     )
     return refined.drop("_q_edges")
 
@@ -638,14 +584,10 @@ def geom_scan(
         week_col if week_col in gdf.columns else None,
     ):
         out = out.filter(p)
-    return out.filter(
-        geom_intersects_col(
-            F.col("edges"),
-            GS.edges_lit(q),
-            is_polygonal_col(F.col("kind")),
-            q.kind in POLY_KINDS,
-        )
-    )
+    q_interior = "true" if q.kind in POLY_KINDS else "false"
+    return out.filter(F.expr(
+        GS.geom_intersects_sql("edges", GS.edges_sql(q), _POLYGONAL, q_interior)
+    ))
 
 
 def write_geoms_bucketed(
@@ -749,12 +691,7 @@ def geom_join_bucketed(
         .dropDuplicates([id_col, "poly_id"])
         .join(edges, "poly_id")
         .filter(
-            geom_intersects_col(
-                F.col("edges"),
-                F.col("_q_edges"),
-                is_polygonal_col(F.col("kind")),
-                True,
-            )
+            F.expr(GS.geom_intersects_sql("edges", "_q_edges", _POLYGONAL, "true"))
         )
     )
     return refined.drop("_q_edges")
@@ -782,48 +719,6 @@ def write_geom_table(
     ).parquet(path)
 
 
-_pt_seg_d2 = GS.pt_seg_d2_col  # shared clamped-projection kernel
-
-
-def _seg_seg_d2_col(a, b) -> Column:
-    """Squared distance between two edge structs: 0 on proper
-    crossing, else min of the four endpoint-to-other-segment
-    distances (exact for non-degenerate segments)."""
-    d = F.least(
-        _pt_seg_d2(a["x0"], a["y0"], b),
-        _pt_seg_d2(a["x1"], a["y1"], b),
-        _pt_seg_d2(b["x0"], b["y0"], a),
-        _pt_seg_d2(b["x1"], b["y1"], a),
-    )
-    return F.when(_seg_cross(a, b), F.lit(0.0)).otherwise(d)
-
-
-def geom_dwithin_col(
-    a_edges: Column,
-    b_edges: Column,
-    dist_deg: float | Column,
-    a_has_interior: Column | bool,
-    b_has_interior: Column | bool,
-) -> Column:
-    """`distance(A, B) <= dist_deg` over two edge arrays, pure JVM —
-    the dwithin generalization the reference reaches through JTS for
-    non-point geometries (buffer+decompose rewrite
-    FilterHelper.scala:127-145; exact evaluation in the iterators).
-    Intersecting geometries (including interior containment) are
-    distance zero; otherwise the boundary-to-boundary minimum
-    decides. numpy twin: functions.geometry.geom_dwithin."""
-    d = F.lit(dist_deg) if isinstance(dist_deg, (int, float)) else dist_deg
-    d2 = d * d
-    near = F.exists(
-        a_edges,
-        lambda ae: F.exists(b_edges, lambda be: _seg_seg_d2_col(ae, be) <= d2),
-    )
-    return (
-        geom_intersects_col(a_edges, b_edges, a_has_interior, b_has_interior)
-        | near
-    )
-
-
 def geom_dwithin_join(
     geoms: DataFrame,
     polys: list[tuple[str, str]],
@@ -835,7 +730,7 @@ def geom_dwithin_join(
     """Proximity join for non-point data rows: geometries within
     `dist` of any layer polygon. Coarse phase = bbox cell cover of
     the data geometry joined to the layer's cover cells expanded by
-    the distance buffer; exact refine = `geom_dwithin_col`.
+    the distance buffer; exact refine = `GS.geom_dwithin_sql`.
 
     `dist_in_meters=True` applies the reference's meters->degrees
     rewrite per polygon at its bbox-center latitude
@@ -867,7 +762,7 @@ def geom_dwithin_join(
         else:
             dist_deg = dist
         dists.append((pid, float(dist_deg)))
-        # flat expansion, clamped: the refine (geom_dwithin_col)
+        # flat expansion, clamped: the refine (geom_dwithin_sql)
         # measures PLANAR (lon,lat) distance, under which the far
         # side of the dateline is ~360° away — so no IDL wrap is
         # needed for consistency (unlike the haversine point paths)
@@ -895,15 +790,9 @@ def geom_dwithin_join(
     )
     covered = geom_cover_cells(geoms, bits, budget=DATA_CELL_BUDGET)
     cand = _candidate_pairs(covered, cov_df, id_col)
-    refined = cand.join(q_edges, "poly_id").filter(
-        geom_dwithin_col(
-            F.col("edges"),
-            F.col("_q_edges"),
-            F.col("_q_dist"),
-            is_polygonal_col(F.col("kind")),
-            True,
-        )
-    )
+    refined = cand.join(q_edges, "poly_id").filter(F.expr(
+        GS.geom_dwithin_sql("edges", "_q_edges", "_q_dist", _POLYGONAL, "true")
+    ))
     return refined.drop("_q_edges", "_q_dist")
 
 
@@ -1002,12 +891,7 @@ def geom_join_partitioned(
             covered, cov_multi, id_col, cov_bits_col="_cbits"
         )
         refined = cand.join(q_edges, "poly_id").filter(
-            geom_intersects_col(
-                F.col("edges"),
-                F.col("_q_edges"),
-                is_polygonal_col(F.col("kind")),
-                True,
-            )
+            F.expr(GS.geom_intersects_sql("edges", "_q_edges", _POLYGONAL, "true"))
         ).drop("_q_edges")
         out = refined if out is None else out.unionByName(refined)
     if out is None:  # empty polygon layer: empty result, valid schema

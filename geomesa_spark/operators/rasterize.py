@@ -205,9 +205,10 @@ def density_geoms(
             F.explode(F.sequence("j0", "j1")).alias("j"),
         )
     )
-    cx = F.lit(xmin) + (F.col("i") + 0.5) * F.lit(cw)
-    cy = F.lit(ymin) + (F.col("j") + 0.5) * F.lit(ch)
-    poly_px = grid.filter(GS.contains_col(F.col("edges"), cx, cy)).select(
+    half = GS.double_sql(0.5)
+    cx = f"{GS.double_sql(xmin)} + (i + {half}) * {GS.double_sql(cw)}"
+    cy = f"{GS.double_sql(ymin)} + (j + {half}) * {GS.double_sql(ch)}"
+    poly_px = grid.filter(F.expr(GS.contains_sql("edges", cx, cy))).select(
         "key", "weight", "i", "j"
     )
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from geomesa_spark.functions import geometry as G
 from geomesa_spark.functions import geometry_sql as GS
 from geomesa_spark.functions import s2 as S2
+from geomesa_spark.operators.spatial_join import _refine_pip
 
 DEFAULT_LEVEL = 12
 DEFAULT_MAX_CELLS = 4096
@@ -108,9 +109,6 @@ def pip_join_s2(
     joined = pts.join(
         F.broadcast(cov_df), pts["_pcell"] == cov_df["pcell"], "inner"
     ).join(edges, "poly_id")
-    keep = F.col("interior") | GS.contains_col(
-        F.col("edges"), F.col(lon_col), F.col(lat_col)
-    )
-    return joined.filter(keep).drop(
+    return joined.filter(_refine_pip(lon_col, lat_col)).drop(
         "_pcell", "pcell", "plevel", "interior", "edges"
     )

@@ -55,10 +55,8 @@ def _refine_pip(lon_col: str, lat_col: str):
     """Exact PIP refine predicate: interior cells short-circuit (the
     covering-index fast path, IteratorTrigger.scala:66-76); boundary
     cells run the even-odd edge aggregate — all JVM-side, zero
-    Python (GS.contains_col)."""
-    return F.col("interior") | GS.contains_col(
-        F.col("edges"), F.col(lon_col), F.col(lat_col)
-    )
+    Python (GS.contains_sql)."""
+    return F.expr(f"interior OR {GS.contains_sql('edges', lon_col, lat_col)}")
 
 
 def _cover_pdf(polys: list[tuple[str, str]], bits: int, budget: int) -> pd.DataFrame:

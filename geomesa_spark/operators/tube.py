@@ -159,19 +159,13 @@ def tube_select(
         & (es <= F.col("ts2") + F.lit(time_delta_sec))
     )
     # exact point-to-segment distance via the ONE shared kernel
-    # (geometry_sql.pt_seg_d2_col: t-clamped projection, zero-length
+    # (geometry_sql.pt_seg_d2_sql: t-clamped projection, zero-length
     # segments degrade to the point distance) — no Python, and no
     # private copy that could drift from the other segment refines
     from geomesa_spark.functions import geometry_sql as GS
 
-    seg = F.struct(
-        F.col("x1").alias("x0"),
-        F.col("y1").alias("y0"),
-        F.col("x2").alias("x1"),
-        F.col("y2").alias("y1"),
-    )
-    d2 = GS.pt_seg_d2_col(F.col(lon_col), F.col(lat_col), seg)
-    refined = joined.filter(d2 <= F.col("buf") * F.col("buf"))
+    d2 = GS.pt_seg_d2_sql(lon_col, lat_col, "x1", "y1", "x2", "y2")
+    refined = joined.filter(F.expr(f"{d2} <= buf * buf"))
     return refined.drop(
         "_pcell", "pcell", "seg_id", "ts1", "ts2", "x1", "y1", "x2", "y2", "buf"
     ).dropDuplicates([id_col])

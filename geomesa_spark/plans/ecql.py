@@ -738,10 +738,10 @@ def _spatial_col(sp: Spatial, cols: _Cols) -> Column:
                     lon, lat, F.lit(x), F.lit(y)
                 ) <= F.lit(dd * dd)
             else:
-                near = GS.dwithin_col(
-                    GS.edges_lit(g), lon, lat, F.lit(dd),
-                    is_polygon=g.kind in ("POLYGON", "MULTIPOLYGON"),
-                )
+                near = F.expr(GS.dwithin_sql(
+                    GS.edges_sql(g), cols.lon, cols.lat, GS.double_sql(dd),
+                    g.kind in ("POLYGON", "MULTIPOLYGON"),
+                ))
         return ~F.coalesce(near, F.lit(False)) if sp.op == "BEYOND" else near
 
     # binary topological predicates, point-data DE-9IM truths
@@ -749,7 +749,8 @@ def _spatial_col(sp: Spatial, cols: _Cols) -> Column:
         return F.lit(False)
     if sp.op == "TOUCHES":
         # point on the geometry's boundary
-        return GS.min_seg_dist2_col(GS.edges_lit(g), lon, lat) <= F.lit(0.0)
+        d2 = GS.min_seg_dist2_sql(GS.edges_sql(g), cols.lon, cols.lat)
+        return F.expr(f"{d2} <= {GS.double_sql(0.0)}")
     containee_is_attr = (
         sp.op in ("INTERSECTS", "DISJOINT", "EQUALS")
         or (sp.op == "WITHIN" and sp.attr_is_first)
@@ -759,9 +760,9 @@ def _spatial_col(sp: Spatial, cols: _Cols) -> Column:
         # "point contains/covers/equals geometry": true only for an
         # equal point
         if g.kind == "POINT":
-            return point_in_geom_predicate(g, lon, lat)
+            return point_in_geom_predicate(g, cols.lon, cols.lat)
         return F.lit(False)
-    inside = point_in_geom_predicate(g, lon, lat)
+    inside = point_in_geom_predicate(g, cols.lon, cols.lat)
     if sp.op == "DISJOINT":
         return ~F.coalesce(inside, F.lit(False))
     return inside

@@ -214,7 +214,7 @@ def box_predicate(
     return pred
 
 
-def point_in_geom_predicate(geom: G.Geometry, lon: Column, lat: Column) -> Column:
+def point_in_geom_predicate(geom: G.Geometry, lon_col: str, lat_col: str) -> Column:
     """Exact point-intersects-geometry test as a JVM expression.
 
     Polygons: member-OR even-odd (flattened even-odd would cancel
@@ -222,11 +222,12 @@ def point_in_geom_predicate(geom: G.Geometry, lon: Column, lat: Column) -> Colum
     coordinates. Lines and multipoints have no area: the point must
     lie on a segment (minimum squared distance 0)."""
     if geom.kind in ("POLYGON", "MULTIPOLYGON"):
-        return GS.contains_geom_col(geom, lon, lat)
+        return F.expr(GS.contains_geom_sql(geom, lon_col, lat_col))
     if geom.kind == "POINT":
-        x, y = float(geom.rings[0][0, 0]), float(geom.rings[0][0, 1])
-        return (lon == F.lit(x)) & (lat == F.lit(y))
-    return GS.min_seg_dist2_col(GS.edges_lit(geom), lon, lat) <= F.lit(0.0)
+        x, y = (GS.double_sql(v) for v in geom.rings[0][0])
+        return F.expr(f"({lon_col} = {x}) AND ({lat_col} = {y})")
+    d2 = GS.min_seg_dist2_sql(GS.edges_sql(geom), lon_col, lat_col)
+    return F.expr(f"{d2} <= {GS.double_sql(0.0)}")
 
 
 def scan(
@@ -402,7 +403,7 @@ def scan(
     # --- residual exact geometry ---
     if geom is not None:
         out = out.filter(
-            point_in_geom_predicate(geom, F.col(lon_col), F.col(lat_col))
+            point_in_geom_predicate(geom, lon_col, lat_col)
         )
     return out
 

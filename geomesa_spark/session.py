@@ -145,7 +145,25 @@ def reset_plan_stats(df):
 def local_checkpoint(df, eager: bool = True):
     """`df.localCheckpoint(eager)` + `reset_plan_stats` — the
     checkpoint form every iterative self-joining loop must use (see
-    `reset_plan_stats` for why)."""
+    `reset_plan_stats` for why).
+
+    Which form where:
+    - `local_checkpoint` for loop-carried state that a later round
+      joins with itself or with its own earlier rounds: without the
+      stats reset its size estimate doubles in bit-length per round.
+    - raw `.localCheckpoint` at one-shot sites (a frame checkpointed
+      once and read by a few consumers) whose size statistics or
+      output partitioning feed a later join choice — a small
+      checkpointed cover that should still auto-broadcast, or an
+      edge table whose hash partitioning a join reuses. The reset
+      would drop both.
+
+    Loop sites that still use the raw form, and are the next to
+    move (each move changes plan statistics, so each needs its own
+    before/after measurement): `graph.py:158` (rank rounds),
+    `route.py:474-476` (walker steps and their union),
+    `raster.py:1240` (reach doubling), `knn.py:409` (unresolved
+    queries), `bpe.py:150` (merge rounds)."""
     return reset_plan_stats(df.localCheckpoint(eager=eager))
 
 

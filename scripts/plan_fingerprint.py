@@ -11,6 +11,14 @@ and tile layer for ``join_tiles``) and prints one sha256 per plan:
   ``vector_tiles`` op (``tile_cut`` -> ``enforce_winding`` ->
   ``mvt_encode``).
 
+It also prints the plans of the other geometry-kernel users, which
+no perfbench workload reaches:
+
+- ``geom``: ``geom_scan``, ``geom_join_broadcast`` and
+  ``geom_dwithin_join`` over a small seeded line/polygon table;
+- ``ecql``: a ``DWITHIN`` residual against a polygon and a
+  ``TOUCHES`` residual against a line, over the ``query`` table.
+
 Expression ids, object addresses, file paths and the counters in
 lambda variable names are stripped before hashing, so two checkouts
 that build the same plans print the same lines. Rows of driver-built
@@ -35,6 +43,8 @@ import shutil
 import sys
 import tempfile
 
+import numpy as np
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
@@ -53,6 +63,38 @@ def fingerprint(df) -> str:
     for pat, rep in _NOISE:
         plan = pat.sub(rep, plan)
     return hashlib.sha256(plan.encode()).hexdigest()
+
+
+def _ring(rng, n: int, closed: bool) -> str:
+    """`n` seeded vertices around a random centre, as WKT coordinates."""
+    cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    r = rng.uniform(1, 8, n)
+    pts = [(cx + ri * np.cos(a), cy + ri * np.sin(a)) for a, ri in zip(ang, r)]
+    if closed:
+        pts.append(pts[0])
+    return ", ".join(f"{x!r} {y!r}" for x, y in pts)
+
+
+def _geom_plans(spark, seed: int):
+    """(name, DataFrame) for each geom_data refine over a seeded table."""
+    from geomesa_spark.operators import geom_data as GD
+
+    rng = np.random.default_rng(seed)
+    rows = [
+        (f"g{i}", f"POLYGON (({_ring(rng, 5, True)}))" if i % 2
+         else f"LINESTRING ({_ring(rng, 3, False)})")
+        for i in range(60)
+    ]
+    gdf = GD.geom_table(spark.createDataFrame(rows, "gid string, geom_wkt string"))
+    polys = [(f"p{i}", f"POLYGON (({_ring(rng, 6, True)}))") for i in range(4)]
+    return [
+        ("geom_scan", GD.geom_scan(gdf, polys[0][1]).select("gid")),
+        ("geom_join_broadcast",
+         GD.geom_join_broadcast(gdf, polys).select("gid", "poly_id")),
+        ("geom_dwithin_join",
+         GD.geom_dwithin_join(gdf, polys, 2.0).select("gid", "poly_id")),
+    ], polys
 
 
 def main(argv=None) -> int:
@@ -82,6 +124,17 @@ def main(argv=None) -> int:
                     df = ecql.ecql_scan(q.table, query.ecql).select("doc_id")
                     print(f"query seed={seed} round={rnd} kind={query.kind} "
                           f"{fingerprint(df)}", flush=True)
+            geom_plans, polys = _geom_plans(spark, seed)
+            for name, df in geom_plans:
+                print(f"geom seed={seed} op={name} {fingerprint(df)}", flush=True)
+            line = f"LINESTRING ({_ring(np.random.default_rng(seed), 4, False)})"
+            for op, text in [
+                ("dwithin_polygon",
+                 f"DWITHIN(geom, {polys[1][1]}, 50, kilometers)"),
+                ("touches_line", f"TOUCHES(geom, {line})"),
+            ]:
+                df = ecql.ecql_scan(q.table, text).select("doc_id")
+                print(f"ecql seed={seed} op={op} {fingerprint(df)}", flush=True)
             jt = workloads.JoinTiles(spark, seed, os.path.join(work, f"j{seed}"))
             os.makedirs(jt.work)
             jt.setup()

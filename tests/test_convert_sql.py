@@ -124,6 +124,27 @@ def test_sql_functions_match_dataframe_api(spark):
     want_ids = {r.id for r, keep in zip(rows, inside) if keep}
     assert {r.id for r in got} == want_ids
 
+    # holed polygon: points in the hole are outside
+    from tests.test_geom_data import QUERY_POLYS
+
+    holed = QUERY_POLYS[2][1]
+    pts = [(i, 100.0 + i * 1.7, -25.0 + i * 1.55) for i in range(40)]
+    pts += [(40, 130.0, 5.0), (41, 110.0, 5.0)]  # hole, ring
+    hdf = spark.createDataFrame(pts, "id long, lon double, lat double")
+    hdf.createOrReplaceTempView("holed_sql_test")
+    got = spark.sql(
+        "SELECT id FROM holed_sql_test "
+        f"WHERE st_contains_edges({S.edges_sql(holed)}, lon, lat)"
+    ).collect()
+    inside = G.contains(
+        G.parse_wkt(holed),
+        np.array([p[1] for p in pts]),
+        np.array([p[2] for p in pts]),
+    )
+    want_ids = {p[0] for p, keep in zip(pts, inside) if keep}
+    assert 41 in want_ids and 40 not in want_ids
+    assert {r.id for r in got} == want_ids
+
     # z2 parity with the column implementation
     from geomesa_spark.functions import cells as C
 
@@ -134,6 +155,20 @@ def test_sql_functions_match_dataframe_api(spark):
     }
     for r in got:
         assert r.z == want[r.id]
+
+    # week parity with the column implementation; floor semantics
+    # give week -1 before 1970-01-01
+    tdf = spark.createDataFrame(
+        [(0, "1969-12-31 23:00:00"), (1, "1970-01-01 00:00:00"),
+         (2, "1970-01-08 00:00:00"), (3, "2024-02-29 12:34:56")],
+        "id long, s string",
+    ).select("id", F.to_timestamp("s").alias("ts"))
+    tdf.createOrReplaceTempView("weeks_sql_test")
+    got = {r.id: r.w for r in spark.sql(
+        "SELECT id, st_week(ts) AS w FROM weeks_sql_test").collect()}
+    want = {r.id: r.w for r in tdf.select("id", C.week(F.col("ts")).alias("w")).collect()}
+    assert got == want
+    assert got[0] == -1 and got[1] == 0 and got[2] == 1
 
 
 def test_execute_sql_entry(spark):

@@ -39,7 +39,7 @@ def test_edges_lit_bit_exact(spark):
     geom = G.parse_wkt(wkt)
     row = (
         spark.range(1)
-        .select(GS.edges_lit(geom).alias("new"), _per_lit_array(geom).alias("old"))
+        .select(F.expr(GS.edges_sql(geom)).alias("new"), _per_lit_array(geom).alias("old"))
         .first()
     )
     assert len(row.new) == len(row.old) == len(ring)

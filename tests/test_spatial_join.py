@@ -50,6 +50,14 @@ def test_pip_broadcast_matches_oracle(enriched, oracle_pairs):
     assert _result_pairs(out) == oracle_pairs
 
 
+def test_pip_broadcast_coordinate_columns_named_x_y(enriched, oracle_pairs):
+    """The refine's lambda variables never capture a caller column:
+    coordinates named `x` / `y` give the same pairs as `lon` / `lat`."""
+    xy = enriched.withColumnRenamed("lon", "x").withColumnRenamed("lat", "y")
+    out = SJ.pip_join_broadcast(xy, POLYS, bits=10, lon_col="x", lat_col="y")
+    assert _result_pairs(out) == oracle_pairs
+
+
 def test_pip_partitioned_matches_oracle(spark, enriched, oracle_pairs):
     polys_df = spark.createDataFrame(pd.DataFrame(POLYS, columns=["poly_id", "geom_wkt"]))
     out = SJ.pip_join_partitioned(enriched, polys_df, bits=8, budget=4096)
